@@ -24,6 +24,10 @@ object Main {
     val spec = SpecLoader.loadFile(configPath(args))
     val spark = SparkSession.builder()
       .appName("graft-pipeline")
+      // without libhadoop, Hadoop's local filesystem starts a chmod or
+      // readlink process per file create and link-status call; bind the
+      // fork-free one for data files and checkpoint logs alike
+      .config(graft.core.NioLocalFs.sessionConfs)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS",
           (Runtime.getRuntime.availableProcessors min 32).toString))

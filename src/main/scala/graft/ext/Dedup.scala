@@ -536,7 +536,7 @@ object Dedup {
     * One plan, three shuffles that matter: df count, per-doc array rollup
     * (a single exchange shared by the prefix explode and both verify
     * sides), and the candidate distinct. */
-  private def prefixJaccardPairs(shd: DataFrame, minJaccard: Double,
+  private[ext] def prefixJaccardPairs(shd: DataFrame, minJaccard: Double,
       maxDf: Int = Int.MaxValue): DataFrame = {
     val hub = prefixHub(shd, maxDf)
     val st = hubStatsOf(hub)
@@ -566,15 +566,21 @@ object Dedup {
     // compare fewer bytes). Callers that allow df up to Int.MaxValue
     // (jaccardPairs) keep the full 10-digit pad — Spark's lpad TRUNCATES
     // past the pad width, which would silently scramble the rarest-first
-    // order, so the width must always cover the cap. Across-op contract:
-    // both sides' hubs are built with the SAME cap, so prefix keys stay
-    // comparable cross-side.
+    // order, so the width must always cover the cap. The contract is
+    // checked per row inside the same aggregation (no extra job): an
+    // over-cap df fails the query. Unchecked, such a shingle stays in its
+    // docs' sets, which lowers their Jaccard against docs that lack it, so
+    // pairs of the capped universe would be silently missed. Across-op
+    // contract: both sides' hubs are built with the SAME cap, so prefix
+    // keys stay comparable cross-side.
     val pad = math.max(1, java.lang.Integer.toString(maxDf).length)
+    val key = when(col("df") <= maxDf,
+        concat(lpad(col("df").cast(StringType), pad, "0"), col("sh")))
+      .otherwise(raise_error(concat(
+        lit(s"prefixHub: df above maxDf=$maxDf for shingle "), col("sh"))))
     graft.core.Caches.persist(
       shd.groupBy(col("id"))
-        .agg(sort_array(collect_list(
-            concat(lpad(col("df").cast(StringType), pad, "0"), col("sh")))).as("shs"),
-          count(lit(1)).as("n")))
+        .agg(sort_array(collect_list(key)).as("shs"), count(lit(1)).as("n")))
   }
 
   /** One row per (doc, prefix token): the first |X| − ⌈t·|X|⌉ + 1 tokens

@@ -187,8 +187,10 @@ object Relational {
       // single-row-group bench scan it all ran on one core. Keyed
       // repartition keeps ONE exchange (the groupBy reuses the
       // partitioning) and moves the array build after it, parallel. Same
-      // shuffle bytes at any scale (rows ≈ list entries), one agg pass
-      // instead of partial+merge.
+      // shuffle bytes at any scale (rows ≈ list entries). Spark still
+      // plans a partial and a final aggregate; what the repartition
+      // removes is the exchange between them, so both run on the
+      // already-keyed partitions.
       .repartition(col("l_suppkey"))
       .groupBy(col("l_suppkey"))
       .agg(slice(sort_array(collect_list(struct(

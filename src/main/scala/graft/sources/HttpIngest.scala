@@ -31,6 +31,13 @@ import java.util.concurrent.atomic.AtomicLong
   * which is exactly how high-volume HTTP ingest lands in a lake anyway.
   * Requests are served serially (the reference's `incoming_requests` loop
   * is serial too); durability per request is one fsync + one rename.
+  *
+  * The spool write is plain `java.nio` (no Hadoop filesystem), so it starts
+  * no process. The stream that tails the spool does write through Hadoop:
+  * without libhadoop, Hadoop's local filesystem starts a `chmod` process
+  * per created file and a `readlink` process per link-status call, so
+  * [[graft.spec.Compiler.runStream]] binds [[graft.core.NioLocalFs]], which
+  * does both through `java.nio`, for its checkpoint and sink logs.
   */
 final class HttpIngest(address: String, urlPath: String, spoolDir: String) {
 

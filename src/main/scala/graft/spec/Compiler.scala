@@ -556,9 +556,19 @@ object Compiler {
     * from both sides: `maxOffsetsPerTrigger` caps each batch at N records
     * and a progress listener stops the query once cumulative input reaches
     * N — the query consumes at least N and at most one batch past the cap
-    * (listener delivery is async). Batch-granular, documented deviation. */
+    * (listener delivery is async). Batch-granular, documented deviation.
+    *
+    * Every micro-batch writes four log entries (`offsets/N`,
+    * `sources/0/N`, `commits/N` and a file sink's `_spark_metadata/N`)
+    * through `FileContext` create + rename. Without libhadoop, Hadoop's
+    * local filesystem starts a `chmod` process per created file and a
+    * `readlink` process per link-status call, ~32 launches per batch; so
+    * the session's `FileContext` side is bound to [[graft.core.NioLocalFs]]
+    * first, which does both through `java.nio`. `.crc` files are still
+    * written, and are verified when the logs are read back. */
   def runStream(spark: SparkSession, spec: Spec,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    graft.core.NioLocalFs.bindFileContext(spark)
     val query =
       streamSink(pipeline(spec)(streamSource(spark, spec.input)), spec.output)
         .option("checkpointLocation", checkpoint)

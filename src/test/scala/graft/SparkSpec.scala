@@ -11,6 +11,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def sf001 = "/root/testdata/sf0.001"
   def sf01 = "/root/testdata/sf0.01"
 
+  /** `t` and its cause chain, outermost first. */
+  def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
   // operators persist shared hubs via graft.core.Caches; release them per
   // suite so the JVM-wide session doesn't accumulate cache across suites
   override protected def afterAll(): Unit = {

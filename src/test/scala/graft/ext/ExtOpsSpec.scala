@@ -2080,6 +2080,21 @@ class ExtOpsSpec extends SparkSpec {
     assert(doc2.length == 1 && doc2.head.getAs[Long]("n_chunk_tokens") == 3L)
   }
 
+  test("prefixHub fails on a df above its cap instead of missing pairs") {
+    val capped = Seq((1L, "a", 2L), (1L, "b", 2L), (2L, "a", 2L), (2L, "b", 2L))
+      .toDF("id", "sh", "df")
+    def pairs(shd: org.apache.spark.sql.DataFrame) =
+      Dedup.prefixJaccardPairs(shd, 0.8, maxDf = 3).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs(capped) == Seq((1L, 2L)))
+    // "h" is in five docs, above the cap of 3, and the caller did not drop
+    // it: kept, it would lower J(1, 2) to 2/3 and lose the pair silently
+    val overCap = capped.union(
+      Seq(1L, 3L, 4L, 5L, 6L).map(i => (i, "h", 5L)).toDF("id", "sh", "df"))
+    val e = intercept[Exception](pairs(overCap))
+    assert(causes(e).exists(t => String.valueOf(t.getMessage).contains("df above maxDf=3")), e)
+  }
+
   test("nearDupJaccardAcross == cross-side subset of the self-join pairs") {
     // same params as the self-join family; the R-S result over a corpus
     // split must be exactly the self-join pairs that cross the split

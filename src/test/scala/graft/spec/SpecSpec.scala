@@ -496,10 +496,65 @@ class SpecSpec extends SparkSpec {
     // second batch lands after a full stop: the checkpoint must resume
     // without reprocessing a.txt
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in/b.txt"), "cheese,b\n")
+    // checkpoint logs keep their .crc checksums: one flipped byte in the
+    // newest offsets entry fails the restart with a ChecksumException
+    val offsets = java.nio.file.Paths.get(s"$dir/ckpt/offsets")
+    val newest = offsets.resolve(offsets.toFile.list().filter(_.forall(_.isDigit))
+      .maxBy(_.toLong))
+    val entry = java.nio.file.Files.readAllBytes(newest)
+    val flipped = entry.clone()
+    flipped(entry.length / 2) = (flipped(entry.length / 2) ^ 1).toByte
+    java.nio.file.Files.write(newest, flipped)
+    val bad = Compiler.runStream(spark, spec, s"$dir/ckpt")
+    val failure = try intercept[Exception](bad.processAllAvailable()) finally bad.stop()
+    assert(causes(failure).exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]),
+      failure)
+    java.nio.file.Files.write(newest, entry)
     val q2 = Compiler.runStream(spark, spec, s"$dir/ckpt")
     try q2.processAllAvailable() finally q2.stop()
     val out = spark.read.parquet(s"$dir/out").collect().map(_.getString(0)).sorted
     assert(out.toSeq == Seq("a", "b", "bacon", "bacon"))
+  }
+
+  test("runStream starts no chmod or readlink process on the stream execution thread") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-forks").toString
+    Files.createDirectories(Paths.get(s"$dir/in"))
+    (1 to 3).foreach(i => Files.writeString(Paths.get(s"$dir/in/$i.txt"), s"line $i\n"))
+    val spec = SpecLoader.load(
+      s"""input:
+         |  type: text_file
+         |  path: "$dir/in"
+         |  config: {maxFilesPerTrigger: "1"}
+         |pipeline: {processors: [{type: noop}]}
+         |output: {type: parquet, path: "$dir/out"}
+         |""".stripMargin)
+    // (command, launching thread) of every process the JVM starts
+    val launches = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val rec = new jdk.jfr.consumer.RecordingStream()
+    rec.enable("jdk.ProcessStart")
+    rec.onEvent("jdk.ProcessStart", e => launches.add(
+      e.getString("command") -> Option(e.getThread).map(_.getJavaName).getOrElse("")))
+    rec.startAsync()
+    val batches = try {
+      val q = Compiler.runStream(spark, spec, s"$dir/ckpt")
+      try q.processAllAvailable() finally q.stop()
+      // events reach the stream in flushes: wait for a launch of our own,
+      // started after the query thread ended, to know all of its are in
+      new ProcessBuilder("true").start().waitFor()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!launches.asScala.exists(_._1 == "true") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      q.recentProgress.count(_.numInputRows > 0)
+    } finally rec.close()
+    assert(launches.asScala.exists(_._1 == "true"), "the recording saw no process launch")
+    assert(batches == 3)
+    val forks = launches.asScala.toSeq.filter {
+      case (cmd, thread) => thread.startsWith("stream execution thread") &&
+        Set("chmod", "readlink")(cmd.split(" ").head.split("/").last)
+    }
+    assert(forks.size == 0, s"first launches: ${forks.take(3).mkString("; ")}")
   }
 
   test("xml source/sink round-trips through a pipeline (Spark 4 built-in)") {
