@@ -1,6 +1,7 @@
 package graft
 
 import graft.spec.{Compiler, SpecLoader}
+import graft.streaming.Metrics
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the analogue of the reference binary
@@ -8,7 +9,9 @@ import org.apache.spark.sql.SparkSession
   * src/lib.rs:96-117): config path from `-c`/`--config_file`, else the
   * `CONFIG_FILE` env var, else `nekton.yml`; the loaded spec runs
   * continuously for streaming sources (kafka, http_server spool) and
-  * one-shot for batch sources (stdin, text_file).
+  * one-shot for batch sources (stdin, text_file). A streaming run prints
+  * one JSON progress line per non-empty micro-batch to stderr
+  * ([[logProgress]]).
   */
 object Main {
 
@@ -19,6 +22,13 @@ object Main {
     }.orElse(env.get("CONFIG_FILE")).getOrElse("nekton.yml")
 
   private val streamingSources = Set("kafka", "http_server")
+
+  /** Prints one [[graft.streaming.Metrics.progressLine]] per non-empty
+    * micro-batch of any stream on `spark` to `out` (stderr by default). */
+  def logProgress(spark: SparkSession,
+      out: String => Unit = System.err.println): Metrics.ProgressLog =
+    Metrics.attach(spark, onBatch = p =>
+      if (p.numInputRows > 0) out(Metrics.progressLine(p)))
 
   def main(args: Array[String]): Unit = {
     val spec = SpecLoader.loadFile(configPath(args))
@@ -40,6 +50,7 @@ object Main {
       // dir the stream tails; receiver lives for the query's lifetime.
       val receiver = Option.when(spec.input.typ == "http_server")(
         graft.sources.HttpIngest.fromConf(spec.input).start())
+      logProgress(spark)
       try Compiler.runStream(spark, spec, checkpoint).awaitTermination()
       finally receiver.foreach(_.stop())
     } else {

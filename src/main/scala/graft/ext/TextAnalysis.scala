@@ -1502,14 +1502,18 @@ object TextAnalysis {
     * literal (≫10⁴ entries), switch to the explode + broadcast-join
     * shape; the fold is the right plan for curated keyword lists. */
   def keywordScore(docs: DataFrame, weights: Seq[(String, Long)],
-      bias: Long = 0L, textCol: String = "text"): DataFrame = {
+      bias: Long = 0L, textCol: String = "text"): DataFrame =
+    docs.filter(col(textCol).isNotNull)
+      .withColumn("kw_score", keywordScoreCol(weights, bias, textCol))
+      .withColumn("kw_label", (col("kw_score") >= 0).cast(LongType))
+
+  /** The per-row score of [[keywordScore]]; null for null text. */
+  def keywordScoreCol(weights: Seq[(String, Long)], bias: Long = 0L,
+      textCol: String = "text"): Column = {
     require(weights.nonEmpty, "keywordScore needs a weight table")
     val m = map(weights.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    val score = aggregate(split(col(textCol), " ", -1), lit(bias),
+    aggregate(split(col(textCol), " ", -1), lit(bias),
       (acc, t) => acc + coalesce(element_at(m, t), lit(0L)))
-    docs.filter(col(textCol).isNotNull)
-      .withColumn("kw_score", score)
-      .withColumn("kw_label", (col("kw_score") >= 0).cast(LongType))
   }
 
   /** Pairwise DISTRIBUTIONAL divergence between sources — the complement

@@ -35,8 +35,10 @@ object Events {
     // exchange at production volumes).
     val a = graft.core.Tables.spread(e)
       .select(col("user_id"), col("event_id").as("e1"), col("ts").as("ts1"))
+    // Pin the build side: the spread probe side `a` must not become the
+    // broadcast, which would leave the probe on the one-row-group `b`.
     val b = e.select(col("user_id"), col("event_id").as("e2"), col("ts").as("ts2"))
-    a.join(b, Seq("user_id"))
+    a.join(broadcast(b), Seq("user_id"))
       .filter(col("ts2") > col("ts1") && col("ts2") <= col("ts1") + expr("INTERVAL 5 MINUTES"))
       .select(col("user_id"), col("e1"), col("e2"),
         (unix_millis(col("ts2")) - unix_millis(col("ts1"))).as("gap_ms"))

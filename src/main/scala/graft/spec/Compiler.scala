@@ -1,7 +1,7 @@
 package graft.spec
 
 import graft.operators.{PipeOp, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
@@ -50,9 +50,8 @@ object Compiler {
         .withColumn("text", col("redacted")).drop("redacted")
     case "quality_filter" => df => {
       val min = p.config.getOrElse("min_score", "0.5").toDouble
-      val cols = df.columns.toIndexedSeq.map(col)
-      graft.ext.TextAnalysis.qualityScore(df)
-        .filter(col("quality_score") >= min).select(cols: _*)
+      keepRows(graft.ext.TextAnalysis.qualityScore(df),
+        col("quality_score") >= min, df.columns)
     }
     // Gopher-style repetition gate on the codegen'd per-row counters
     // ([[graft.functions.RepetitionCounts]]) — the q58/q75 filter,
@@ -63,18 +62,18 @@ object Compiler {
       val maxBigram = p.config.getOrElse("max_top_bigram_frac", "0.1").toDouble
       val maxUnigram = p.config.getOrElse("max_top_unigram_frac", "1.0").toDouble
       val minTtr = p.config.getOrElse("min_type_token_ratio", "0.0").toDouble
-      val cols = df.columns.toIndexedSeq.map(col)
       val rc = col("__rc")
       def frac(f: String) =
         rc.getField(f).cast("double") / rc.getField("n_tokens").cast("double")
       val topBi = when(rc.getField("n_bigrams") > 0L,
         rc.getField("max_bi").cast("double") /
           rc.getField("n_bigrams").cast("double")).otherwise(lit(0.0))
-      df.withColumn("__rc", graft.functions.RepetitionCounts.of(col("text")))
-        .filter(col("text").isNull ||
+      keepRows(
+        df.withColumn("__rc", graft.functions.RepetitionCounts.of(col("text"))),
+        col("text").isNull ||
           (topBi <= maxBigram && frac("max_uni") <= maxUnigram &&
-            frac("n_types") >= minTtr))
-        .select(cols: _*)
+            frac("n_types") >= minTtr),
+        df.columns)
     }
     // C4-style line+doc heuristic filter ([[TextAnalysis.c4Filter]]) as
     // an ingest stage: surviving docs carry their line-filtered text
@@ -85,11 +84,8 @@ object Compiler {
     case "c4_filter" => df => {
       val minWords = p.config.getOrElse("min_words_per_line", "5").toInt
       val minLines = p.config.getOrElse("min_kept_lines", "3").toInt
-      val cols = df.columns.toIndexedSeq.map(col)
-      graft.ext.TextAnalysis.c4Filter(df, minWords, minLines)
-        .filter(col("keep_doc"))
-        .withColumn("text", col("clean_text"))
-        .select(cols: _*)
+      keepRows(graft.ext.TextAnalysis.c4Filter(df, minWords, minLines)
+        .withColumn("text", col("clean_text")), col("keep_doc"), df.columns)
     }
     case "keyword_filter" => df => {
       val weights = p.config.getOrElse("weights",
@@ -102,9 +98,9 @@ object Compiler {
         }
       val bias = p.config.getOrElse("bias", "0").toLong
       val min = p.config.getOrElse("min_score", "0").toLong
-      val cols = df.columns.toIndexedSeq.map(col)
-      graft.ext.TextAnalysis.keywordScore(df, weights, bias)
-        .filter(col("kw_score") >= min).select(cols: _*)
+      // null text scores null and drops, as keywordScore drops it
+      keepRows(df, graft.ext.TextAnalysis.keywordScoreCol(weights, bias) >= min,
+        df.columns)
     }
     // --- ingest gates (extension set): the stateless map-only flags the
     // batch operators trained, exposed to the YAML surface so the
@@ -219,13 +215,11 @@ object Compiler {
       val missing = feats.filterNot(graft.ext.Learn.TextFeatures.contains)
       require(missing.isEmpty,
         s"linear_gate model uses non-text features: ${missing.mkString(", ")}")
-      val cols = df.columns.toIndexedSeq.map(col)
       val withF = feats.foldLeft(df) { (acc, f) =>
         acc.withColumn(f, graft.ext.Learn.TextFeatures(f))
       }
-      graft.ext.Learn.perceptronScore(withF, model, feats)
-        .filter(col("text").isNull || col("margin") >= minMargin)
-        .select(cols: _*)
+      keepRows(graft.ext.Learn.perceptronScore(withF, model, feats),
+        col("text").isNull || col("margin") >= minMargin, df.columns)
     }
     // embedding-space contamination gate — the semantic dual of
     // `contamination_gate` (modern eval-leak sweeps run BOTH: n-gram
@@ -366,11 +360,30 @@ object Compiler {
     * column; `flag` keeps the audit column for a downstream sink. */
   private def gated(p: ProcConf, flagged: DataFrame, flagCol: String): DataFrame =
     p.config.getOrElse("action", "drop") match {
-      case "drop" => flagged
-        .filter(!coalesce(col(flagCol), lit(false))).drop(flagCol)
+      case "drop" => keepRows(flagged, !coalesce(col(flagCol), lit(false)),
+        flagged.columns.filterNot(_ == flagCol))
       case "flag" => flagged
       case other => sys.error(s"unknown gate action '$other' (drop|flag)")
     }
+
+  /** The rows of `scored` whose `keep` is true, projected to `cols` — the
+    * tail every row-dropping processor shares.
+    *
+    * `keep` is computed once per row, as a projected column wrapped in
+    * [[graft.functions.EvalOnce]], and the filter reads that column. A
+    * plain `filter(keep)` is pushed by `PushPredicateThroughNonJoin`
+    * down through every processor above the scan, with their aliases
+    * inlined, and `FilterExec` has no subexpression elimination: a
+    * repetition filter after `strip_markup → pii_redact →
+    * normalize_text` carried eight copies of that chain, all
+    * code-generated per micro-batch and evaluated per row. Only the
+    * predicate is wrapped, so columns other than the keep column still
+    * prune and collapse as usual. */
+  def keepRows(scored: DataFrame, keep: Column, cols: Array[String]): DataFrame =
+    scored.withColumn(KeepCol, graft.functions.EvalOnce.of(keep))
+      .filter(col(KeepCol)).select(cols.toIndexedSeq.map(col): _*)
+
+  private val KeepCol = "__keep"
 
   /** The full processor chain (lib.rs:87-89: fold over handlers). */
   def pipeline(spec: Spec): DataFrame => DataFrame =

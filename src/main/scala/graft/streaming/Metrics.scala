@@ -22,10 +22,29 @@ object Metrics {
       /** triggerExecution duration — the end-to-end batch time (it already
         * contains the sub-phases; summing the map would double-count). */
       durationMs: Long,
+      /** addBatch duration: the processors and the sink write. */
+      addBatchMs: Long,
       stateRows: Long)
 
-  /** Ring-ish buffer of recent batch progress (bounded at `keep`). */
-  final class ProgressLog(keep: Int = 256) extends StreamingQueryListener {
+  /** One batch as one JSON line, the form `graft.Main` prints to stderr:
+    * `{"event":"batch","query":…,"batch":…,"rows":…,"trigger_ms":…,"add_batch_ms":…}`. */
+  def progressLine(p: BatchProgress): String = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    m.put("event", "batch")
+    m.put("query", p.queryName)
+    m.put("batch", p.batchId)
+    m.put("rows", p.numInputRows)
+    m.put("trigger_ms", p.durationMs)
+    m.put("add_batch_ms", p.addBatchMs)
+    Json.writeValueAsString(m)
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** Ring-ish buffer of recent batch progress (bounded at `keep`);
+    * `onBatch` sees each batch as it is recorded, on the listener bus. */
+  final class ProgressLog(keep: Int = 256,
+      onBatch: BatchProgress => Unit = _ => ()) extends StreamingQueryListener {
     private val buf = new ConcurrentLinkedQueue[BatchProgress]()
 
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
@@ -34,13 +53,17 @@ object Metrics {
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
       val p = e.progress
       val stateRows = p.stateOperators.map(_.numRowsTotal).sum
-      buf.add(BatchProgress(
+      val b = BatchProgress(
         Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
         zeroIfNaN(p.inputRowsPerSecond), zeroIfNaN(p.processedRowsPerSecond),
         Option(p.durationMs.get("triggerExecution")).map(_.longValue)
           .getOrElse(p.durationMs.asScala.values.map(_.longValue)
-            .maxOption.getOrElse(0L)), stateRows))
+            .maxOption.getOrElse(0L)),
+        Option(p.durationMs.get("addBatch")).map(_.longValue).getOrElse(0L),
+        stateRows)
+      buf.add(b)
       while (buf.size() > keep) buf.poll()
+      onBatch(b)
     }
 
     private def zeroIfNaN(d: Double): Double = if (d.isNaN) 0.0 else d
@@ -49,8 +72,9 @@ object Metrics {
   }
 
   /** Attach a fresh ProgressLog to the session's listener bus. */
-  def attach(spark: SparkSession, keep: Int = 256): ProgressLog = {
-    val log = new ProgressLog(keep)
+  def attach(spark: SparkSession, keep: Int = 256,
+      onBatch: BatchProgress => Unit = _ => ()): ProgressLog = {
+    val log = new ProgressLog(keep, onBatch)
     spark.streams.addListener(log)
     log
   }

@@ -128,6 +128,20 @@ class PlanSpec extends SparkSpec {
       s"expected a broadcast dimension join:\n$p")
   }
 
+  test("q21 broadcasts its b side and probes with the spread a side") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val p = Events.q21_event_pairs_within_5min(spark, sf001).queryExecution.executedPlan
+    val joins = new AdaptiveSparkPlanHelper {}.collect(p) {
+      case j: BroadcastHashJoinExec => j
+    }
+    assert(joins.size == 1, s"expected one broadcast hash join:\n$p")
+    assert(joins.head.buildSide == BuildRight &&
+      joins.head.right.output.map(_.name).contains("e2"),
+      s"b (e2, ts2) must be the build side:\n$p")
+  }
+
   test("bm25 probes posting lists without building an index (q79 shape)") {
     val docs = graft.core.Tables.load(spark, sf001, "documents")
     val p = plan(graft.ext.Search.bm25TopK(docs, Seq("dup", "spark"), topK = 20))

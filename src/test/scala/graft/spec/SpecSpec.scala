@@ -615,6 +615,49 @@ class SpecSpec extends SparkSpec {
     assert(log.snapshot.exists(p => p.queryName == "metrics_probe" && p.numInputRows == 3))
   }
 
+  test("graft.Main logs one progress line per non-empty micro-batch") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-progress").toString
+    Files.createDirectories(Paths.get(s"$dir/in"))
+    val spec = SpecLoader.load(
+      s"""input: {type: text_file, path: "$dir/in"}
+         |pipeline:
+         |  processors:
+         |    - type: noop
+         |output: {type: parquet, path: "$dir/out"}
+         |""".stripMargin)
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val log = graft.Main.logProgress(spark, l => lines.add(l))
+    val (id, batches) = try {
+      Files.writeString(Paths.get(s"$dir/in/a.txt"), "a\nb\nc\n")
+      val q = Compiler.runStream(spark, spec, s"$dir/ckpt")
+      try {
+        q.processAllAvailable()
+        Files.writeString(Paths.get(s"$dir/in/b.txt"), "d\ne\n")
+        q.processAllAvailable()
+        (q.id.toString, q.recentProgress.filter(_.numInputRows > 0)
+          .map(p => p.batchId -> p.numInputRows).toSeq)
+      } finally q.stop()
+    } finally {
+      // the listener bus is async: wait for the last line before detaching
+      val deadline = System.currentTimeMillis() + 10000
+      while (lines.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      spark.streams.removeListener(log)
+    }
+    import scala.jdk.CollectionConverters._
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val parsed = lines.asScala.toSeq.map(json.readTree)
+      .filter(_.get("query").asText == id)
+    assert(batches.map(_._2) == Seq(3L, 2L))
+    assert(parsed.map(j => j.get("batch").asLong -> j.get("rows").asLong) == batches,
+      lines.asScala.mkString("\n"))
+    for (j <- parsed) {
+      assert(j.get("event").asText == "batch")
+      assert(j.get("trigger_ms").asLong >= j.get("add_batch_ms").asLong &&
+        j.get("add_batch_ms").asLong > 0, j)
+    }
+  }
+
   test("contamination_gate spec: drops bench-overlapping docs, batch == stream") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
@@ -1328,6 +1371,161 @@ class SpecSpec extends SparkSpec {
     val started = q.start()
     try started.awaitTermination(60000) finally started.stop()
     assert(ids(spark.table("semgate_stream")) == batchOut)
+  }
+
+  // --- row-dropping processors after the text chain ------------------------
+
+  private val textChain =
+    """    - type: strip_markup
+      |    - type: pii_redact
+      |    - type: normalize_text
+      |""".stripMargin
+
+  /** A small corpus as parquet, the three gate indexes the ingest
+    * benchmark builds from it, and a linear model over text features. */
+  private lazy val chainFixture: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain").toString
+    val corpus = (1 to 40).map(i => (i.toLong,
+      (1 to 14).map(t => s"w${i}_$t").mkString(" "))).toDF("doc_id", "text")
+    corpus.write.parquet(s"$dir/docs")
+    graft.ext.Dedup.fpIndexSave(corpus, s"$dir/idx/exact")
+    graft.ext.Dedup.bandIndexSave(corpus, s"$dir/idx/band", n = 5)
+    graft.ext.TextAnalysis.benchGramIndexSave(
+      corpus.filter($"doc_id" % 4 === 0), s"$dir/idx/contamination", n = 8)
+    graft.ext.Learn.linearModelSave(spark,
+      graft.ext.Learn.LinearModel(Array(1L, 2L), -5L), Seq("n_chars", "n_tokens"),
+      s"$dir/model")
+    dir
+  }
+
+  /** The ingest benchmark's processors after the chain, gates on `action`. */
+  private def ingestGates(dir: String, action: String): String =
+    s"""    - type: repetition_filter
+       |      config: {max_top_bigram_frac: "0.3"}
+       |    - type: contamination_gate
+       |      config: {index_path: "$dir/idx/contamination", action: $action}
+       |    - type: exact_dup_gate
+       |      config: {index_path: "$dir/idx/exact", action: $action}
+       |    - type: near_dup_gate
+       |      config: {index_path: "$dir/idx/band", action: $action}
+       |""".stripMargin
+
+  private def specOf(processors: String) = SpecLoader.load(
+    s"""input: {type: stdin}
+       |pipeline:
+       |  processors:
+       |$processors
+       |output: {type: stdout}
+       |""".stripMargin)
+
+  test("row-dropping processors evaluate the upstream text chain once (no chain copy in a Filter)") {
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val dir = chainFixture
+    val docs = spark.read.parquet(s"$dir/docs")
+    def plan(processors: String) =
+      Compiler.pipeline(specOf(processors))(docs).queryExecution.optimizedPlan
+    def regexNodes(processors: String): Int = plan(processors).collect { case n =>
+      n.expressions.map(_.collect { case r: RegExpReplace => r }.size).sum
+    }.sum
+    val dropping = Seq(
+      "quality_filter" -> """{min_score: "0.2"}""",
+      "repetition_filter" -> """{max_top_bigram_frac: "0.3"}""",
+      "c4_filter" -> """{min_kept_lines: "1"}""",
+      "keyword_filter" -> """{weights: "spam:-5,w1_1:2"}""",
+      "linear_gate" -> s"""{model_path: "$dir/model", min_margin: "0"}""",
+      "contamination_gate" -> s"""{index_path: "$dir/idx/contamination"}""",
+      "exact_dup_gate" -> s"""{index_path: "$dir/idx/exact"}""",
+      "near_dup_gate" -> s"""{index_path: "$dir/idx/band"}""")
+    val chainOnly = regexNodes(textChain)
+    assert(chainOnly > 0)
+    for ((typ, config) <- dropping) {
+      val proc = s"""    - type: $typ
+                    |      config: $config
+                    |""".stripMargin
+      // the chain once, plus whatever the processor itself matches
+      assert(regexNodes(textChain + proc) == chainOnly + regexNodes(proc),
+        s"$typ copies the chain:\n${plan(textChain + proc)}")
+      val copied = plan(textChain + proc).collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[RegExpReplace]) => f
+      }
+      assert(copied.isEmpty, s"$typ filters on a chain copy: $copied")
+    }
+  }
+
+  test("the ingest benchmark's processor chain generates under 50k chars of whole-stage source") {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val dir = chainFixture
+    val out = Compiler.pipeline(specOf(textChain + ingestGates(dir, "flag")))(
+      spark.read.parquet(s"$dir/docs"))
+    val chars = out.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.doCodeGen()._2.body.length
+    }.sum
+    assert(chars > 0 && chars < 50000, s"$chars chars of generated source")
+  }
+
+  test("drop gates after the chain: runBatch == runStream, null text passes, all-drop batch") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val fx = chainFixture
+    val dir = Files.createTempDirectory("graft-dropgates").toString
+    Files.createDirectories(Paths.get(s"$dir/in"))
+    def corpusDoc(i: Int) = (1 to 14).map(t => s"w${i}_$t").mkString(" ")
+    val fresh = "<p>Fresh   words</p> about a river, mail me at a@b.com today"
+    val looped = Seq.fill(20)("buy now").mkString(" ")
+    val mixed = Seq(fresh, corpusDoc(3), s"<b>${corpusDoc(8)}</b>", looped,
+      "another fresh line with nothing in common at all")
+    // every row of the second file is an exact corpus copy (exact_dup),
+    // a benchmark document (contamination) or a near-dup: all drop
+    val allDrop = Seq(corpusDoc(12), corpusDoc(5).toUpperCase, corpusDoc(20))
+    val processors = textChain + ingestGates(fx, "drop")
+    def fileSpec(out: String) = SpecLoader.load(
+      s"""input: {type: text_file, path: "$dir/in"}
+         |pipeline:
+         |  processors:
+         |$processors
+         |output: {type: parquet, path: "$out"}
+         |""".stripMargin)
+    def written(path: String) =
+      spark.read.parquet(path).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Files.writeString(Paths.get(s"$dir/in/a.txt"), mixed.mkString("", "\n", "\n"))
+    val q = Compiler.runStream(spark, fileSpec(s"$dir/stream"), s"$dir/ckpt")
+    val stream = try {
+      q.processAllAvailable()
+      Files.writeString(Paths.get(s"$dir/in/b.txt"), allDrop.mkString("", "\n", "\n"))
+      q.processAllAvailable()
+      q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+    } finally q.stop()
+    assert(stream == Seq(mixed.size.toLong, allDrop.size.toLong))
+    Compiler.runBatch(spark, fileSpec(s"$dir/batch"))
+    val kept = written(s"$dir/batch")
+    assert(written(s"$dir/stream") == kept)
+    assert(kept.map(_.split('|').head) == Seq(
+      "another fresh line with nothing in common at all",
+      "fresh words about a river, mail me at <email> today"), kept)
+    // no streaming source yields null text, so the null row runs the same
+    // compiled chain over a memory stream against the batch frame
+    val rows = Seq(Some(fresh), None, Some(corpusDoc(12)), Some(looped))
+    val spec = specOf(processors)
+    val batchOut = Compiler.pipeline(spec)(rows.toDF("text"))
+    assert(batchOut.columns.toSeq == Compiler.pipeline(specOf(textChain))(
+      rows.toDF("text")).columns.toSeq, "drop gates must not change the schema")
+    val batchRows = batchOut.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(batchRows.size == 2 && batchRows.exists(_.startsWith("null|")), batchRows)
+    val ms = MemoryStream[Option[String]]
+    val sq = Compiler.pipeline(spec)(ms.toDF().withColumnRenamed("value", "text"))
+      .writeStream.format("memory").queryName("dropgates_null_stream").start()
+    try {
+      ms.addData(rows: _*)
+      sq.processAllAvailable()
+      ms.addData(allDrop.map(Some(_)): _*)
+      sq.processAllAvailable()
+    } finally sq.stop()
+    assert(spark.table("dropgates_null_stream").collect()
+      .map(_.toSeq.mkString("|")).sorted.toSeq == batchRows)
   }
 
   test("http_server address parsing: defaults, IPv6 brackets, rejects") {
