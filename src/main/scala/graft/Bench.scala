@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}. An untimed warmup
@@ -8,31 +7,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors min 32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // AQE coalescing targets COMPRESSED shuffle bytes; the shingle/array
-      // stages are CPU-bound narrow rows that compress 4-5×, so the byte
-      // target collapses reduce parallelism ~4× below the core count at
-      // bench scale (measured 2× wall-time on q37). Keep AQE (skew joins,
-      // runtime re-plan) but pin reduce parallelism; at production scale
-      // partitions exceed the advisory size and coalescing never bites.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // NOT raised: spark.sql.objectHashAggregate.sortBased.fallbackThreshold.
-      // The collect_list hubs fall back to sort-based aggregation past 128
-      // in-memory groups, but raising the threshold measured zero win at
-      // bench scale, and the fallback is the memory-SAFE behavior when a
-      // production partition holds millions of groups of growing arrays.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val qs0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
+    val qs0 = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     // Recorded warm times from the LAST TWO rounds (BENCH_r{N}.json in the
     // repo root, or SPARK_GRAFT_PREV_BENCH), merged by per-query MIN: the
     // cross-check reference for the sweep-stall guard below. Two rounds, not

@@ -32,17 +32,7 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val spec = SpecLoader.loadFile(configPath(args))
-    val spark = SparkSession.builder()
-      .appName("graft-pipeline")
-      // without libhadoop, Hadoop's local filesystem starts a chmod or
-      // readlink process per file create and link-status call; bind the
-      // fork-free one for data files and checkpoint logs alike
-      .config(graft.core.NioLocalFs.sessionConfs)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS",
-          (Runtime.getRuntime.availableProcessors min 32).toString))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     if (streamingSources(spec.input.typ)) {
       val checkpoint = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR",
         java.nio.file.Files.createTempDirectory("graft-ckpt").toString)

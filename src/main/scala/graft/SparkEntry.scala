@@ -18,6 +18,15 @@ object SparkEntry {
     Relational.queries ++ Events.queries ++ TextPipeline.queries ++
       Corpus.queries ++ Curation.queries ++ Audit.queries ++ Warehouse.queries
 
+  /** The registered queries whose names start with one of the
+    * comma-separated prefixes in `only` (trimmed, blanks ignored), sorted
+    * by name; `None` selects them all. The mains pass `SPARK_GRAFT_ONLY`. */
+  def select(only: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+    queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => prefixes.forall(_.exists(name.startsWith)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] =

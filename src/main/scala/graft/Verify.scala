@@ -55,27 +55,11 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-      .getOrElse((Runtime.getRuntime.availableProcessors min 32).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      // see Bench: byte-targeted AQE coalescing under-parallelizes the
-      // CPU-bound shingle stages at local scale
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_ONLY=q88,q89 limits the dump (unset = all —
     // the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val qs = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+    val qs = SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY"))
     val errs = dump(spark, qs, sfDir, outDir, graft.core.Watchdog.budgetMs())
       .collect { case (n, Some(e)) => n -> e }
     // the errors are ALSO an artifact (stderr scrolls away): one sidecar

@@ -160,10 +160,19 @@ object TextAnalysis {
     // dedup IS the old global distinct), zero shuffles. The earlier
     // declarative rejection of array HOFs stands — the kernel is a
     // single static JVM loop, not a lambda-per-window.
+    winnowFpArrays(docs, k, w, idCol, textCol)(fps => explode(fps).as("fp"))
+
+  /** `(idCol, out(fps))`, `fps` being each non-null document's winnowing
+    * fingerprint array: the one definition behind [[winnowingFingerprints]]
+    * and [[containmentPairs]]. `out` wraps the kernel call itself, since an
+    * `explode` of a projected `fps` column gains inferred `size(fps) > 0`
+    * filters that rerun the kernel twice more per row. */
+  private def winnowFpArrays(docs: DataFrame, k: Int, w: Int, idCol: String,
+      textCol: String)(out: Column => Column): DataFrame =
     graft.core.Tables.spread(docs)
       .filter(col(textCol).isNotNull)  // a null text has no fingerprints
       .select(col(idCol),
-        explode(graft.functions.TextMetrics.winnowFps(col(textCol), k, w)).as("fp"))
+        out(graft.functions.TextMetrics.winnowFps(col(textCol), k, w)))
 
   /** Containment / partial-overlap pairs via shared winnowing fingerprints —
     * the duplicate class set-similarity misses (a small doc quoted inside a
@@ -191,10 +200,7 @@ object TextAnalysis {
     // count; ids with empty arrays gain an nfp=0 row that no pair can join
     // to — output identical (oracle-gated).
     val arr = graft.core.Caches.persist(
-      graft.core.Tables.spread(docs)
-        .filter(col(textCol).isNotNull)
-        .select(col(idCol),
-          graft.functions.TextMetrics.winnowFps(col(textCol), k, w).as("fps")))
+      winnowFpArrays(docs, k, w, idCol, textCol)(_.as("fps")))
     val fps = arr.select(col(idCol), explode(col("fps")).as("fp"))
     val sizes = arr.select(col(idCol), size(col("fps")).as("nfp"))
     val shared = fps.groupBy(col("fp"))

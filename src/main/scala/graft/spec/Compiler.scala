@@ -1,7 +1,7 @@
 package graft.spec
 
 import graft.operators.{PipeOp, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.Row
@@ -394,7 +394,10 @@ object Compiler {
   /** Batch source (tests, CLI one-shot). Streaming sources via
     * [[streamSource]]. */
   def source(spark: SparkSession, conf: SourceConf): DataFrame = conf.typ match {
-    case "stdin" => spark.read.text("/dev/stdin").withColumnRenamed("value", "text")
+    // a pipe reports length 0, so a file scan of /dev/stdin reads no rows;
+    // stdin is the driver's device, so the driver reads it
+    case "stdin" => spark.createDataset(scala.io.Source.fromInputStream(System.in, "UTF-8")
+      .getLines().toVector)(Encoders.STRING).toDF("text")
     case "text_file" => spark.read.text(conf.path.get).withColumnRenamed("value", "text")
     // structured file scans: rows pass through as-is; the text-processor
     // contract applies only if the file provides (or a processor derives)

@@ -79,15 +79,8 @@ object GenData {
       s"--vocab-growth must be in [0, 1], got $vocabGrowth")
     val unknown = tables -- AllTables.toSet
     require(unknown.isEmpty, s"unknown tables: ${unknown.mkString(",")}")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors min 32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.local(cpus)
     write(spark, outDir, times, cpus, salt, tables, dupPermille, vocabGrowth)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `.explain("formatted")` for every SparkEntry query to one file per
@@ -8,8 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   * Env: SPARK_GRAFT_SF_DIR (data), SPARK_GRAFT_PLANS_DIR (output dir),
   * SPARK_GRAFT_PLANS_SUFFIX (`before`/`after`), SPARK_GRAFT_ONLY (qNN csv).
-  * The session config mirrors Bench exactly so the dumped plan is the plan
-  * the bench times (same broadcast threshold, join preference, AQE flags).
+  * It uses [[graft.core.Session]], as Bench does, so the dumped plan is the
+  * plan the bench times (same broadcast threshold, join preference, AQE flags).
   * Plans are captured pre-execution (AdaptiveSparkPlan isFinalPlan=false) —
   * the static shape (Exchange count, join strategy, PushedFilters) is what
   * the round's evidence needs, and capturing it without running keeps the
@@ -20,29 +19,16 @@ object Plans {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r16")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLANS_SUFFIX", "before")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors min 32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     val mode = ExplainMode.fromString("formatted")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (only.forall(_.exists(p => name.startsWith(p)))) {
-        val txt = try fn(spark, sfDir).queryExecution.explainString(mode)
-        catch { case e: Throwable => s"PLAN FAILED: $e" }
-        java.nio.file.Files.write(dir.resolve(s"${name}_$suffix.txt"),
-          txt.getBytes("UTF-8"))
-        System.err.println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
-      }
+    graft.SparkEntry.select(sys.env.get("SPARK_GRAFT_ONLY")).foreach { case (name, fn) =>
+      val txt = try fn(spark, sfDir).queryExecution.explainString(mode)
+      catch { case e: Throwable => s"PLAN FAILED: $e" }
+      java.nio.file.Files.write(dir.resolve(s"${name}_$suffix.txt"),
+        txt.getBytes("UTF-8"))
+      System.err.println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
     }
     spark.stop()
   }

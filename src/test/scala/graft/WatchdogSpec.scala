@@ -55,4 +55,11 @@ class WatchdogSpec extends SparkSpec {
     assert(!new java.io.File(s"$out/q_hung").exists(),
       "a timed-out query must not leave a partial dump")
   }
+
+  test("SparkEntry.select: trimmed prefixes, sorted by name, unset selects all") {
+    val all = SparkEntry.select(None).map(_._1)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.select(Some("q48, q37_ngram ,q01, ")).map(_._1) ==
+      Seq("q01_pricing_summary", "q37_ngram_jaccard_pairs", "q48_word_jaccard_pairs"))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Chained-ingest-gate streaming soak (dev probe, round-16 VERDICT
@@ -14,15 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object GateSoak {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     val sfDir = args.headOption.getOrElse("target/testdata/sf1")
     val out = args.lift(1).getOrElse("/tmp/graft_gate_soak")
 

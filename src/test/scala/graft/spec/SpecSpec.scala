@@ -390,6 +390,17 @@ class SpecSpec extends SparkSpec {
     assert(Main.configPath(Array(), Map.empty) == "nekton.yml")
   }
 
+  test("stdin source reads the driver's standard input line by line") {
+    // a pipe on stdin reports length 0, so a file scan of it read no rows
+    val saved = System.in
+    System.setIn(new java.io.ByteArrayInputStream(
+      "héllo\n\nworld\r\nlast".getBytes("UTF-8")))
+    try {
+      val spec = SpecLoader.load("input: {type: stdin}\noutput: {type: stdout}\n")
+      assert(texts(Compiler.source(spark, spec.input)) == Seq("héllo", "", "world", "last"))
+    } finally System.setIn(saved)
+  }
+
   test("end-to-end CLI batch run: text_file -> replace,split -> parquet") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cli").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.txt"),

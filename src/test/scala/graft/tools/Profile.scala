@@ -3,11 +3,12 @@ package graft.tools
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
-/** Dev-only per-query job breakdown (the Q50Probe precedent, generalized):
-  * runs named SparkEntry queries cold then warm under a listener that records
-  * every job's wall time, task count, and shuffle bytes — the guide-§1
-  * "which job/stage is the time going to" question, answerable per query
-  * without the UI. Usage:
+/** Dev-only per-query job breakdown: runs the SparkEntry queries named by
+  * prefix (as `SPARK_GRAFT_ONLY` selects them) cold then warm under a
+  * listener that records every job's wall time, task count, and shuffle
+  * bytes — the guide-§1 "which job/stage is the time going to" question,
+  * answerable per query without the UI. `SPARK_GRAFT_PROFILE_WALK=1` adds
+  * the executed plan's per-node output rows. Usage:
   *   tools/dev.sh graft.tools.Profile q55,q90 /root/testdata/sf0.1
   */
 object Profile {
@@ -16,18 +17,8 @@ object Profile {
     var start: Long = 0, var execMs: Long = 0, var gcMs: Long = 0)
 
   def main(args: Array[String]): Unit = {
-    val names = args.headOption.getOrElse("q55").split(",").toSet
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local(graft.core.Session.cpus)
     val jobs = mutable.LinkedHashMap.empty[Int, Job]
     val stageToJob = mutable.HashMap.empty[Int, Int]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -52,8 +43,7 @@ object Profile {
           }
         }
     })
-    val qs = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => names.exists(n.startsWith) }
+    val qs = graft.SparkEntry.select(Some(args.headOption.getOrElse("q55")))
     val walkPlans = sys.env.get("SPARK_GRAFT_PROFILE_WALK").contains("1")
     def walk(pl: org.apache.spark.sql.execution.SparkPlan, d: Int): Unit = {
       val rows = pl.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)

@@ -14,7 +14,5 @@ ADDOPENS="$ADDOPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
 ADDOPENS="$ADDOPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
 exec java $ADDOPENS $JAVA_EXTRA \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:target/scala-2.13/test-classes:/opt/spark/jars/*" \
   "$@"

@@ -11,6 +11,5 @@ cd "$(dirname "$0")/.."
 QUERIES="${1:?usage: tools/gate.sh qNN[,qNN...] [sf_dir]}"
 SF="${2:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft-gate.XXXXXX)"
-SPARK_GRAFT_ONLY="$QUERIES" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  tools/dev.sh graft.Verify "$SF" "$OUT" 2>/dev/null
+SPARK_GRAFT_ONLY="$QUERIES" tools/dev.sh graft.Verify "$SF" "$OUT" 2>/dev/null
 python3 tools/check.py "$OUT" "$SF"
