@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Persistence for the ingest gates' 60/64-bit key blocklists — the
   * build-once/serve-many handoff shared by the gate family (the
@@ -35,13 +36,48 @@ object KeySets {
     k.unionByName(meta).write.mode("overwrite").parquet(path)
   }
 
+  /** The schema every (kind, value) dump is written with ([[save]],
+    * [[graft.ext.Dedup.bandIndexSave]]). Reading with it skips Spark's
+    * parquet schema-inference job; a foreign dump without these columns
+    * reads them as null and fails its kind check. */
+  val Schema: StructType = StructType(Seq(
+    StructField("kind", StringType), StructField("value", LongType)))
+
+  /** A (kind, value) dump read with its writers' [[Schema]], plus its
+    * kinds from ONE `groupBy(kind)` aggregate: kind → (min value, max
+    * value). Callers validate kinds, family tags and parameters from the
+    * summary before they touch the keys, so a foreign family's
+    * corpus-scale keys are never pulled onto the driver. A null kind
+    * reads as "null" and a null value as null. */
+  private[graft] def readSummarized(spark: SparkSession, path: String)
+      : (DataFrame, Map[String, (java.lang.Long, java.lang.Long)]) = {
+    val df = spark.read.schema(Schema).parquet(path)
+    val kinds = df.groupBy(col("kind")).agg(min(col("value")), max(col("value")))
+      .collect().map(r => String.valueOf(r.getString(0)) ->
+        ((r.getAs[java.lang.Long](1), r.getAs[java.lang.Long](2)))).toMap
+    (df, kinds)
+  }
+
+  /** The value of each `param:`-style row of a [[readSummarized]]
+    * summary whose kind `name` maps to, refusing a parameter written
+    * with no value or with two different values. */
+  private[graft] def params(path: String,
+      kinds: Map[String, (java.lang.Long, java.lang.Long)],
+      name: String => Option[String]): Map[String, Long] =
+    kinds.flatMap { case (k, (lo, hi)) =>
+      name(k).map { p =>
+        require(lo != null && lo == hi,
+          s"key set at $path has no single value for parameter $p")
+        p -> lo.longValue
+      }
+    }
+
   /** Load a [[save]] dump, validating it was built by `expectKind` →
     * (key frame with single column `value`, build params). */
   def load(spark: SparkSession, path: String,
       expectKind: String): (DataFrame, Map[String, Long]) = {
-    val df = spark.read.parquet(path)
-    val tags = df.select(col("kind")).distinct().collect()
-      .map(_.getString(0)).toSet
+    val (df, summary) = readSummarized(spark, path)
+    val tags = summary.keySet
     val kinds = tags.filterNot(t =>
       t.startsWith("param:") || t.startsWith("family:"))
     // key rows: subset, not equality — an empty blocklist must load as
@@ -72,10 +108,8 @@ object KeySets {
     } else require(families == Set(expectKind),
       s"key set at $path carries family tag ${families.mkString(",")}, " +
         s"not $expectKind — refusing a foreign dump")
-    val params = df.filter(col("kind").startsWith("param:"))
-      .collect().map(r => r.getString(0).stripPrefix("param:") -> r.getLong(1))
-      .toMap
-    (df.filter(col("kind") === expectKind).select(col("value")), params)
+    (df.filter(col("kind") === expectKind).select(col("value")),
+      params(path, summary, k => Option.when(k.startsWith("param:"))(k.stripPrefix("param:"))))
   }
 
   /** [[load]] + collect into the sorted literal the stateless gates

@@ -889,20 +889,6 @@ object Dedup {
     hashed.groupBy(col("id")).agg(mins.head, mins.tail: _*)
   }
 
-  /** One 64-bit key per band: position-salted hash of the band's minima.
-    * THE shared band-key formula of the ingest near-dup gate — the batch
-    * blocklist ([[minhashBandKeys]]) and the per-row stream gate
-    * ([[flagNearDups]]) must hash identically or the gate silently
-    * never fires. */
-  private def bandKeyExprs(mins: Seq[org.apache.spark.sql.Column],
-      rowsPerBand: Int): Seq[org.apache.spark.sql.Column] = {
-    val bands = mins.size / rowsPerBand
-    (0 until bands).map { b =>
-      xxhash64(lit(b) +: (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(mins): _*)
-    }
-  }
-
   /** Corpus band-key blocklist — the BATCH half of the ingest-time
     * near-dup gate (the [[TextAnalysis.hotGramKeys]] pattern lifted from
     * exact grams to MinHash bands): one distinct 64-bit key per
@@ -911,19 +897,23 @@ object Dedup {
     * an LSH candidate pair against it ([[lshCandidates]] semantics), so
     * collecting this set and applying [[flagNearDups]] in-stream flags at
     * ingest precisely the documents the batch LSH pass would candidate.
-    * Size is ≤ bands·|docs| keys (64-bit), minus bucket sharing. */
+    * Size is ≤ bands·|docs| keys (64-bit), minus bucket sharing.
+    *
+    * Build and serve share ONE kernel: each row's keys come from
+    * [[rowBandKeys]] — the serve side's gram hash plus the fused
+    * [[graft.functions.MinHashBands]] fold — so the two halves cannot hash
+    * differently. Map-only up to the final `distinct`. Each row is one
+    * document: rows sharing an id are NOT unioned into one shingle set
+    * (the signature is per row, as at serve). Null text has no shingles
+    * and contributes no key; any non-null text has at least one (a text
+    * shorter than `n` tokens is one gram), so the null filter keeps
+    * exactly the rows with a shingle. */
   def minhashBandKeys(docs: DataFrame, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // same fail-fast as the apply side (flagNearDups): a non-divisible
-    // configuration would silently drop the trailing hashes on the batch
-    // half of the gate and the two halves would band differently
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes=$numHashes must divide into bands of $rowsPerBand")
-    val sig = minhashSignature(wordShingles(docs, n, idCol, textCol), numHashes)
-    val keys = bandKeyExprs((0 until numHashes).map(k => col(s"m$k")), rowsPerBand)
-    sig.select(explode(array(keys: _*)).as("bk")).distinct()
-  }
+      textCol: String = "text"): DataFrame =
+    graft.core.Tables.spread(docs).filter(col(textCol).isNotNull)
+      .select(explode(rowBandKeys(textCol, n, numHashes, rowsPerBand)).as("bk"))
+      .distinct()
 
   /** Stateless ingest-time NEAR-dup gate — the streaming dual of the
     * n-gram near-dup family, completing the ingest front door next to
@@ -932,8 +922,8 @@ object Dedup {
     * collected — like the [[TextAnalysis.maskWithGramSet]] blocklist) and
     * applied per row with pure Column expressions: word-shingle the text
     * with the family's shared gram rule, MinHash with the SAME keyed
-    * xxhash64 family as [[minhashSignature]], band with the same key
-    * formula, and flag when any band key is in the set. Map-only and
+    * xxhash64 family as [[minhashSignature]], band with the same kernel
+    * ([[rowBandKeys]]), and flag when any band key is in the set. Map-only and
     * stateless — no state store, no watermark, no shuffle — so it runs
     * identically on a batch frame or inside any streaming micro-batch.
     *
@@ -960,14 +950,15 @@ object Dedup {
       when(col(textCol).isNotNull, flag))
   }
 
-  /** The per-row band keys every serve-side near-dup face shares —
+  /** The per-row band keys of the near-dup gate — THE one band-key
+    * formula, shared by the batch blocklist ([[minhashBandKeys]]) and
+    * every serve-side face, so the two halves cannot hash differently:
     * gram-hash once (one pass), then the fused
     * [[graft.functions.MinHashBands]] kernel (round-16: the unfused
     * 128-HOF-pass form made the near-dup gate 3.5× the cost of every
     * other ingest gate on the sf1 gate-stack soak — the chain's
-    * bottleneck). Bit-identical keys to the batch blocklist's
-    * [[bandKeyExprs]] aggregate formula (equivalence-tested: gate flag
-    * ⟺ batch LSH candidacy). */
+    * bottleneck). Equivalence-tested: gate flag ⟺ batch LSH candidacy
+    * over [[minhashSignature]]. */
   private def rowBandKeys(textCol: String, n: Int,
       numHashes: Int, rowsPerBand: Int): org.apache.spark.sql.Column = {
     require(numHashes % rowsPerBand == 0,
@@ -979,7 +970,7 @@ object Dedup {
 
   /** The DISTRIBUTED-blocklist form of the ingest near-dup gate — same
     * contract as [[flagNearDups]] (same shingle rule, same keyed hash
-    * family, same [[bandKeyExprs]] formula, same null-text convention,
+    * family, same [[rowBandKeys]] kernel, same null-text convention,
     * equivalence-tested), but the corpus band keys stay a DataFrame
     * ([[minhashBandKeys]] output, uncollected) and membership is a
     * BROADCAST SEMI-JOIN: each document's `bands` keys explode to
@@ -1029,9 +1020,9 @@ object Dedup {
     * the geometry rides WITH the keys. */
   def bandIndexSave(corpus: DataFrame, path: String, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
+      textCol: String = "text"): Unit = {
     import corpus.sparkSession.implicits._
-    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, idCol, textCol)
+    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol)
       .select(lit("band_key").as("kind"), col("bk").as("value"))
     val meta = Seq(("n", n.toLong), ("num_hashes", numHashes.toLong),
       ("rows_per_band", rowsPerBand.toLong)).toDF("kind", "value")
@@ -1040,23 +1031,22 @@ object Dedup {
 
   /** Load a [[bandIndexSave]] index → (band-key DataFrame with column
     * `bk` — [[flagNearDupsAgainst]]'s shape, uncollected — plus the
-    * build geometry (n, numHashes, rowsPerBand)). */
+    * build geometry (n, numHashes, rowsPerBand)). Kinds and parameters
+    * come from one aggregate ([[graft.core.KeySets.readSummarized]]). */
   def bandIndexLoad(spark: org.apache.spark.sql.SparkSession,
       path: String): (DataFrame, Int, Int, Int) = {
-    val df = spark.read.parquet(path)
+    val (df, summary) = graft.core.KeySets.readSummarized(spark, path)
     // kind validation BEFORE any collect (the KeySets discipline): a
     // foreign family's dump must fail fast on its kind tag — the old
     // "everything non-band_key is metadata" read would pull that dump's
     // corpus-scale keys onto the driver before noticing
-    val paramNames = Seq("n", "num_hashes", "rows_per_band")
-    val kinds = df.select(col("kind")).distinct().collect()
-      .map(_.getString(0)).toSet
-    val foreign = kinds -- paramNames.toSet - "band_key"
+    val paramNames = Set("n", "num_hashes", "rows_per_band")
+    val foreign = summary.keySet -- paramNames - "band_key"
     require(foreign.isEmpty,
       s"index at $path is not a bandIndexSave dump (unexpected kinds: " +
         s"${foreign.mkString(",")})")
-    val meta = df.filter(col("kind").isin(paramNames: _*))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val meta = graft.core.KeySets.params(path, summary,
+      k => Option.when(paramNames(k))(k))
     def param(k: String) = meta.getOrElse(k,
       sys.error(s"band index at $path is missing parameter row '$k'")).toInt
     (df.filter(col("kind") === "band_key").select(col("value").as("bk")),
@@ -1094,10 +1084,8 @@ object Dedup {
     * a lost duplicate. */
   def bandBloomIndexSave(corpus: DataFrame, path: String, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4, fpp: Double = 0.01,
-      idCol: String = "doc_id", textCol: String = "text"): Unit = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes=$numHashes must divide into bands of $rowsPerBand")
-    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, idCol, textCol)
+      textCol: String = "text"): Unit = {
+    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol)
     val (nItems, numBits, blob) =
       buildBloomBlob(keys, "bk", fpp / (numHashes / rowsPerBand))
     import corpus.sparkSession.implicits._
@@ -1124,7 +1112,7 @@ object Dedup {
 
   /** [[flagNearDups]] against a Bloom blob instead of a sorted literal:
     * the same shared gram rule, keyed MinHash family, and
-    * [[bandKeyExprs]] formula, with membership one `might_contain`
+    * [[rowBandKeys]] kernel, with membership one `might_contain`
     * probe per band. The 32 band probes run through ONE
     * `BloomFilterMightContain` instance (an `exists` over the band-key
     * array) — each instance deserializes its own copy of the blob per

@@ -57,14 +57,22 @@ case class SortedLongSetContains(child: Expression, keys: Array[Long])
 
   // two expressions are equal only on equal SETS, not equal array refs —
   // without this, sameResult/subexpression elimination would compare
-  // Array[Long] by identity
+  // Array[Long] by identity. The content hash is computed once: a
+  // near-dup gate's set holds ~10⁵ keys.
+  private lazy val keysHash = java.util.Arrays.hashCode(keys)
   override def equals(other: Any): Boolean = other match {
-    case SortedLongSetContains(c, k) =>
-      c == child && java.util.Arrays.equals(k, keys)
+    case that: SortedLongSetContains =>
+      that.child == child && that.keysHash == keysHash &&
+        java.util.Arrays.equals(that.keys, keys)
     case _ => false
   }
-  override def hashCode(): Int =
-    31 * child.hashCode() + java.util.Arrays.hashCode(keys)
+  override def hashCode(): Int = 31 * child.hashCode() + keysHash
+
+  // plans print the set as `long[N]#<content hash>`, never by JVM
+  // identity (`[J@…`, different every run) nor by content (the explain
+  // string is built on every micro-batch)
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, s"long[${keys.length}]#${Integer.toHexString(keysHash)}")
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)

@@ -10,14 +10,18 @@ import org.apache.spark.sql.types._
 
 /** Fused MinHash band keys — ONE pass over the hashed-gram array
   * computing all `numHashes` signature minima and folding them into
-  * `numHashes / rowsPerBand` 64-bit band keys (the
-  * [[graft.ext.Dedup]] ingest near-dup gate's per-row kernel).
+  * `numHashes / rowsPerBand` 64-bit band keys: the [[graft.ext.Dedup]]
+  * near-dup gate's one band-key kernel. Build and serve share it — the
+  * batch blocklist `Dedup.minhashBandKeys` explodes it per corpus
+  * document, the ingest gates probe it per row — so the two halves of
+  * the gate cannot hash differently.
   *
   * BIT-IDENTICAL to the unfused column recipe it replaces —
   * `array_min(transform(hs, h => xxhash64(h, lit(k))))` per k, then
-  * `xxhash64(lit(b), mins…)` per band (the formula shared with the
-  * batch blocklist `Dedup.minhashBandKeys`, which stays on aggregate
-  * expressions) — by replaying Spark's own XxHash64 fold: seed 42,
+  * `xxhash64(lit(b), mins…)` per band (and to `numHashes` `min`
+  * aggregates over one row per shingle followed by that band hash, the
+  * reference `GraftProps` checks the blocklist against) — by replaying
+  * Spark's own XxHash64 fold: seed 42,
   * null children skipped, `hashLong` then `hashInt` in child order.
   * The replaced form was 128 `HigherOrderFunction` passes per row,
   * each interpreted per element AND allocating an intermediate array

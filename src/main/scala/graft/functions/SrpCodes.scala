@@ -138,6 +138,16 @@ case class SrpBandCodes(child: Expression, coefsFlat: Array[Double],
     ev.copy(code = body, isNull = FalseLiteral)
   }
 
+  // plans print the coefficients as `double[N]#<content hash>`, never by
+  // JVM identity (`[D@…`, different every run) nor by content; the hash
+  // is computed once and also serves hashCode
+  private lazy val coefsHash = java.util.Arrays.hashCode(coefsFlat)
+  override def hashCode(): Int =
+    (child, coefsHash, planesPerBand, bands, dims).##
+  override protected def stringArgs: Iterator[Any] = Iterator(child,
+    s"double[${coefsFlat.length}]#${Integer.toHexString(coefsHash)}",
+    planesPerBand, bands, dims)
+
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -19,6 +19,13 @@ import java.util.concurrent.atomic.AtomicLong
   * into the pipeline, so a 202 means "will be processed", the same contract
   * a durable queue gives.
   *
+  * A spool has exactly ONE consuming stream: the stream deletes each
+  * spooled body once the micro-batch that read it is committed
+  * (`cleanSource=delete`; Spark commits a batch to its source when it
+  * plans the next one), so the spool holds the bodies of the newest batch
+  * and those not yet read. Never point a second stream, or any reader
+  * that expects the bodies to stay, at the same directory.
+  *
   * Protocol fidelity (sources.rs:50-61): non-POST → 405, wrong URL path →
   * 404, matching the reference's dispatch order (method first). One request
   * body = one message: the spool files are read with `wholetext`, so a

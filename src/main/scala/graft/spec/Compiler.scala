@@ -424,14 +424,19 @@ object Compiler {
     * into `config.spool_dir`, which Spark tails — the sync ack is
     * incompatible with micro-batching (SURVEY.md §7.4#4). `wholetext`
     * keeps one POST body = one message, as the reference's read_to_end
-    * does; `text_file` stays line-oriented. */
+    * does; `text_file` stays line-oriented. The spool belongs to its one
+    * consuming stream, so `cleanSource=delete` removes each body once its
+    * batch is committed (Spark commits a batch to its source when it plans
+    * the next one): without it the spool grows by one file per POST and
+    * every trigger's `latestOffset` lists all of it. `text_file` and
+    * `binary_files` tail user data and never delete it. */
   def streamSource(spark: SparkSession, conf: SourceConf): DataFrame = conf.typ match {
     case "kafka" =>
       kafkaSourceOptions(conf).foldLeft(spark.readStream.format("kafka")) {
         case (r, (k, v)) => r.option(k, v)
       }.load().selectExpr("CAST(value AS STRING) AS text", "headers")
     case "http_server" =>
-      spark.readStream.option("wholetext", "true")
+      spark.readStream.option("wholetext", "true").option("cleanSource", "delete")
         .text(conf.config.getOrElse("spool_dir",
           sys.error("http_server needs config.spool_dir")))
         .withColumnRenamed("value", "text")

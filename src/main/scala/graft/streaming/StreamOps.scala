@@ -128,7 +128,7 @@ object StreamOps {
     * failure/restart policy. */
   def nearDupGateSink(corpus: () => DataFrame, n: Int,
       refreshEvery: Long = 10, numHashes: Int = 128, rowsPerBand: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text",
+      textCol: String = "text",
       refreshWaitMs: Long = Long.MaxValue,
       maxRebuildFailures: Int = 3)(
       emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
@@ -140,7 +140,7 @@ object StreamOps {
     var consecutiveFailures = 0
     def rebuild(e: Long): Unit = {
       val k = graft.ext.Dedup
-        .minhashBandKeys(corpus(), n, numHashes, rowsPerBand, idCol, textCol)
+        .minhashBandKeys(corpus(), n, numHashes, rowsPerBand, textCol)
         .collect().map(_.getLong(0)).toSeq
       lock.synchronized {
         keys = k; builtEpoch = e; building = false

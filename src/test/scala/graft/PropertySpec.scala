@@ -503,4 +503,28 @@ object GraftProps extends Properties("graft") {
       got == expect
     }
 
+  // minhashBandKeys explodes the serve kernel (MinHashBands) per row; the
+  // reference is the formula it replaced, written out: the 128-min
+  // signature over one row per word shingle, then per band the
+  // band-salted xxhash64 of that band's minima
+  private val bandWordGen: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null), 1 -> Gen.const(""),
+    8 -> Gen.chooseNum(1, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("aa", "bb", "cc", "dd", "é", "")).map(_.mkString(" "))))
+
+  property("minhashBandKeys == minhashSignature(wordShingles) + salted band hash") =
+    Prop.forAll(Gen.listOfN(12, bandWordGen),
+        Gen.oneOf((5, 128, 4), (3, 128, 4), (8, 64, 8))) { case (texts, (n, h, r)) =>
+      // duplicate texts under their own ids: one row is one document
+      val df = (texts ++ texts.take(3)).zipWithIndex
+        .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val got = Dedup.minhashBandKeys(df, n, h, r).collect().map(_.getLong(0)).toSet
+      val sig = Dedup.minhashSignature(Dedup.wordShingles(df, n), h)
+      val bands = (0 until h / r).map(b =>
+        xxhash64(lit(b) +: (b * r until (b + 1) * r).map(k => col(s"m$k")): _*))
+      val expect = sig.select(explode(array(bands: _*))).distinct()
+        .collect().map(_.getLong(0)).toSet
+      got == expect
+    }
+
 }

@@ -453,6 +453,20 @@ class ExtOpsSpec extends SparkSpec {
     assert(e.getMessage.contains("family"))
   }
 
+  test("KeySets.loadCollected and bandIndexLoad read in 3 jobs: one kind summary, one key collect") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ks-jobs").toString
+    val corpus = (1L to 20L).map(i => (i, s"w$i a b c d e f")).toDF("doc_id", "text")
+    Dedup.fpIndexSave(corpus, s"$dir/fp")
+    Dedup.bandIndexSave(corpus, s"$dir/band", n = 3)
+    import org.apache.spark.graftbridge.Jobs
+    // no schema-inference job, one aggregate over the kinds (a map and a
+    // result job), one collect of the keys
+    assert(Jobs.count(spark)(
+      graft.core.KeySets.loadCollected(spark, s"$dir/fp", Dedup.ExactDupKind)) == 3)
+    assert(Jobs.count(spark)(Dedup.bandIndexLoad(spark, s"$dir/band")._1.collect()) == 3)
+  }
+
   test("shuffleOrder: dense and bucket paths emit the identical permutation") {
     graft.core.Caches.unpersistAll()
     val docs = Tables.load(spark, sf001, "documents")

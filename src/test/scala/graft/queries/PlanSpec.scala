@@ -220,4 +220,39 @@ class PlanSpec extends SparkSpec {
         s"SinglePartition exchange not over the value histogram in:\n$p")
     }
   }
+
+  // expression ids, lambda-variable suffixes and cached plans' exchange
+  // ids come from JVM-wide counters, so two builds of one plan differ in
+  // them by design
+  private def stable(df: DataFrame): String =
+    df.queryExecution.optimizedPlan.treeString
+      .replaceAll("(?<=\\w)#\\d+", "#_")
+      .replaceAll("\\b([xyz])_\\d+\\b", "$1_")
+      .replaceAll("plan_id=\\d+", "plan_id=_")
+
+  test("plans print embedded arrays by content hash: two builds give one treeString") {
+    // SrpBandCodes (q42) and SortedLongSetContains (q129) once printed
+    // their arrays by JVM identity ([D@…, [J@…), different every build
+    for (q <- Seq[(org.apache.spark.sql.SparkSession, String) => DataFrame](
+        Corpus.q42_ann_lsh_topk, Corpus.q129_contamination_gate)) {
+      val plans = (1 to 2).map { _ =>
+        graft.core.Caches.unpersistAll()
+        stable(q(spark, sf001))
+      }
+      assert(plans(0) == plans(1), s"plans differ:\n${plans(0)}\n----\n${plans(1)}")
+      assert(!plans(0).matches("(?s).*\\[[JD]@.*"), plans(0))
+      assert(plans(0).matches("(?s).*(long|double)\\[\\d+\\]#[0-9a-f]+.*"), plans(0))
+    }
+  }
+
+  test("minhashBandKeys is map-only up to its distinct: no per-hash min aggregate") {
+    import spark.implicits._
+    val corpus = Seq((1L, "a b c d e"), (2L, "a b c d f"), (3L, null.asInstanceOf[String]))
+      .toDF("doc_id", "text")
+    val p = graft.ext.Dedup.minhashBandKeys(corpus, n = 3).queryExecution.optimizedPlan
+    val aggFns = p.flatMap(_.expressions).flatMap(_.collect {
+      case a: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression => a })
+    assert(aggFns.isEmpty, s"aggregate functions in:\n$p")
+    assert(!p.flatMap(_.output).exists(_.name.matches("m\\d+")), s"signature columns in:\n$p")
+  }
 }

@@ -487,6 +487,50 @@ class SpecSpec extends SparkSpec {
     } finally rx.stop()
   }
 
+  test("http_server spool: committed bodies are deleted, the sink holds each once") {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val dir = java.nio.file.Files.createTempDirectory("graft-spool").toString
+    val spool = java.nio.file.Paths.get(s"$dir/spool")
+    val spec = SpecLoader.load(
+      s"""input:
+         |  type: http_server
+         |  address: "127.0.0.1:0"
+         |  path: /post
+         |  config: {spool_dir: "$spool"}
+         |pipeline:
+         |  processors: [{type: noop}]
+         |output: {type: parquet, path: "$dir/out"}
+         |""".stripMargin)
+    val rx = graft.sources.HttpIngest.fromConf(spec.input).start()
+    // spooled bodies in POST order (the receiver's sequence number ends
+    // each name); hidden entries (the receiver's .ingest-tmp) are never read
+    def visible(): Seq[Int] = spool.toFile.list().toSeq
+      .filterNot(f => f.startsWith(".") || f.startsWith("_"))
+      .map(f => f.stripSuffix(".txt").split("-").last.toInt)
+    val bodies = (1 to 9).map(i => s"body $i")
+    try {
+      val client = HttpClient.newHttpClient()
+      def post(b: String): Unit = assert(client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${rx.boundPort}/post"))
+        .POST(HttpRequest.BodyPublishers.ofString(b)).build(),
+        HttpResponse.BodyHandlers.ofString()).statusCode() == 202)
+      val q = Compiler.runStream(spark, spec, s"$dir/ckpt")
+      try {
+        for (round <- bodies.grouped(3)) { round.foreach(post); q.processAllAvailable() }
+        // Spark commits a batch to its source when it plans the next one,
+        // and the cleaner deletes asynchronously after that commit: every
+        // body of the first two rounds goes, and at most the newest
+        // batch's bodies (a subset of the last round) stay
+        val deadline = System.nanoTime() + 30L * 1000000000L
+        while (visible().exists(_ < 6) && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(visible().forall(_ >= 6), s"spool still holds ${visible()}")
+      } finally q.stop()
+      val out = spark.read.parquet(s"$dir/out").collect().map(_.getString(0)).sorted
+      assert(out.toSeq == bodies)
+    } finally rx.stop()
+  }
+
   test("streaming spec e2e: checkpointed file stream across two input batches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
