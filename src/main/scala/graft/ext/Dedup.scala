@@ -442,11 +442,6 @@ object Dedup {
   private def verifyJaccard(cand0: DataFrame, arrsI: DataFrame, arrsJ: DataFrame,
       minJaccard: Double, statsI: HubStats, statsJ: HubStats): DataFrame = {
     val cand = graft.core.Caches.persist(cand0)
-    // scale observability (costs one count job; off by default): the
-    // prefix-candidate volume is the near-dup family's scaling axis —
-    // the df-cap probes compare it across corpus sizes
-    if (sys.env.contains("SPARK_GRAFT_COUNT_CANDIDATES"))
-      System.err.println(s"[graft] Dedup.verifyJaccard candidates=${cand.count()}")
     val conf = cand.sparkSession.conf
     // default min(1 GB, maxHeap/8): the octets-to-hashed-relation blowup
     // is ~3-4×, so this keeps two near-ceiling broadcast sides (plus the
@@ -934,18 +929,22 @@ object Dedup {
     * q78 incremental join — would discard). Null text → null flag (the
     * total-pass convention of the mask ops). Per-row cost is
     * numHashes·|grams| constant-size hashes plus bands·log₂|blocklist|
-    * comparisons ([[graft.functions.ArraySets.sortedLongContains]] —
-    * binary search over a primitive long[], so membership cost is
-    * logarithmic in the blocklist, not linear): right for reference sets
-    * up to ~10⁶ BAND KEYS (≈3·10⁴ docs at 32 bands — a rolling window, a
-    * benchmark suite, yesterday's hot partition), where the bound is the
-    * ~8 MB the collected set adds to every task binary, not compute.
-    * Past that, [[flagNearDupsAgainst]] keeps the keys distributed. */
-  def flagNearDups(docs: DataFrame, bandKeys: Seq[Long], n: Int,
+    * comparisons against a sorted literal
+    * ([[graft.core.KeySets.Members.Sorted]] — binary search over a
+    * primitive long[], so membership cost is logarithmic in the
+    * blocklist, not linear): right for reference sets up to ~10⁶ BAND
+    * KEYS (≈3·10⁴ docs at 32 bands — a rolling window, a benchmark
+    * suite, yesterday's hot partition), where the bound is the ~8 MB the
+    * collected set adds to every task binary, not compute. Past that,
+    * [[flagNearDupsAgainst]] keeps the keys distributed, or a
+    * [[bandBloomIndexSave]] blob serves as `bandKeys`: its 32 band
+    * probes run through one `contains` inside the `exists`, so one blob
+    * copy per task. */
+  def flagNearDups(docs: DataFrame, bandKeys: graft.core.KeySets.Members, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4,
       textCol: String = "text"): DataFrame = {
     val flag = exists(rowBandKeys(textCol, n, numHashes, rowsPerBand),
-      k => graft.functions.ArraySets.sortedLongContains(k, bandKeys))
+      k => bandKeys.contains(k))
     docs.withColumn("near_dup_candidate",
       when(col(textCol).isNotNull, flag))
   }
@@ -1006,52 +1005,27 @@ object Dedup {
       .drop("__graft_nd_hit")
   }
 
-  /** Persist a [[minhashBandKeys]] blocklist as a self-describing
-    * parquet index — the dedup trainer→server handoff
-    * ([[graft.ext.Learn.linearModelSave]] /
-    * [[graft.ext.Similarity.kmeansModelSave]] precedent, here for the
-    * near-dup gate): build the index ONCE from the reference corpus,
-    * serve it to any number of ingest streams without re-shingling the
-    * corpus at every stream start. Layout: (kind, value) rows — the
-    * band keys under kind `band_key` (distributed write: the key set is
-    * corpus-scale; the dictionary-encoded kind column compresses away)
-    * plus three parameter rows (`n`, `num_hashes`, `rows_per_band`), so
-    * a serve site can never band differently than the index was built —
-    * the geometry rides WITH the keys. */
+  /** [[graft.core.KeySets]] kind tag of the near-dup band-key index
+    * ([[bandIndexSave]]). */
+  val NearDupKind = "band_key"
+
+  /** Persist a [[minhashBandKeys]] blocklist as a [[graft.core.KeySets]]
+    * index — the near-dup gate's build-once/serve-many handoff: build the
+    * index ONCE from the reference corpus, serve it to any number of
+    * ingest streams without re-shingling the corpus at every stream
+    * start. The geometry rides WITH the keys as parameters `n`,
+    * `num_hashes` and `rows_per_band`, so a serve site can never band
+    * differently than the index was built. */
   def bandIndexSave(corpus: DataFrame, path: String, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4,
-      textCol: String = "text"): Unit = {
-    import corpus.sparkSession.implicits._
-    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol)
-      .select(lit("band_key").as("kind"), col("bk").as("value"))
-    val meta = Seq(("n", n.toLong), ("num_hashes", numHashes.toLong),
-      ("rows_per_band", rowsPerBand.toLong)).toDF("kind", "value")
-    keys.unionByName(meta).write.mode("overwrite").parquet(path)
-  }
+      textCol: String = "text"): Unit =
+    graft.core.KeySets.save(
+      minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol), path,
+      NearDupKind, bandParams(n, numHashes, rowsPerBand))
 
-  /** Load a [[bandIndexSave]] index → (band-key DataFrame with column
-    * `bk` — [[flagNearDupsAgainst]]'s shape, uncollected — plus the
-    * build geometry (n, numHashes, rowsPerBand)). Kinds and parameters
-    * come from one aggregate ([[graft.core.KeySets.readSummarized]]). */
-  def bandIndexLoad(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, Int, Int, Int) = {
-    val (df, summary) = graft.core.KeySets.readSummarized(spark, path)
-    // kind validation BEFORE any collect (the KeySets discipline): a
-    // foreign family's dump must fail fast on its kind tag — the old
-    // "everything non-band_key is metadata" read would pull that dump's
-    // corpus-scale keys onto the driver before noticing
-    val paramNames = Set("n", "num_hashes", "rows_per_band")
-    val foreign = summary.keySet -- paramNames - "band_key"
-    require(foreign.isEmpty,
-      s"index at $path is not a bandIndexSave dump (unexpected kinds: " +
-        s"${foreign.mkString(",")})")
-    val meta = graft.core.KeySets.params(path, summary,
-      k => Option.when(paramNames(k))(k))
-    def param(k: String) = meta.getOrElse(k,
-      sys.error(s"band index at $path is missing parameter row '$k'")).toInt
-    (df.filter(col("kind") === "band_key").select(col("value").as("bk")),
-      param("n"), param("num_hashes"), param("rows_per_band"))
-  }
+  private def bandParams(n: Int, numHashes: Int, rowsPerBand: Int) =
+    Map("n" -> n.toLong, "num_hashes" -> numHashes.toLong,
+      "rows_per_band" -> rowsPerBand.toLong)
 
   /** Kind tag of the Bloom near-dup band-key index
     * ([[bandBloomIndexSave]]). */
@@ -1063,82 +1037,30 @@ object Dedup {
     * contract (~10⁶ keys / 8 MB task rider) and even
     * [[flagNearDupsAgainst]]'s broadcast envelope ends near ~10⁸ keys,
     * while a 10⁹-doc reference corpus at 32 bands holds up to ~3·10¹⁰
-    * band keys. A Bloom filter over the SAME keys serves that regime:
-    * ~1.2 GB at 1% fpp per 10⁹ distinct keys, built distributed
-    * (`BloomFilterAggregate`), probed map-only. The banding geometry
-    * (n, num_hashes, rows_per_band) rides WITH the blob — the
-    * [[bandIndexSave]] contract: a serve site can never band
-    * differently than the index was built.
+    * band keys. A Bloom filter over the SAME keys
+    * ([[graft.core.KeySets.saveBloom]]) serves that regime: ~1.2 GB at
+    * 1% fpp per 10⁹ distinct keys, built distributed, probed map-only.
+    * The banding geometry rides WITH the blob — the [[bandIndexSave]]
+    * contract.
     *
-    * Semantics: flags are a SUPERSET of [[flagNearDups]]' on the same
-    * corpus — NO FALSE NEGATIVES (every band key inserted at build
-    * probes true at serve, so any candidate the literal gate would
-    * flag, this face flags; LSH banding's own probabilistic recall is
-    * identical on both faces), plus ~fpp extra false candidates PER
-    * DOCUMENT: each document probes once per band, so the filter is
-    * sized at fpp/bands per probe (union bound) — an fpp=0.01 filter
-    * probed 32 times would otherwise false-candidate ~28% of clean
-    * docs (measured). The ~1.75× bit price of the division is the cost
-    * of a per-document contract; a candidate flag was already a
-    * verify-me signal, so fpp buys more downstream verify work, never
-    * a lost duplicate. */
+    * Semantics: [[flagNearDups]] over the loaded blob flags a SUPERSET
+    * of the literal gate's flags on the same corpus — NO FALSE NEGATIVES
+    * (every band key inserted at build probes true at serve; LSH
+    * banding's own probabilistic recall is identical on both faces),
+    * plus ~fpp extra false candidates PER DOCUMENT: each document probes
+    * once per band, so the filter is sized at fpp/bands per probe (union
+    * bound) — an fpp=0.01 filter probed 32 times would otherwise
+    * false-candidate ~28% of clean docs (measured). The ~1.75× bit price
+    * of the division is the cost of a per-document contract; a candidate
+    * flag was already a verify-me signal, so fpp buys more downstream
+    * verify work, never a lost duplicate. */
   def bandBloomIndexSave(corpus: DataFrame, path: String, n: Int,
       numHashes: Int = 128, rowsPerBand: Int = 4, fpp: Double = 0.01,
-      textCol: String = "text"): Unit = {
-    val keys = minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol)
-    val (nItems, numBits, blob) =
-      buildBloomBlob(keys, "bk", fpp / (numHashes / rowsPerBand))
-    import corpus.sparkSession.implicits._
-    Seq((NearDupBloomKind, n.toLong, numHashes.toLong, rowsPerBand.toLong,
-        nItems, numBits, blob))
-      .toDF("kind", "n", "num_hashes", "rows_per_band",
-        "n_items", "num_bits", "bloom")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a [[bandBloomIndexSave]] dump → (blob — None for an
-    * empty-corpus build — and the banding geometry n / numHashes /
-    * rowsPerBand). Validates the family tag: a foreign dump can never
-    * serve as this gate's index. */
-  def bandBloomIndexLoad(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Option[Array[Byte]], Int, Int, Int) = {
-    val rows = spark.read.parquet(path).collect()
-    require(rows.length == 1 && rows(0).getString(0) == NearDupBloomKind,
-      s"index at $path is not a $NearDupBloomKind dump")
-    val r = rows(0)
-    (Option(r.getAs[Array[Byte]]("bloom")), r.getAs[Long]("n").toInt,
-      r.getAs[Long]("num_hashes").toInt, r.getAs[Long]("rows_per_band").toInt)
-  }
-
-  /** [[flagNearDups]] against a Bloom blob instead of a sorted literal:
-    * the same shared gram rule, keyed MinHash family, and
-    * [[rowBandKeys]] kernel, with membership one `might_contain`
-    * probe per band. The 32 band probes run through ONE
-    * `BloomFilterMightContain` instance (an `exists` over the band-key
-    * array) — each instance deserializes its own copy of the blob per
-    * task, so per-band instances would hold `bands` copies of a
-    * GB-scale bitmap in every executor. Map-only, stateless, no
-    * shuffle: identical on a batch frame or any streaming micro-batch.
-    * Null text → null flag (total pass); a None blob (empty-corpus
-    * build) flags nothing. */
-  def flagNearDupsBloom(docs: DataFrame, bloom: Option[Array[Byte]], n: Int,
-      numHashes: Int = 128, rowsPerBand: Int = 4,
-      textCol: String = "text"): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      s"numHashes=$numHashes must divide into bands of $rowsPerBand")
-    bloom match {
-      case None => docs.withColumn("near_dup_candidate",
-        when(col(textCol).isNotNull, lit(false)))
-      case Some(b) =>
-        import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-        import org.apache.spark.sql.graftbridge.Bridge
-        val flag = exists(rowBandKeys(textCol, n, numHashes, rowsPerBand),
-          k => Bridge.column(BloomFilterMightContain(
-            Bridge.expression(lit(b)), Bridge.expression(k))))
-        docs.withColumn("near_dup_candidate",
-          when(col(textCol).isNotNull, flag))
-    }
-  }
+      textCol: String = "text"): Unit =
+    graft.core.KeySets.saveBloom(
+      minhashBandKeys(corpus, n, numHashes, rowsPerBand, textCol), path,
+      NearDupBloomKind, bandParams(n, numHashes, rowsPerBand),
+      fpp / (numHashes / rowsPerBand))
 
   /** LSH banding: signature split into `bands` groups of `rowsPerBand`,
     * each band hashed to one bucket key; docs sharing any (band, bucket)
@@ -1445,8 +1367,6 @@ object Dedup {
       labels = next.select(col("id"), col("lbl")) // prior checkpoints GC'd by ContextCleaner
       converged = changed == 0
       iter += 1
-      if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $iter changed=$changed t=${System.nanoTime()}")
     }
     if (!converged)
       sys.error(s"clusterPairs did not converge within $maxIters rounds")
@@ -1542,18 +1462,16 @@ object Dedup {
     * Keys are [[TextAnalysis.hash60]] fingerprints (exact up to 60-bit
     * collisions, ~2⁻⁶⁰ per pair — the embedded-sorted-array gates'
     * convention; the batch-side [[exactDedupAgainst]] uses full md5).
-    * Map-only, no shuffle, no state: one binary search per row against
-    * the embedded sorted blocklist, identical on a batch frame or any
-    * streaming micro-batch. Null text → null flag (total pass).
-    * Envelope: ~8 B/key rides every task binary — ~10⁷ corpus
-    * fingerprints ≈ 80 MB is the practical ceiling; past that, the
+    * Map-only, no shuffle, no state: one membership probe per row,
+    * identical on a batch frame or any streaming micro-batch. Null text
+    * → null flag (total pass). Envelope of a sorted literal: ~8 B/key
+    * rides every task binary — ~10⁷ corpus fingerprints ≈ 80 MB is the
+    * practical ceiling; past that, a [[fpBloomIndexSave]] blob or the
     * anti-join form ([[exactDedupAgainst]]) is the scale path. */
-  def flagExactDups(docs: DataFrame, fpKeys: Seq[Long],
+  def flagExactDups(docs: DataFrame, fpKeys: graft.core.KeySets.Members,
       textCol: String = "text"): DataFrame =
     docs.withColumn("exact_dup",
-      when(col(textCol).isNotNull,
-        graft.functions.ArraySets.sortedLongContains(
-          TextAnalysis.hash60(col(textCol)), fpKeys)))
+      when(col(textCol).isNotNull, fpKeys.contains(TextAnalysis.hash60(col(textCol)))))
 
   /** The batch half of the exact-dup gate: the corpus's distinct 60-bit
     * content fingerprints, ready to collect into [[flagExactDups]]. */
@@ -1576,106 +1494,24 @@ object Dedup {
   val ExactDupBloomKind = "exact_dup_bloom"
 
   /** The exact-dup gate's CORPUS-SCALE continuation — a Bloom filter
-    * over the 60-bit content fingerprints, for reference corpora whose
-    * distinct-fp set outgrows the sorted-literal gate (the
-    * [[flagExactDups]] literal is driver-sized by contract; at 10⁹
-    * corpus fps it would be an 8 GB literal, while a 1%-fpp Bloom is
-    * ~1.2 GB and a 0.1%-fpp ~1.8 GB — and the blob broadcasts once per
-    * stream instead of riding every task's generated code). Built with
-    * Spark's own `BloomFilterAggregate` (the runtime-join-filter
-    * machinery — distributed build, one binary blob out), served with
-    * `BloomFilterMightContain` (codegen, map-only).
+    * over the 60-bit content fingerprints
+    * ([[graft.core.KeySets.saveBloom]]), for reference corpora whose
+    * distinct-fp set outgrows the sorted literal ([[flagExactDups]]'
+    * literal is driver-sized by contract; at 10⁹ corpus fps it would be
+    * an 8 GB literal, while a 1%-fpp Bloom is ~1.2 GB and a 0.1%-fpp
+    * ~1.8 GB — and the blob broadcasts once per stream instead of riding
+    * every task's generated code).
     *
-    * Semantics: NO FALSE NEGATIVES — every fingerprint inserted at
-    * build flags true at serve (the dedup guarantee holds exactly);
-    * false POSITIVES at ~`fpp` drop that fraction of clean docs — the
-    * documented price of the scale regime, chosen by the caller. An
-    * empty reference corpus stores a null blob and the gate passes
-    * everything (the [[graft.core.KeySets]] empty-set convention). */
+    * Semantics: [[flagExactDups]] over the loaded blob has NO FALSE
+    * NEGATIVES — every fingerprint inserted at build flags true at serve
+    * (the dedup guarantee holds exactly); false POSITIVES at ~`fpp` drop
+    * that fraction of clean docs — the documented price of the scale
+    * regime, chosen by the caller. An empty reference corpus stores a
+    * null blob and the gate passes everything. */
   def fpBloomIndexSave(corpus: DataFrame, path: String, fpp: Double = 0.01,
-      textCol: String = "text"): Unit = {
-    val (n, numBits, blob) =
-      buildBloomBlob(corpusFpKeys(corpus, textCol), "fp60", fpp)
-    import corpus.sparkSession.implicits._
-    Seq((ExactDupBloomKind, n, numBits, blob))
-      .toDF("kind", "n_items", "num_bits", "bloom")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Shared distributed Bloom build of the corpus-scale gate faces
-    * ([[fpBloomIndexSave]], [[bandBloomIndexSave]]): count the distinct
-    * keys, size the filter at `fpp`, run ONE `BloomFilterAggregate` —
-    * Spark's runtime-join-filter machinery: distributed build, one
-    * binary blob out. The aggregate's conf ceilings (defaults 4×10⁶
-    * items / 2²⁶ bits — sized for the optimizer's OWN injected join
-    * filters, not a corpus index) are raised around the build and
-    * restored after (round-16 ADVICE: a corpus past ~4M keys otherwise
-    * failed with AnalysisException at precisely the scale these faces
-    * exist for). → (n_items, num_bits, blob — None for an empty key
-    * set: the aggregate returns null over zero rows). */
-  private[ext] def buildBloomBlob(keys: DataFrame, keyCol: String,
-      fpp: Double): (Long, Long, Option[Array[Byte]]) = {
-    require(fpp > 0 && fpp < 0.5, s"fpp must be in (0, 0.5): $fpp")
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftbridge.Bridge
-    val n = math.max(1L, keys.count())
-    val numBits = math.ceil(
-      -(n.toDouble) * math.log(fpp) / (math.log(2) * math.log(2))).toLong
-    require(numBits <= (1L << 34),
-      s"$n keys at fpp=$fpp need $numBits bloom bits (> 2^34 = 2 GiB) — " +
-        "raise fpp or shard the index")
-    val conf = keys.sparkSession.conf
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val (oldItems, oldBits) = (conf.getOption(itemsKey), conf.getOption(bitsKey))
-    val blob =
-      try {
-        conf.set(itemsKey, math.max(n, 4000000L))
-        conf.set(bitsKey, math.max(numBits, 67108864L))
-        keys.select(Bridge.column(new BloomFilterAggregate(
-            Bridge.expression(col(keyCol)), Literal(n), Literal(numBits))
-          .toAggregateExpression()).as("bloom"))
-          .head().getAs[Array[Byte]](0)
-      } finally {
-        def restore(k: String, v: Option[String]): Unit =
-          v.fold(conf.unset(k))(conf.set(k, _))
-        restore(itemsKey, oldItems); restore(bitsKey, oldBits)
-      }
-    (n, numBits, Option(blob))
-  }
-
-  /** Load a [[fpBloomIndexSave]] dump → (blob — None for an empty-corpus
-    * build — and the build params). Validates the family tag: a foreign
-    * dump can never serve as this gate's index. */
-  def fpBloomIndexLoad(spark: org.apache.spark.sql.SparkSession,
-      path: String): (Option[Array[Byte]], Map[String, Long]) = {
-    val rows = spark.read.parquet(path).collect()
-    require(rows.length == 1 && rows(0).getString(0) == ExactDupBloomKind,
-      s"index at $path is not a $ExactDupBloomKind dump")
-    val r = rows(0)
-    (Option(r.getAs[Array[Byte]]("bloom")),
-      Map("n_items" -> r.getLong(1), "num_bits" -> r.getLong(2)))
-  }
-
-  /** [[flagExactDups]] against a Bloom blob instead of a sorted
-    * literal: map-only `might_contain` per row (codegen; the blob
-    * deserializes once per task, not per row). Null text → null flag
-    * (total pass); a None blob (empty-corpus build) flags nothing.
-    * Flags are a SUPERSET of the exact gate's at ~fpp false-positive
-    * rate and never miss a true duplicate. */
-  def flagExactDupsBloom(docs: DataFrame, bloom: Option[Array[Byte]],
-      textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graftbridge.Bridge
-    val hit = bloom match {
-      case None => lit(false)
-      case Some(b) => Bridge.column(BloomFilterMightContain(
-        Bridge.expression(lit(b)),
-        Bridge.expression(TextAnalysis.hash60(col(textCol)))))
-    }
-    docs.withColumn("exact_dup", when(col(textCol).isNotNull, hit))
-  }
+      textCol: String = "text"): Unit =
+    graft.core.KeySets.saveBloom(corpusFpKeys(corpus, textCol), path,
+      ExactDupBloomKind, fpp = fpp)
 
   /** Incremental exact dedup — the R-S (delta-vs-corpus) form of
     * [[exactDedup]], completing the family's against-forms

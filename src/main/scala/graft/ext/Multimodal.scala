@@ -196,6 +196,11 @@ object Multimodal {
   /** [[graft.core.KeySets]] kind tag of the image-dHash blocklist. */
   val DHashKind = "image_dhash"
 
+  /** The distinct non-null content hashes of a media frame — the key set
+    * of every perceptual gate index. */
+  private def hashKeys(media: DataFrame, hash: Column): DataFrame =
+    media.select(hash.as("ph")).filter(col("ph").isNotNull).distinct()
+
   /** Persist the corpus's image dHashes as a [[graft.core.KeySets]]
     * blocklist — the build side of the perceptual ingest gate (the
     * [[Dedup.fpIndexSave]] pattern at the content-hash level):
@@ -203,27 +208,19 @@ object Multimodal {
     * perceptual duplicate of something already ingested. */
   def dHashIndexSave(media: DataFrame, path: String,
       payloadCol: String = "payload"): Unit =
-    graft.core.KeySets.save(
-      media.select(
-          graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)).as("ph"))
-        .filter(col("ph").isNotNull).distinct(),
-      path, DHashKind)
+    graft.core.KeySets.save(hashKeys(media,
+      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol))), path, DHashKind)
 
   /** Stateless perceptual-duplicate flag against a [[dHashIndexSave]]
-    * blocklist literal — map-only (one codegen hash + one binary
-    * search per row), so the SAME code gates a batch frame or any
-    * streaming micro-batch. Un-decodable payloads get a null flag
-    * (the drop-gates' total-pass convention: only a POSITIVE content
-    * match drops). */
-  def flagPerceptualDup(media: DataFrame, hashes: Seq[Long],
-      payloadCol: String = "payload"): DataFrame = {
-    val ph = graft.functions.PerceptualHashFns.imageDHash(col(payloadCol))
-    media.withColumn("perceptual_dup",
-      when(ph.isNull, lit(null).cast(BooleanType))
-        .otherwise(
-          if (hashes.isEmpty) lit(false)
-          else graft.functions.ArraySets.sortedLongContains(ph, hashes)))
-  }
+    * sorted literal or a [[dHashBloomIndexSave]] blob — map-only (one
+    * codegen hash + one membership probe per row), so the SAME code
+    * gates a batch frame or any streaming micro-batch. Un-decodable
+    * payloads get a null flag (the drop-gates' total-pass convention:
+    * only a POSITIVE content match drops). */
+  def flagPerceptualDup(media: DataFrame, hashes: graft.core.KeySets.Members,
+      payloadCol: String = "payload"): DataFrame =
+    media.withColumn("perceptual_dup", hashes.contains(
+      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol))))
 
   /** Kind tags of the Bloom perceptual indexes
     * ([[dHashBloomIndexSave]] / [[wavFpBloomIndexSave]]). */
@@ -237,75 +234,25 @@ object Multimodal {
     * contract (~10⁷ hashes ≈ 80 MB task rider is the practical
     * ceiling), while a 10⁹-image reference corpus holds up to 10⁹
     * distinct dHashes — an 8 GB literal. A Bloom over the same 64-bit
-    * hashes serves that regime (~1.2 GB at 1% fpp per 10⁹ keys),
-    * built distributed, probed map-only, ONE probe per row (unlike
-    * the banded near-dup face there is no per-band union-bound issue:
-    * fpp here IS the per-document false-flag rate). No false
-    * negatives: a content copy of an indexed payload always flags.
-    * Un-decodable payloads flag null and PASS (total-pass
-    * convention); empty-corpus builds flag nothing. */
+    * hashes ([[graft.core.KeySets.saveBloom]]) serves that regime
+    * (~1.2 GB at 1% fpp per 10⁹ keys), built distributed, probed
+    * map-only, ONE probe per row (unlike the banded near-dup face there
+    * is no per-band union-bound issue: fpp here IS the per-document
+    * false-flag rate). No false negatives: a content copy of an indexed
+    * payload always flags. Un-decodable payloads flag null and PASS
+    * (total-pass convention); empty-corpus builds flag nothing. */
   def dHashBloomIndexSave(media: DataFrame, path: String,
       fpp: Double = 0.01, payloadCol: String = "payload"): Unit =
-    hashBloomSave(media, path, DHashBloomKind,
-      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)), fpp)
+    graft.core.KeySets.saveBloom(hashKeys(media,
+      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol))), path,
+      DHashBloomKind, fpp = fpp)
 
   /** [[dHashBloomIndexSave]] for the WAV energy fingerprint. */
   def wavFpBloomIndexSave(media: DataFrame, path: String,
       fpp: Double = 0.01, payloadCol: String = "payload"): Unit =
-    hashBloomSave(media, path, WavFpBloomKind,
-      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)), fpp)
-
-  private def hashBloomSave(media: DataFrame, path: String, kind: String,
-      hash: Column, fpp: Double): Unit = {
-    val keys = media.select(hash.as("ph"))
-      .filter(col("ph").isNotNull).distinct()
-    val (n, numBits, blob) = graft.ext.Dedup.buildBloomBlob(keys, "ph", fpp)
-    import media.sparkSession.implicits._
-    Seq((kind, n, numBits, blob))
-      .toDF("kind", "n_items", "num_bits", "bloom")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a [[dHashBloomIndexSave]]/[[wavFpBloomIndexSave]] dump →
-    * blob (None for an empty-corpus build). `expectKind` validates the
-    * family: an image index can never serve the audio gate. */
-  def hashBloomIndexLoad(spark: org.apache.spark.sql.SparkSession,
-      path: String, expectKind: String): Option[Array[Byte]] = {
-    require(expectKind == DHashBloomKind || expectKind == WavFpBloomKind,
-      s"not a perceptual bloom kind: $expectKind")
-    val rows = spark.read.parquet(path).collect()
-    require(rows.length == 1 && rows(0).getString(0) == expectKind,
-      s"index at $path is not a $expectKind dump")
-    Option(rows(0).getAs[Array[Byte]]("bloom"))
-  }
-
-  /** [[flagPerceptualDup]] against a Bloom blob instead of a sorted
-    * literal: one codegen hash + one `might_contain` probe per row. */
-  def flagPerceptualDupBloom(media: DataFrame, bloom: Option[Array[Byte]],
-      payloadCol: String = "payload"): DataFrame =
-    hashBloomFlag(media, bloom,
-      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)),
-      "perceptual_dup")
-
-  /** [[flagAudioDup]] against a Bloom blob instead of a sorted literal. */
-  def flagAudioDupBloom(media: DataFrame, bloom: Option[Array[Byte]],
-      payloadCol: String = "payload"): DataFrame =
-    hashBloomFlag(media, bloom,
-      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)),
-      "audio_dup")
-
-  private def hashBloomFlag(media: DataFrame, bloom: Option[Array[Byte]],
-      hash: Column, flagCol: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graftbridge.Bridge
-    val hit = bloom match {
-      case None => lit(false)
-      case Some(b) => Bridge.column(BloomFilterMightContain(
-        Bridge.expression(lit(b)), Bridge.expression(hash)))
-    }
-    media.withColumn(flagCol,
-      when(hash.isNull, lit(null).cast(BooleanType)).otherwise(hit))
-  }
+    graft.core.KeySets.saveBloom(hashKeys(media,
+      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol))), path,
+      WavFpBloomKind, fpp = fpp)
 
   /** [[graft.core.KeySets]] kind tag of the WAV energy-fingerprint
     * blocklist. */
@@ -321,27 +268,20 @@ object Multimodal {
     * re-encoded or gain-shifted copy of an already-ingested clip. */
   def wavFpIndexSave(media: DataFrame, path: String,
       payloadCol: String = "payload"): Unit =
-    graft.core.KeySets.save(
-      media.select(
-          graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)).as("ph"))
-        .filter(col("ph").isNotNull).distinct(),
-      path, WavFpKind)
+    graft.core.KeySets.save(hashKeys(media,
+      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol))), path, WavFpKind)
 
   /** [[flagPerceptualDup]]'s audio dual: stateless content-duplicate
-    * flag against a [[wavFpIndexSave]] blocklist literal — map-only
-    * (one codegen fingerprint + one binary search per row), identical
-    * on a batch frame or any streaming micro-batch. Un-decodable
-    * payloads (not RIFF/WAVE PCM-16, or under one energy window) get a
-    * null flag — the drop-gates' total-pass convention. */
-  def flagAudioDup(media: DataFrame, hashes: Seq[Long],
-      payloadCol: String = "payload"): DataFrame = {
-    val ph = graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol))
-    media.withColumn("audio_dup",
-      when(ph.isNull, lit(null).cast(BooleanType))
-        .otherwise(
-          if (hashes.isEmpty) lit(false)
-          else graft.functions.ArraySets.sortedLongContains(ph, hashes)))
-  }
+    * flag against a [[wavFpIndexSave]] sorted literal or a
+    * [[wavFpBloomIndexSave]] blob — map-only (one codegen fingerprint +
+    * one membership probe per row), identical on a batch frame or any
+    * streaming micro-batch. Un-decodable payloads (not RIFF/WAVE PCM-16,
+    * or under one energy window) get a null flag — the drop-gates'
+    * total-pass convention. */
+  def flagAudioDup(media: DataFrame, hashes: graft.core.KeySets.Members,
+      payloadCol: String = "payload"): DataFrame =
+    media.withColumn("audio_dup", hashes.contains(
+      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol))))
 
   /** Handcrafted container headers (shared by q109 and the spec tests):
     * real byte layouts, hand-derivable expected values. */

@@ -536,17 +536,17 @@ object TextAnalysis {
     * md5-prefix convention, not a tunable recall knob): grams hash to
     * the engine-portable 60-bit key and membership is one binary search
     * per gram against the embedded sorted blocklist
-    * ([[graft.functions.ArraySets.sortedLongContains]] — logarithmic,
-    * primitive `long[]`, no boxing). Map-only, stateless, no shuffle —
+    * ([[graft.core.KeySets.Members.Sorted]] — logarithmic, primitive
+    * `long[]`, no boxing). Map-only, stateless, no shuffle —
     * runs identically on a batch frame or inside any streaming
     * micro-batch with no plan change. Null text → null flag (the mask
     * ops' total-pass convention). Envelope: the collected key set rides
     * every task binary (~8 B/key — ~10⁷ keys ≈ 80 MB is the practical
     * ceiling; benchmark suites sit orders below it). */
-  def flagContaminated(docs: DataFrame, benchKeys: Seq[Long], n: Int,
-      textCol: String = "text"): DataFrame = {
+  def flagContaminated(docs: DataFrame, benchKeys: graft.core.KeySets.Members,
+      n: Int, textCol: String = "text"): DataFrame = {
     val flag = exists(Dedup.wordShingleArray(col(textCol), n),
-      s => graft.functions.ArraySets.sortedLongContains(hash60(s), benchKeys))
+      s => benchKeys.contains(hash60(s)))
     docs.withColumn("contaminated", when(col(textCol).isNotNull, flag))
   }
 
@@ -1090,11 +1090,10 @@ object TextAnalysis {
     * is a binary search per suffix. Map-only, stateless, no shuffle —
     * identical on batch frames and streaming micro-batches. Null text →
     * null flag (total-pass convention). */
-  def flagBlockedDomains(docs: DataFrame, blockedKeys: Seq[Long],
+  def flagBlockedDomains(docs: DataFrame, blockedKeys: graft.core.KeySets.Members,
       textCol: String = "text"): DataFrame = {
     val flag = exists(
-      graft.functions.DomainSuffixKeys.of(col(textCol)),
-      k => graft.functions.ArraySets.sortedLongContains(k, blockedKeys))
+      graft.functions.DomainSuffixKeys.of(col(textCol)), k => blockedKeys.contains(k))
     docs.withColumn("blocked_domain", when(col(textCol).isNotNull, flag))
   }
 

@@ -552,7 +552,7 @@ object Corpus {
     // memoized per bench plan so warm re-runs skip the collect job
     val bg = TextAnalysis.benchGramKeys(d.filter(bucket >= 90), n = 3)
     val keys = graft.core.Caches.memo(bg, "benchKeys")(
-      bg.collect().map(_.getLong(0)).toSeq)
+      graft.core.KeySets.Members(bg.collect().map(_.getLong(0)).toSeq))
     TextAnalysis.flagContaminated(d, keys, n = 3)
       .select(col("doc_id"), col("contaminated"))
       .orderBy(col("doc_id"))
@@ -1929,7 +1929,7 @@ object Corpus {
       .toDF("domain")
     val bk = TextAnalysis.blockedDomainKeys(bl)
     val keys = graft.core.Caches.memo(bk, "blockedDomainKeys")(
-      bk.collect().map(_.getLong(0)).toSeq)
+      graft.core.KeySets.Members(bk.collect().map(_.getLong(0)).toSeq))
     TextAnalysis.flagBlockedDomains(planted, keys)
       .select(col("doc_id"), col("blocked_domain"))
       .orderBy(col("doc_id"))

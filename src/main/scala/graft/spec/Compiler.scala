@@ -112,91 +112,43 @@ object Compiler {
     // `action: drop` (default) filters gated rows out; `action: flag`
     // keeps the audit column. Null text passes a drop-gate (the total-
     // pass convention — a null payload is not evidence of contamination).
-    // Each gate's side input comes either from its corpus/bench path
-    // (hash the reference set at stage build) or from `index_path` — a
-    // prebuilt [[graft.core.KeySets.save]] dump (build once, serve many
-    // streams; the kind tag stops a foreign family's index from being
-    // served, and build params like the gram width ride with the keys).
+    // Each key-set gate's side input comes from [[gateKeys]]: a prebuilt
+    // index (`index_path`, or `bloom_path` for a gate with a Bloom face)
+    // or its reference table, hashed at stage build.
     case "contamination_gate" => df => {
-      val (keys, n) = p.config.get("index_path") match {
-        case Some(ip) =>
-          val (ks, params) = graft.core.KeySets.loadCollected(
-            df.sparkSession, ip, graft.ext.TextAnalysis.ContaminationKind)
-          (ks, params.getOrElse("n",
-            sys.error(s"contamination index at $ip is missing param n")).toInt)
-        case None =>
-          val benchPath = p.config.getOrElse("bench_path",
-            sys.error("contamination_gate needs config.bench_path or config.index_path"))
-          val n = p.config.getOrElse("n", "8").toInt
-          val bench = df.sparkSession.read.parquet(benchPath)
-          (graft.ext.TextAnalysis.benchGramKeys(bench, n)
-            .collect().map(_.getLong(0)).toSeq, n)
-      }
-      gated(p, graft.ext.TextAnalysis.flagContaminated(df, keys, n),
+      val (keys, ps) = gateKeys(p, df.sparkSession,
+        graft.ext.TextAnalysis.ContaminationKind, None, Seq("n" -> 8L),
+        Some("bench_path" -> ((bench, ps) =>
+          graft.ext.TextAnalysis.benchGramKeys(bench, ps("n").toInt))))
+      gated(p, graft.ext.TextAnalysis.flagContaminated(df, keys, ps("n").toInt),
         "contaminated")
     }
-    case "exact_dup_gate" => df => p.config.get("bloom_path") match {
-      // corpus-scale face: a [[graft.ext.Dedup.fpBloomIndexSave]] blob —
-      // no false negatives, ~fpp false positives, for reference corpora
-      // whose distinct-fp set outgrows the sorted literal below
-      case Some(bp) =>
-        val (blob, _) = graft.ext.Dedup.fpBloomIndexLoad(df.sparkSession, bp)
-        gated(p, graft.ext.Dedup.flagExactDupsBloom(df, blob), "exact_dup")
-      case None =>
-        val keys = p.config.get("index_path") match {
-          case Some(ip) => graft.core.KeySets.loadCollected(
-            df.sparkSession, ip, graft.ext.Dedup.ExactDupKind)._1
-          case None =>
-            val corpusPath = p.config.getOrElse("corpus_path",
-              sys.error("exact_dup_gate needs config.corpus_path, " +
-                "config.index_path, or config.bloom_path"))
-            val corpus = df.sparkSession.read.parquet(corpusPath)
-            graft.ext.Dedup.corpusFpKeys(corpus)
-              .collect().map(_.getLong(0)).toSeq
-        }
-        gated(p, graft.ext.Dedup.flagExactDups(df, keys), "exact_dup")
+    case "exact_dup_gate" => df => {
+      val (keys, _) = gateKeys(p, df.sparkSession, graft.ext.Dedup.ExactDupKind,
+        Some(graft.ext.Dedup.ExactDupBloomKind), Nil,
+        Some("corpus_path" -> ((corpus, _) => graft.ext.Dedup.corpusFpKeys(corpus))))
+      gated(p, graft.ext.Dedup.flagExactDups(df, keys), "exact_dup")
     }
     case "domain_blocklist_gate" => df => {
       val blPath = p.config.getOrElse("blocklist_path",
         sys.error("domain_blocklist_gate needs config.blocklist_path (parquet with a domain column)"))
       val domainCol = p.config.getOrElse("domain_col", "domain")
       val bl = df.sparkSession.read.parquet(blPath)
-      val keys = graft.ext.TextAnalysis.blockedDomainKeys(bl, domainCol)
-        .collect().map(_.getLong(0)).toSeq
+      val keys = graft.core.KeySets.Members(graft.ext.TextAnalysis
+        .blockedDomainKeys(bl, domainCol).collect().map(_.getLong(0)).toSeq)
       gated(p, graft.ext.TextAnalysis.flagBlockedDomains(df, keys),
         "blocked_domain")
     }
-    // Side input comes either from `corpus_path` (shingle the reference
-    // corpus at stage build) or from `index_path` (a prebuilt
-    // [[graft.ext.Dedup.bandIndexSave]] dump — build once, serve many
-    // streams; the banding geometry rides with the keys, so config
-    // n/num_hashes/rows_per_band are ignored and can't diverge).
-    case "near_dup_gate" => df => p.config.get("bloom_path") match {
-      // corpus-scale face: a [[graft.ext.Dedup.bandBloomIndexSave]]
-      // blob — flags a superset of the literal gate's at ~fpp, never
-      // missing a candidate it would flag; geometry rides with the blob
-      case Some(bp) =>
-        val (blob, n, h, r) =
-          graft.ext.Dedup.bandBloomIndexLoad(df.sparkSession, bp)
-        gated(p, graft.ext.Dedup.flagNearDupsBloom(df, blob, n, h, r),
-          "near_dup_candidate")
-      case None =>
-      val (bandKeys, n, numHashes, rowsPerBand) = p.config.get("index_path") match {
-        case Some(ip) =>
-          val (keys, n0, h0, r0) = graft.ext.Dedup.bandIndexLoad(df.sparkSession, ip)
-          (keys.collect().map(_.getLong(0)).toSeq, n0, h0, r0)
-        case None =>
-          val corpusPath = p.config.getOrElse("corpus_path",
-            sys.error("near_dup_gate needs config.corpus_path or config.index_path"))
-          val n = p.config.getOrElse("n", "8").toInt
-          val numHashes = p.config.getOrElse("num_hashes", "128").toInt
-          val rowsPerBand = p.config.getOrElse("rows_per_band", "4").toInt
-          val corpus = df.sparkSession.read.parquet(corpusPath)
-          (graft.ext.Dedup.minhashBandKeys(corpus, n, numHashes, rowsPerBand)
-            .collect().map(_.getLong(0)).toSeq, n, numHashes, rowsPerBand)
-      }
-      gated(p, graft.ext.Dedup.flagNearDups(df, bandKeys, n, numHashes,
-        rowsPerBand), "near_dup_candidate")
+    // The banding geometry rides with a prebuilt index, so config
+    // n/num_hashes/rows_per_band apply only when hashing `corpus_path`.
+    case "near_dup_gate" => df => {
+      val (keys, ps) = gateKeys(p, df.sparkSession, graft.ext.Dedup.NearDupKind,
+        Some(graft.ext.Dedup.NearDupBloomKind),
+        Seq("n" -> 8L, "num_hashes" -> 128L, "rows_per_band" -> 4L),
+        Some("corpus_path" -> ((corpus, ps) => graft.ext.Dedup.minhashBandKeys(corpus,
+          ps("n").toInt, ps("num_hashes").toInt, ps("rows_per_band").toInt))))
+      gated(p, graft.ext.Dedup.flagNearDups(df, keys, ps("n").toInt,
+        ps("num_hashes").toInt, ps("rows_per_band").toInt), "near_dup_candidate")
     }
     // scores every row's text features against a batch-trained linear
     // model dump ([[graft.ext.Learn.linearModelSave]]) and gates on the
@@ -265,47 +217,21 @@ object Compiler {
     // PASS a drop-gate (total-pass convention: only a positive content
     // match drops).
     case "perceptual_dup_gate" => df => {
-      val payloadCol = p.config.getOrElse("payload_col", "payload")
-      p.config.get("bloom_path") match {
-        // corpus-scale face: a [[graft.ext.Multimodal.dHashBloomIndexSave]]
-        // blob — no false negatives, ~fpp per-document false flags
-        case Some(bp) =>
-          val blob = graft.ext.Multimodal.hashBloomIndexLoad(
-            df.sparkSession, bp, graft.ext.Multimodal.DHashBloomKind)
-          gated(p, graft.ext.Multimodal.flagPerceptualDupBloom(df, blob,
-            payloadCol), "perceptual_dup")
-        case None =>
-          val ip = p.config.getOrElse("index_path",
-            sys.error("perceptual_dup_gate needs config.index_path (a " +
-              "dHashIndexSave dump) or config.bloom_path"))
-          val (hashes, _) = graft.core.KeySets.loadCollected(
-            df.sparkSession, ip, graft.ext.Multimodal.DHashKind)
-          gated(p, graft.ext.Multimodal.flagPerceptualDup(df, hashes,
-            payloadCol), "perceptual_dup")
-      }
+      val (keys, _) = gateKeys(p, df.sparkSession, graft.ext.Multimodal.DHashKind,
+        Some(graft.ext.Multimodal.DHashBloomKind), Nil, None)
+      gated(p, graft.ext.Multimodal.flagPerceptualDup(df, keys,
+        p.config.getOrElse("payload_col", "payload")), "perceptual_dup")
     }
     // the AUDIO dual of perceptual_dup_gate: WAV energy fingerprints
     // ([[graft.ext.Multimodal.wavFpIndexSave]]) load once as a sorted
     // literal; each row's payload fingerprints (RIFF walk, PCM-16) and
-    // binary-searches — map-only, no join, no state, batch == stream.
+    // is probed — map-only, no join, no state, batch == stream.
     // Un-decodable payloads get a null flag and PASS a drop-gate.
     case "audio_dup_gate" => df => {
-      val payloadCol = p.config.getOrElse("payload_col", "payload")
-      p.config.get("bloom_path") match {
-        case Some(bp) =>
-          val blob = graft.ext.Multimodal.hashBloomIndexLoad(
-            df.sparkSession, bp, graft.ext.Multimodal.WavFpBloomKind)
-          gated(p, graft.ext.Multimodal.flagAudioDupBloom(df, blob,
-            payloadCol), "audio_dup")
-        case None =>
-          val ip = p.config.getOrElse("index_path",
-            sys.error("audio_dup_gate needs config.index_path (a " +
-              "wavFpIndexSave dump) or config.bloom_path"))
-          val (hashes, _) = graft.core.KeySets.loadCollected(
-            df.sparkSession, ip, graft.ext.Multimodal.WavFpKind)
-          gated(p, graft.ext.Multimodal.flagAudioDup(df, hashes,
-            payloadCol), "audio_dup")
-      }
+      val (keys, _) = gateKeys(p, df.sparkSession, graft.ext.Multimodal.WavFpKind,
+        Some(graft.ext.Multimodal.WavFpBloomKind), Nil, None)
+      gated(p, graft.ext.Multimodal.flagAudioDup(df, keys,
+        p.config.getOrElse("payload_col", "payload")), "audio_dup")
     }
     // fixed-size token chunking with overlap ([[graft.ext.Sharding
     // .chunkDocuments]]'s stage face): the doc stream becomes a chunk
@@ -358,6 +284,33 @@ object Compiler {
   /** Gate tail shared by the flag processors: `drop` removes rows whose
     * flag is TRUE (null flags — null text — pass) and hides the flag
     * column; `flag` keeps the audit column for a downstream sink. */
+  /** A key-set gate's side input → (membership, build params): the Bloom
+    * dump at `bloom_path` (only a gate with a `bloomKind`), else the
+    * literal dump at `index_path`, else the keys `source` hashes from the
+    * reference table at its config path, with each of `params` read from
+    * config (its default otherwise). A dump must carry every one of
+    * `params`; its values win over config. */
+  private def gateKeys(p: ProcConf, spark: SparkSession, kind: String,
+      bloomKind: Option[String], params: Seq[(String, Long)],
+      source: Option[(String, (DataFrame, Map[String, Long]) => DataFrame)])
+      : (graft.core.KeySets.Members, Map[String, Long]) = {
+    val required = params.map(_._1)
+    (p.config.get("bloom_path"), p.config.get("index_path")) match {
+      case (Some(bp), _) => graft.core.KeySets.loadBloom(spark, bp, bloomKind.getOrElse(
+          sys.error(s"${p.typ} has no Bloom face: config.bloom_path is not accepted")),
+        required)
+      case (None, Some(ip)) => graft.core.KeySets.loadCollected(spark, ip, kind, required)
+      case (None, None) =>
+        val (path, build) = source.flatMap { case (k, b) => p.config.get(k).map(_ -> b) }
+          .getOrElse(sys.error(s"${p.typ} needs " + (source.map(_._1).toSeq ++
+            Seq("index_path") ++ bloomKind.map(_ => "bloom_path"))
+            .map("config." + _).mkString(" or ")))
+        val ps = params.map { case (k, d) => k -> p.config.get(k).fold(d)(_.toLong) }.toMap
+        (graft.core.KeySets.Members(
+          build(spark.read.parquet(path), ps).collect().map(_.getLong(0)).toSeq), ps)
+    }
+  }
+
   private def gated(p: ProcConf, flagged: DataFrame, flagCol: String): DataFrame =
     p.config.getOrElse("action", "drop") match {
       case "drop" => keepRows(flagged, !coalesce(col(flagCol), lit(false)),

@@ -134,14 +134,14 @@ object StreamOps {
       emit: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
     // all fields guarded by `lock`; `done` signals swap completion
     val lock = new Object
-    var keys: Seq[Long] = null
+    var keys: graft.core.KeySets.Members = null
     var builtEpoch = -1L
     var building = false
     var consecutiveFailures = 0
     def rebuild(e: Long): Unit = {
-      val k = graft.ext.Dedup
+      val k = graft.core.KeySets.Members(graft.ext.Dedup
         .minhashBandKeys(corpus(), n, numHashes, rowsPerBand, textCol)
-        .collect().map(_.getLong(0)).toSeq
+        .collect().map(_.getLong(0)).toSeq)
       lock.synchronized {
         keys = k; builtEpoch = e; building = false
         consecutiveFailures = 0; lock.notifyAll()
@@ -149,7 +149,7 @@ object StreamOps {
     }
     (batch: DataFrame, batchId: Long) => {
       val e = batchId / math.max(1L, refreshEvery)
-      val current: Seq[Long] = lock.synchronized {
+      val current = lock.synchronized {
         if (consecutiveFailures >= maxRebuildFailures)
           throw new IllegalStateException(
             s"nearDupGateSink: $consecutiveFailures consecutive blocklist " +

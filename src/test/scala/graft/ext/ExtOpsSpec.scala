@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
-import graft.core.Tables
+import graft.core.{KeySets, Tables}
 import graft.operators.AsofJoin
 import org.apache.spark.sql.functions._
 
@@ -252,8 +252,8 @@ class ExtOpsSpec extends SparkSpec {
     val docs = Tables.load(spark, sf001, "documents")
     val bucket = pmod(graft.functions.TextMetrics.hash60(col("text")), lit(100L))
     val bench = docs.filter(bucket >= 90)
-    val keys = TextAnalysis.benchGramKeys(bench, n = 3)
-      .collect().map(_.getLong(0)).toSeq
+    val keys = KeySets.Members(TextAnalysis.benchGramKeys(bench, n = 3)
+      .collect().map(_.getLong(0)).toSeq)
     val flagged = TextAnalysis.flagContaminated(docs, keys, n = 3)
       .filter(coalesce(col("contaminated"), lit(false)))
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
@@ -287,40 +287,40 @@ class ExtOpsSpec extends SparkSpec {
     val corpus = Tables.load(spark, sf001, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString
     Dedup.fpBloomIndexSave(corpus, s"$dir/idx", fpp = 0.01)
-    val (blob, params) = Dedup.fpBloomIndexLoad(spark, s"$dir/idx")
-    assert(blob.isDefined && params("n_items") > 0 && params("num_bits") > 0)
+    val (blob, params) = KeySets.loadBloom(spark, s"$dir/idx", Dedup.ExactDupBloomKind)
+    assert(blob.blob.isDefined && params("n_items") > 0 && params("num_bits") > 0)
     // NO FALSE NEGATIVES: every corpus doc must flag true
-    val onCorpus = Dedup.flagExactDupsBloom(
+    val onCorpus = Dedup.flagExactDups(
       corpus.filter(col("text").isNotNull), blob)
     assert(onCorpus.filter(!col("exact_dup")).count() == 0,
       "a bloom gate may never miss a true duplicate")
     // fresh docs: false-positive rate within a loose band of fpp=1%
     val fresh = spark.range(2000).select(col("id").as("doc_id"),
       concat(lit("fresh bloom probe text "), col("id").cast("string")).as("text"))
-    val fp = Dedup.flagExactDupsBloom(fresh, blob)
+    val fp = Dedup.flagExactDups(fresh, blob)
       .filter(col("exact_dup")).count()
     assert(fp <= 2000 * 0.05, s"fp rate implausibly high: $fp/2000")
     // null text: null flag (total pass)
-    val nulls = Dedup.flagExactDupsBloom(
+    val nulls = Dedup.flagExactDups(
       Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"), blob)
       .select(col("exact_dup")).head()
     assert(nulls.isNullAt(0))
     // superset of the exact-literal gate's flags
-    val keys = Dedup.corpusFpKeys(corpus).collect().map(_.getLong(0)).toSeq
-    val both = Dedup.flagExactDupsBloom(fresh, blob).withColumnRenamed("exact_dup", "b")
+    val keys = KeySets.Members(Dedup.corpusFpKeys(corpus).collect().map(_.getLong(0)).toSeq)
+    val both = Dedup.flagExactDups(fresh, blob).withColumnRenamed("exact_dup", "b")
       .join(Dedup.flagExactDups(fresh, keys).select(col("doc_id"), col("exact_dup").as("e")),
         Seq("doc_id"))
     assert(both.filter(col("e") && !col("b")).count() == 0,
       "bloom flags must be a superset of the exact gate's")
     // empty corpus → null blob → flags nothing
     Dedup.fpBloomIndexSave(corpus.filter(lit(false)), s"$dir/empty")
-    val (none, _) = Dedup.fpBloomIndexLoad(spark, s"$dir/empty")
-    assert(none.isEmpty)
-    assert(Dedup.flagExactDupsBloom(fresh, none).filter(col("exact_dup")).count() == 0)
+    val (none, _) = KeySets.loadBloom(spark, s"$dir/empty", Dedup.ExactDupBloomKind)
+    assert(none.blob.isEmpty)
+    assert(Dedup.flagExactDups(fresh, none).filter(col("exact_dup")).count() == 0)
     // a foreign (KeySets) dump must not load as a bloom index
     val ksDir = s"$dir/ks"
     graft.core.KeySets.save(Seq(1L).toDF("k"), ksDir, "fam_x")
-    intercept[Exception] { Dedup.fpBloomIndexLoad(spark, ksDir) }
+    intercept[Exception] { KeySets.loadBloom(spark, ksDir, Dedup.ExactDupBloomKind) }
     ()
   }
 
@@ -347,15 +347,15 @@ class ExtOpsSpec extends SparkSpec {
     // ceilings restored: they keep protecting the optimizer's own filters
     assert((spark.conf.getOption(itemsKey), spark.conf.getOption(bitsKey)) == before,
       "ceilings must be restored after the build")
-    val (blob, params) = Dedup.fpBloomIndexLoad(spark, s"$dir/idx")
-    assert(blob.isDefined && params("n_items") == 8400000L
+    val (blob, params) = KeySets.loadBloom(spark, s"$dir/idx", Dedup.ExactDupBloomKind)
+    assert(blob.blob.isDefined && params("n_items") == 8400000L
       && params("num_bits") > (1L << 26))
     // no false negatives on a corpus sample
     import spark.implicits._
     val sample = spark.range(0, 8400000L, 4201L)
       .select(col("id").as("doc_id"),
         concat(lit("bloom scale probe "), col("id").cast("string")).as("text"))
-    assert(Dedup.flagExactDupsBloom(sample, blob).filter(!col("exact_dup")).count() == 0)
+    assert(Dedup.flagExactDups(sample, blob).filter(!col("exact_dup")).count() == 0)
   }
 
   test("bandBloomIndex: superset of the literal near-dup gate, geometry rides, empty/foreign dumps") {
@@ -363,18 +363,19 @@ class ExtOpsSpec extends SparkSpec {
     val docs = Tables.load(spark, sf001, "documents")
     val dir = java.nio.file.Files.createTempDirectory("graft-bandbloom").toString
     Dedup.bandBloomIndexSave(docs, s"$dir/idx", n = 8, fpp = 0.01)
-    val (blob, n, h, r) = Dedup.bandBloomIndexLoad(spark, s"$dir/idx")
-    assert(blob.isDefined && n == 8 && h == 128 && r == 4)
+    val (blob, ps) = KeySets.loadBloom(spark, s"$dir/idx", Dedup.NearDupBloomKind)
+    val Seq(n, h, r) = Seq("n", "num_hashes", "rows_per_band").map(ps(_).toInt)
+    assert(blob.blob.isDefined && n == 8 && h == 128 && r == 4)
     // NO FALSE NEGATIVES vs the literal gate: on corpus docs + fresh
     // probes, every literal-flagged candidate must flag on the bloom face
-    val keys = Dedup.minhashBandKeys(docs, 8).collect().map(_.getLong(0)).toSeq
+    val keys = KeySets.Members(Dedup.minhashBandKeys(docs, 8).collect().map(_.getLong(0)).toSeq)
     val probe = docs.select(col("doc_id"), col("text")).unionByName(
       spark.range(2000).select((col("id") + 10000000L).as("doc_id"),
         concat(lit("fresh band bloom probe words never in any corpus row "),
           col("id").cast("string")).as("text")))
     val e = Dedup.flagNearDups(probe, keys, 8)
       .select(col("doc_id"), col("near_dup_candidate").as("e"))
-    val b = Dedup.flagNearDupsBloom(probe, blob, n, h, r)
+    val b = Dedup.flagNearDups(probe, blob, n, h, r)
       .select(col("doc_id"), col("near_dup_candidate").as("b"))
     val both = e.join(b, Seq("doc_id"))
     assert(both.filter(col("e") && !col("b")).count() == 0,
@@ -384,20 +385,20 @@ class ExtOpsSpec extends SparkSpec {
     val extra = freshOnly.filter(!col("e") && col("b")).count()
     assert(extra <= 2000 * 0.10, s"implausible bloom fp rate: $extra/2000")
     // null text → null flag (total pass)
-    val nulls = Dedup.flagNearDupsBloom(
+    val nulls = Dedup.flagNearDups(
       Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"), blob, n, h, r)
       .select(col("near_dup_candidate")).head()
     assert(nulls.isNullAt(0))
     // empty corpus → None blob → flags nothing
     Dedup.bandBloomIndexSave(docs.filter(lit(false)), s"$dir/empty", n = 8)
-    val (none, _, _, _) = Dedup.bandBloomIndexLoad(spark, s"$dir/empty")
-    assert(none.isEmpty)
-    assert(Dedup.flagNearDupsBloom(probe, none, 8)
+    val (none, _) = KeySets.loadBloom(spark, s"$dir/empty", Dedup.NearDupBloomKind)
+    assert(none.blob.isEmpty)
+    assert(Dedup.flagNearDups(probe, none, 8)
       .filter(col("near_dup_candidate")).count() == 0)
     // cross-family dumps must refuse to load as each other
-    intercept[Exception] { Dedup.fpBloomIndexLoad(spark, s"$dir/idx") }
+    intercept[Exception] { KeySets.loadBloom(spark, s"$dir/idx", Dedup.ExactDupBloomKind) }
     Dedup.fpBloomIndexSave(docs.limit(3), s"$dir/fp")
-    intercept[Exception] { Dedup.bandBloomIndexLoad(spark, s"$dir/fp") }
+    intercept[Exception] { KeySets.loadBloom(spark, s"$dir/fp", Dedup.NearDupBloomKind) }
     ()
   }
 
@@ -411,7 +412,7 @@ class ExtOpsSpec extends SparkSpec {
         .toDF("kind", "value").write.mode("overwrite").parquet(path)
     saveOld(s"$base/ok", "fam_a", Seq(7L, 9L))
     val (keys, params) = graft.core.KeySets.loadCollected(spark, s"$base/ok", "fam_a")
-    assert(keys.sorted == Seq(7L, 9L) && params == Map("n" -> 4L))
+    assert(keys.keys.sorted.toSeq == Seq(7L, 9L) && params == Map("n" -> 4L))
     // an EMPTY pre-tag dump proves nothing — refused
     saveOld(s"$base/empty", "fam_a", Seq.empty)
     intercept[IllegalArgumentException] {
@@ -444,7 +445,7 @@ class ExtOpsSpec extends SparkSpec {
     graft.core.KeySets.save(Seq.empty[Long].toDF("k"), path, "fam_a",
       Map("n" -> 4L))
     val (keys, params) = graft.core.KeySets.loadCollected(spark, path, "fam_a")
-    assert(keys.isEmpty && params == Map("n" -> 4L))
+    assert(keys.keys.isEmpty && params == Map("n" -> 4L))
     // a dump holding only param/family rows must NOT load as some OTHER
     // family's legitimately-empty blocklist (it would pass everything)
     val e = intercept[IllegalArgumentException] {
@@ -454,6 +455,7 @@ class ExtOpsSpec extends SparkSpec {
   }
 
   test("KeySets.loadCollected and bandIndexLoad read in 3 jobs: one kind summary, one key collect") {
+    // (the band dump's loader is KeySets.load with the band parameters)
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("ks-jobs").toString
     val corpus = (1L to 20L).map(i => (i, s"w$i a b c d e f")).toDF("doc_id", "text")
@@ -464,7 +466,8 @@ class ExtOpsSpec extends SparkSpec {
     // result job), one collect of the keys
     assert(Jobs.count(spark)(
       graft.core.KeySets.loadCollected(spark, s"$dir/fp", Dedup.ExactDupKind)) == 3)
-    assert(Jobs.count(spark)(Dedup.bandIndexLoad(spark, s"$dir/band")._1.collect()) == 3)
+    assert(Jobs.count(spark)(KeySets.load(spark, s"$dir/band", Dedup.NearDupKind,
+      Seq("n", "num_hashes", "rows_per_band"))._1.collect()) == 3)
   }
 
   test("shuffleOrder: dense and bucket paths emit the identical permutation") {
@@ -652,7 +655,7 @@ class ExtOpsSpec extends SparkSpec {
     // gate with an empty blocklist: nothing flags, null text stays null
     val g = TextAnalysis.flagContaminated(
       Seq((1L, "x y z"), (2L, null.asInstanceOf[String])).toDF("doc_id", "text"),
-      Seq.empty[Long], n = 3).collect()
+      KeySets.Members(Seq.empty[Long]), n = 3).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Any]("contaminated")).toMap
     assert(g(1L) == false && g(2L) == null)
     // samplers refuse nonsense instead of returning it
@@ -795,8 +798,8 @@ class ExtOpsSpec extends SparkSpec {
       (103L, text(900L)),          // fresh — no corpus partner
       (104L, null.asInstanceOf[String])) // null text → null flag
       .toDF("doc_id", "text")
-    val bandKeys = Dedup.minhashBandKeys(corpus, n = 3)
-      .collect().map(_.getLong(0)).toSeq
+    val bandKeys = KeySets.Members(Dedup.minhashBandKeys(corpus, n = 3)
+      .collect().map(_.getLong(0)).toSeq)
     val out = Dedup.flagNearDups(incoming, bandKeys, n = 3).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         Option(r.getAs[java.lang.Boolean]("near_dup_candidate"))).toMap
@@ -838,7 +841,7 @@ class ExtOpsSpec extends SparkSpec {
       .map(r => r.getAs[Long]("doc_id") ->
         Option(r.getAs[java.lang.Boolean]("near_dup_candidate"))).toMap
     val viaLit = flags(Dedup.flagNearDups(incoming,
-      keysDf.collect().map(_.getLong(0)).toSeq, n = 3))
+      KeySets.Members(keysDf.collect().map(_.getLong(0)).toSeq), n = 3))
     val viaJoin = flags(Dedup.flagNearDupsAgainst(incoming, keysDf, n = 3))
     assert(viaJoin == viaLit, s"join form diverged: $viaJoin vs $viaLit")
     // non-divisible banding config fails fast on BOTH halves of the gate
@@ -846,7 +849,7 @@ class ExtOpsSpec extends SparkSpec {
       Dedup.minhashBandKeys(corpus, n = 3, numHashes = 128, rowsPerBand = 5)
     }
     intercept[IllegalArgumentException] {
-      Dedup.flagNearDups(incoming, Seq(1L), n = 3, numHashes = 128, rowsPerBand = 5)
+      Dedup.flagNearDups(incoming, KeySets.Members(Seq(1L)), n = 3, numHashes = 128, rowsPerBand = 5)
     }
     intercept[IllegalArgumentException] {
       Dedup.flagNearDupsAgainst(incoming, keysDf, n = 3, numHashes = 128, rowsPerBand = 5)
@@ -1552,7 +1555,7 @@ class ExtOpsSpec extends SparkSpec {
     Multimodal.dHashIndexSave(Seq(Tuple1(a)).toDF("payload"), dir)
     val (hashes, _) = graft.core.KeySets.loadCollected(spark, dir,
       Multimodal.DHashKind)
-    assert(hashes.size == 1)
+    assert(hashes.keys.size == 1)
     val flagged = Multimodal.flagPerceptualDup(
       Seq((1L, a.clone()), (2L, far), (3L, Multimodal.SampleHeaders.png))
         .toDF("media_id", "payload"), hashes)
@@ -1580,7 +1583,7 @@ class ExtOpsSpec extends SparkSpec {
     Multimodal.wavFpIndexSave(Seq(Tuple1(wav(clip))).toDF("payload"), dir)
     val (hashes, _) = graft.core.KeySets.loadCollected(spark, dir,
       Multimodal.WavFpKind)
-    assert(hashes.size == 1)
+    assert(hashes.keys.size == 1)
     // copy AND gain re-master flag (identical fingerprint); fresh clip
     // passes; undecodable (png header) gets a null flag (total pass)
     val flagged = Multimodal.flagAudioDup(
@@ -1617,10 +1620,10 @@ class ExtOpsSpec extends SparkSpec {
     val corpus = (0 until 300).map(s => Tuple1(pgm(18, 16)(
       (x, y) => (x * (s + 3) + y * 5) % 230))).toDF("payload")
     Multimodal.dHashBloomIndexSave(corpus, s"$dir/img", fpp = 0.01)
-    val imgBlob = Multimodal.hashBloomIndexLoad(spark, s"$dir/img",
+    val (imgBlob, _) = KeySets.loadBloom(spark, s"$dir/img",
       Multimodal.DHashBloomKind)
-    assert(imgBlob.isDefined)
-    val onCorpus = Multimodal.flagPerceptualDupBloom(corpus, imgBlob)
+    assert(imgBlob.blob.isDefined)
+    val onCorpus = Multimodal.flagPerceptualDup(corpus, imgBlob)
     assert(onCorpus.filter(!col("perceptual_dup")).count() == 0,
       "bloom face may never miss an indexed image")
     // superset of the literal gate + undecodable → null
@@ -1633,7 +1636,7 @@ class ExtOpsSpec extends SparkSpec {
       (3L, Multimodal.SampleHeaders.png)).toDF("media_id", "payload")
     val both = Multimodal.flagPerceptualDup(probe, lits)
       .withColumnRenamed("perceptual_dup", "e")
-      .join(Multimodal.flagPerceptualDupBloom(probe, imgBlob)
+      .join(Multimodal.flagPerceptualDup(probe, imgBlob)
         .select(col("media_id"), col("perceptual_dup").as("b")), Seq("media_id"))
     assert(both.filter(col("e") && !col("b")).count() == 0)
     assert(both.filter(col("media_id") === 3L).head().isNullAt(2)) // null flag
@@ -1641,9 +1644,9 @@ class ExtOpsSpec extends SparkSpec {
     val clip = Array.tabulate(260)(i => ((i * 37) % 400 - 200).toShort)
     Multimodal.wavFpBloomIndexSave(Seq(Tuple1(wav(clip))).toDF("payload"),
       s"$dir/aud", fpp = 0.001)
-    val audBlob = Multimodal.hashBloomIndexLoad(spark, s"$dir/aud",
+    val (audBlob, _) = KeySets.loadBloom(spark, s"$dir/aud",
       Multimodal.WavFpBloomKind)
-    val audFlags = Multimodal.flagAudioDupBloom(
+    val audFlags = Multimodal.flagAudioDup(
       Seq((1L, wav(clip.map(s => (s * 2).toShort))),
         (2L, wav(Array.tabulate(260)(i => (((259 - i) * 53) % 300 - 150).toShort))),
         (3L, Multimodal.SampleHeaders.png)).toDF("media_id", "payload"), audBlob)
@@ -1652,16 +1655,16 @@ class ExtOpsSpec extends SparkSpec {
     assert(audFlags == Map(1L -> true, 2L -> false, 3L -> null))
     // empty corpus → None → flags nothing; foreign kinds refuse to load
     Multimodal.dHashBloomIndexSave(corpus.filter(lit(false)), s"$dir/empty")
-    val none = Multimodal.hashBloomIndexLoad(spark, s"$dir/empty",
+    val (none, _) = KeySets.loadBloom(spark, s"$dir/empty",
       Multimodal.DHashBloomKind)
-    assert(none.isEmpty)
-    assert(Multimodal.flagPerceptualDupBloom(probe, none)
+    assert(none.blob.isEmpty)
+    assert(Multimodal.flagPerceptualDup(probe, none)
       .filter(col("perceptual_dup")).count() == 0)
     intercept[IllegalArgumentException] {
-      Multimodal.hashBloomIndexLoad(spark, s"$dir/img", Multimodal.WavFpBloomKind)
+      KeySets.loadBloom(spark, s"$dir/img", Multimodal.WavFpBloomKind)
     }
     intercept[IllegalArgumentException] {
-      Multimodal.hashBloomIndexLoad(spark, s"$dir/img", Multimodal.DHashKind)
+      KeySets.loadBloom(spark, s"$dir/img", Multimodal.DHashKind)
     }
     ()
   }
@@ -1971,7 +1974,7 @@ class ExtOpsSpec extends SparkSpec {
       (6L, Some("http://safe.net/a https://evil.test/b"))  // second URL blocked
     ).toDF("doc_id", "text")
     val bl = Seq("Example.com", "evil.test").toDF("domain")
-    val keys = TextAnalysis.blockedDomainKeys(bl).collect().map(_.getLong(0)).toSeq
+    val keys = KeySets.Members(TextAnalysis.blockedDomainKeys(bl).collect().map(_.getLong(0)).toSeq)
     val out = TextAnalysis.flagBlockedDomains(docs, keys).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         Option(r.getAs[java.lang.Boolean]("blocked_domain"))).toMap

@@ -87,7 +87,7 @@ class PlanSpec extends SparkSpec {
         "wavEnergyFp" -> media.select(
           graft.functions.PerceptualHashFns.wavEnergyFp(col("payload"))),
         "flagPerceptualDup" -> graft.ext.Multimodal.flagPerceptualDup(
-          media, Seq(1L, 2L, 3L)),
+          media, graft.core.KeySets.Members(Seq(1L, 2L, 3L))),
         "chunkDocumentsStage" -> graft.ext.Sharding.chunkDocuments(
           docs, 64, 16, carryInput = true),
         "fimTransformStage" -> graft.ext.Sharding.fimTransform(

@@ -804,7 +804,9 @@ class SpecSpec extends SparkSpec {
     corpus.write.parquet(corpusPath)
     graft.ext.Dedup.bandIndexSave(corpus, indexPath, n = 3)
     // the index round-trips its geometry and exactly the built key set
-    val (keys, n, h, r) = graft.ext.Dedup.bandIndexLoad(spark, indexPath)
+    val (keys, ps) = graft.core.KeySets.load(spark, indexPath,
+      graft.ext.Dedup.NearDupKind, Seq("n", "num_hashes", "rows_per_band"))
+    val (n, h, r) = (ps("n"), ps("num_hashes"), ps("rows_per_band"))
     assert((n, h, r) == ((3, 128, 4)))
     val direct = graft.ext.Dedup.minhashBandKeys(corpus, 3)
       .collect().map(_.getLong(0)).toSet

@@ -100,8 +100,8 @@ class StreamOpsSpec extends SparkSpec {
     def text(i: Long, last: String = "omega") =
       (1 to 11).map(t => s"w${i}_$t").mkString(" ") + " " + last
     val corpus = (1L to 10L).map(i => (i, text(i))).toDF("doc_id", "text")
-    val bandKeys = graft.ext.Dedup.minhashBandKeys(corpus, n = 3)
-      .collect().map(_.getLong(0)).toSeq
+    val bandKeys = graft.core.KeySets.Members(graft.ext.Dedup.minhashBandKeys(corpus, n = 3)
+      .collect().map(_.getLong(0)).toSeq)
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
     val gated = graft.ext.Dedup.flagNearDups(docs, bandKeys, n = 3)
@@ -126,8 +126,8 @@ class StreamOpsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val s5 = (1 to 5).map(i => s"s$i").mkString(" ")
     val bench = Seq((1L, s"intro $s5 outro")).toDF("doc_id", "text")
-    val keys = graft.ext.TextAnalysis.benchGramKeys(bench, n = 3)
-      .collect().map(_.getLong(0)).toSeq
+    val keys = graft.core.KeySets.Members(graft.ext.TextAnalysis.benchGramKeys(bench, n = 3)
+      .collect().map(_.getLong(0)).toSeq)
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
     val gated = graft.ext.TextAnalysis.flagContaminated(docs, keys, n = 3)

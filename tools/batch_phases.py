@@ -14,6 +14,18 @@ prints one row, then the median of every column over those batches:
   deser, deser_cpu, run, run_cpu
                  per-task executor deserialize and run time, wall and CPU
                  (the median over the batch's tasks)
+  list_tasks, list_ms
+                 Spark's parallel leaf-file listing jobs in the batch: their
+                 tasks, and submission to completion summed over the jobs
+
+A job belongs to the batch whose trigger window (the progress `timestamp`
+to `timestamp` + `triggerExecution`) holds its submission. The job's own
+`streaming.sql.batchId` property is not used: a job submitted before the
+batch sets it, such as the listing `InMemoryFileIndex` runs in `getBatch`
+when a batch holds more than
+`spark.sql.sources.parallelPartitionDiscovery.threshold` (32) files,
+carries the previous batch's id. Listing jobs (job description
+"Listing leaf files ...") are kept out of the other task columns.
 
 All times are milliseconds. The log must be uncompressed JSON lines; record
 one with
@@ -26,12 +38,20 @@ import json
 import os
 import statistics
 import sys
+from datetime import datetime, timezone
 
 PROGRESS = "org.apache.spark.sql.streaming.StreamingQueryListener$QueryProgressEvent"
 SQL_START = "org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart"
 PHASES = ["latestOffset", "getBatch", "queryPlanning", "addBatch"]
 COLUMNS = PHASES + ["sql_to_job", "submit_to_task", "tasks", "span",
-                    "deser", "deser_cpu", "run", "run_cpu"]
+                    "deser", "deser_cpu", "run", "run_cpu", "list_tasks", "list_ms"]
+LISTING = "Listing leaf files"
+
+
+def epoch_ms(timestamp):
+    """Milliseconds since the epoch of a progress `timestamp` (UTC, ISO 8601)."""
+    t = datetime.strptime(timestamp, "%Y-%m-%dT%H:%M:%S.%fZ")
+    return round(t.replace(tzinfo=timezone.utc).timestamp() * 1000)
 
 
 def log_files(path):
@@ -61,9 +81,10 @@ def batches(events):
     """[(batch id, rows, {column: value})] for the non-empty micro-batches,
     in log order."""
     sql_start = {}       # execution id -> start time
-    jobs = {}            # job id -> (batch key, submission time, execution id)
+    jobs = {}            # job id -> (query id, submission time, execution id, listing?)
+    ends = {}            # job id -> completion time
     stage_job = {}       # stage id -> job id
-    tasks = {}           # batch key -> [task end event]
+    tasks = {}           # job id -> [task end event]
     progress = []
     for e in events:
         kind = e.get("Event")
@@ -71,19 +92,21 @@ def batches(events):
             sql_start[e["executionId"]] = e["time"]
         elif kind == "SparkListenerJobStart":
             props = e.get("Properties") or {}
-            batch = props.get("streaming.sql.batchId")
             query = props.get("sql.streaming.queryId")
-            if batch is None:
+            if query is None:
                 continue
             exec_id = props.get("spark.sql.execution.id")
-            jobs[e["Job ID"]] = ((query, int(batch)), e["Submission Time"],
-                                 int(exec_id) if exec_id is not None else None)
+            listing = (props.get("spark.job.description") or "").startswith(LISTING)
+            jobs[e["Job ID"]] = (query, e["Submission Time"],
+                                 int(exec_id) if exec_id is not None else None, listing)
             for s in e.get("Stage IDs", []):
                 stage_job[s] = e["Job ID"]
+        elif kind == "SparkListenerJobEnd":
+            ends[e["Job ID"]] = e["Completion Time"]
         elif kind == "SparkListenerTaskEnd":
             job = stage_job.get(e["Stage ID"])
             if job is not None:
-                tasks.setdefault(jobs[job][0], []).append(e)
+                tasks.setdefault(job, []).append(e)
         elif kind == PROGRESS:
             progress.append(e["progress"])
     out = []
@@ -92,11 +115,18 @@ def batches(events):
         rows = sum(src.get("numInputRows", 0) for src in p.get("sources", []))
         if rows <= 0:
             continue
-        key = (p["id"], p["batchId"])
-        row = {ph: p.get("durationMs", {}).get(ph) for ph in PHASES}
-        own = sorted(((sub, ex, j) for j, (k, sub, ex) in jobs.items() if k == key),
+        durations = p.get("durationMs", {})
+        start = epoch_ms(p["timestamp"])
+        end = start + durations["triggerExecution"]
+        mine = [j for j, (q, sub, _, _) in jobs.items() if q == p["id"] and start <= sub <= end]
+        row = {ph: durations.get(ph) for ph in PHASES}
+        listings = [j for j in mine if jobs[j][3]]
+        if listings:
+            row["list_tasks"] = sum(len(tasks.get(j, [])) for j in listings)
+            row["list_ms"] = sum(ends[j] - jobs[j][1] for j in listings if j in ends)
+        own = sorted(((jobs[j][1], jobs[j][2], j) for j in mine if not jobs[j][3]),
                      key=lambda t: (t[0], t[2]))
-        ts = tasks.get(key, [])
+        ts = [t for _, _, j in own for t in tasks.get(j, [])]
         if own:
             sub, ex, first = own[0]
             starts = [sql_start[x] for _, x, _ in own if x in sql_start]

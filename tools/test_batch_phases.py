@@ -17,12 +17,17 @@ import batch_phases  # noqa: E402
 QUERY = "q-1"
 
 
-def job_start(job, batch, execution, submitted, stages):
+def job_start(job, batch, execution, submitted, stages, description=None):
+    props = {"streaming.sql.batchId": str(batch), "sql.streaming.queryId": QUERY,
+             "spark.sql.execution.id": str(execution)}
+    if description is not None:
+        props["spark.job.description"] = description
     return {"Event": "SparkListenerJobStart", "Job ID": job, "Submission Time": submitted,
-            "Stage IDs": stages,
-            "Properties": {"streaming.sql.batchId": str(batch),
-                           "sql.streaming.queryId": QUERY,
-                           "spark.sql.execution.id": str(execution)}}
+            "Stage IDs": stages, "Properties": props}
+
+
+def job_end(job, completed):
+    return {"Event": "SparkListenerJobEnd", "Job ID": job, "Completion Time": completed}
 
 
 def task_end(stage, launch, finish, deser, deser_cpu_ns, run, run_cpu_ns):
@@ -33,12 +38,18 @@ def task_end(stage, launch, finish, deser, deser_cpu_ns, run, run_cpu_ns):
                              "Executor Run Time": run, "Executor CPU Time": run_cpu_ns}}
 
 
-def progress(batch, rows, added):
+def iso(ms):
+    """A progress `timestamp` for `ms` milliseconds after the epoch."""
+    return f"1970-01-01T00:00:{ms // 1000:02d}.{ms % 1000:03d}Z"
+
+
+def progress(batch, rows, added, start, trigger):
     return {"Event": batch_phases.PROGRESS,
-            "progress": {"id": QUERY, "batchId": batch,
+            "progress": {"id": QUERY, "batchId": batch, "timestamp": iso(start),
                          "sources": [{"numInputRows": rows}],
                          "durationMs": {"latestOffset": 5, "getBatch": 2,
-                                        "queryPlanning": 10, "addBatch": added}}}
+                                        "queryPlanning": 10, "addBatch": added,
+                                        "triggerExecution": trigger}}}
 
 
 EVENTS = [
@@ -51,17 +62,24 @@ EVENTS = [
     job_start(1, 0, 7, 1060, [1]),
     task_end(1, 1085, 1150, 30, 20_000_000, 35, 25_000_000),
     task_end(1, 1090, 1160, 28, 18_000_000, 40, 30_000_000),
-    progress(0, 4, 170),
+    progress(0, 4, 170, 990, 200),
     # batch 1: empty, skipped
-    progress(1, 0, 0),
+    progress(1, 0, 0, 1500, 10),
     # batch 2: two jobs; the first submitted one is the phase reference
     {"Event": batch_phases.SQL_START, "executionId": 9, "time": 2000},
+    # ... and, in its getBatch, a leaf-file listing job that still carries
+    # batch 0's id: it is batch 2's, in its own columns
+    job_start(4, 0, 9, 2010, [4], "Listing leaf files and directories for 59 paths:<br/>/s/a"),
+    task_end(4, 2012, 2030, 5, 4_000_000, 10, 9_000_000),
+    task_end(4, 2013, 2040, 5, 4_000_000, 20, 9_000_000),
+    task_end(4, 2014, 2050, 5, 4_000_000, 30, 9_000_000),
+    job_end(4, 2055),
     job_start(3, 2, 9, 2070, [3]),
     job_start(2, 2, 9, 2064, [2]),
     task_end(2, 2090, 2120, 32, 30_000_000, 10, 8_000_000),
     task_end(3, 2100, 2140, 31, 29_000_000, 20, 15_000_000),
     task_end(3, 2101, 2150, 29, 27_000_000, 30, 20_000_000),
-    progress(2, 3, 190),
+    progress(2, 3, 190, 1995, 200),
 ]
 
 
@@ -84,6 +102,15 @@ class BatchPhasesTest(unittest.TestCase):
         self.assertEqual(r2["tasks"], 3)
         self.assertEqual(r2["span"], 60)
         self.assertEqual(r2["deser"], 31)
+        self.assertNotIn("list_tasks", r0)
+
+    def test_listing_job_credited_by_trigger_window(self):
+        rows = dict((b, r) for b, _, r in batch_phases.batches(EVENTS))
+        self.assertEqual(rows[0]["tasks"], 2)
+        self.assertEqual(rows[2]["list_tasks"], 3)
+        self.assertEqual(rows[2]["list_ms"], 45)
+        self.assertEqual(rows[2]["tasks"], 3)
+        self.assertEqual(rows[2]["span"], 60)
 
     def test_medians_and_output(self):
         with tempfile.TemporaryDirectory() as d:
@@ -105,6 +132,7 @@ class BatchPhasesTest(unittest.TestCase):
         self.assertEqual(median["addBatch"], "180")
         self.assertEqual(median["sql_to_job"], "62")
         self.assertEqual(median["tasks"], "2.5")
+        self.assertEqual(median["list_tasks"], "3")
 
 
 if __name__ == "__main__":
