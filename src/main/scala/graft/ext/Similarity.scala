@@ -42,6 +42,20 @@ object Similarity {
     * cannot overflow). */
   def intDot(a: Column, b: Column): Column = ArrayMath.dotLong(a, b)
 
+  /** `id` plus the fixed-point view of `vecCol` as `x` and its exact
+    * squared norm as `n2` — one side of an exact scoring pass. */
+  private def fixedPoint(df: DataFrame, id: Column, vecCol: String,
+      x: String, n2: String): DataFrame =
+    df.select(id, fixedPointVec(col(vecCol)).as(x)).withColumn(n2, intDot(col(x), col(x)))
+
+  /** The exact family's one cosine: `dot / (√n2a·√n2b)` in double over
+    * the fixed-point integer `dot` and squared norms, 0.0 when either
+    * norm is 0 — every step deterministic and engine-portable, so every
+    * operator scoring with it agrees bit for bit with [[exactCosinePairs]]. */
+  private def fpCosine(dot: Column, n2a: Column, n2b: Column): Column =
+    when(n2a === 0 || n2b === 0, lit(0.0)).otherwise(
+      dot.cast(DoubleType) / (sqrt(n2a.cast(DoubleType)) * sqrt(n2b.cast(DoubleType))))
+
   /** Exact cosine for every (query, base) pair: fixed-point arrays built
     * once per row, query side broadcast, per-pair integer dot + norms via
     * codegen'd map-side loops. cosine = dot / (√n2q·√n2b) in double — every
@@ -51,16 +65,10 @@ object Similarity {
     * query sets or verified-exact workloads. */
   def exactCosinePairs(queries: DataFrame, base: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("qid"), fixedPointVec(col(vecCol)).as("qx"))
-      .withColumn("qn2", intDot(col("qx"), col("qx")))
-    val b = graft.core.Tables.spread(base)
-      .select(col(idCol).as("vid"), fixedPointVec(col(vecCol)).as("bx"))
-      .withColumn("bn2", intDot(col("bx"), col("bx")))
+    val q = fixedPoint(queries, col(idCol).as("qid"), vecCol, "qx", "qn2")
+    val b = fixedPoint(graft.core.Tables.spread(base), col(idCol).as("vid"), vecCol, "bx", "bn2")
     broadcast(q).crossJoin(b)
-      .withColumn("cosine",
-        when(col("qn2") === 0 || col("bn2") === 0, lit(0.0)).otherwise(
-          intDot(col("qx"), col("bx")).cast(DoubleType) /
-            (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("bn2").cast(DoubleType)))))
+      .withColumn("cosine", fpCosine(intDot(col("qx"), col("bx")), col("qn2"), col("bn2")))
       .select(col("qid"), col("vid"), col("cosine"))
   }
 
@@ -86,16 +94,10 @@ object Similarity {
   def semanticContamination(corpus: DataFrame, bench: DataFrame,
       minCosine: Double, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val b = bench.select(col(idCol).as("bid"), fixedPointVec(col(vecCol)).as("bx"))
-      .withColumn("bn2", intDot(col("bx"), col("bx")))
-    val c = graft.core.Tables.spread(corpus)
-      .select(col(idCol), fixedPointVec(col(vecCol)).as("cx"))
-      .withColumn("cn2", intDot(col("cx"), col("cx")))
-    val cos = when(col("cn2") === 0 || col("bn2") === 0, lit(0.0)).otherwise(
-      intDot(col("cx"), col("bx")).cast(DoubleType) /
-        (sqrt(col("cn2").cast(DoubleType)) * sqrt(col("bn2").cast(DoubleType))))
+    val b = fixedPoint(bench, col(idCol).as("bid"), vecCol, "bx", "bn2")
+    val c = fixedPoint(graft.core.Tables.spread(corpus), col(idCol), vecCol, "cx", "cn2")
     c.crossJoin(broadcast(b))
-      .withColumn("cos", cos)
+      .withColumn("cos", fpCosine(intDot(col("cx"), col("bx")), col("cn2"), col("bn2")))
       .filter(col("cos") >= minCosine)
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_close"), max(col("cos")).as("max_cos"))
@@ -153,13 +155,16 @@ object Similarity {
   /** Brute-force exact top-k neighbors per query (self-match excluded),
     * deterministic tie-break on vid. */
   def bruteForceTopK(queries: DataFrame, base: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    exactCosinePairs(queries, base, idCol, vecCol)
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("rk", row_number().over(w))
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(exactCosinePairs(queries, base, idCol, vecCol)
+      .filter(col("qid") =!= col("vid")), k)
+
+  /** The family's one top-k cut: `rk` = row_number per `qid` by
+    * (cosine desc, vid) — deterministic ties — kept while ≤ k. */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))))
       .filter(col("rk") <= k)
-  }
 
   /** Single-pass double cosine between two vector columns (fast path, not
     * cross-engine exact): codegen'd three-accumulator loop, bit-identical
@@ -191,17 +196,6 @@ object Similarity {
           lit(minRecall) * col("n_exact").cast(DoubleType))
           .cast(IntegerType).as("recall_ok"))
 
-  /** LSH-bucketed approximate top-k: queries and base are bucketed by
-    * sign-random-projection codes over `bands` independent codes of
-    * `planesPerBand` bits; candidates share any (band, code); exact
-    * fold-cosine re-ranks. The ±1 hyperplane coefficients are drawn from a
-    * keyed xxhash64 family — deterministic and seedless; they fold to
-    * constants on the driver (no Spark job) and embed as literals, so the
-    * per-row work is a plain multiply-add fold, not hashing. Recall
-    * rises with bands, candidate volume with 2^-planesPerBand; the defaults
-    * suit weakly-clustered data (recall ≈ 0.5 at cos 0.4) — corpora with
-    * real duplicate clusters (cos ≥ 0.8) get recall ≈ 1 from the same
-    * settings. */
   /** ±1 SRP hyperplane coefficients from the keyed xxhash64 family
     * ("srp", plane, component) — deterministic and seedless; evaluated on
     * the DRIVER by folding the same literal xxhash64 expression Catalyst
@@ -229,52 +223,44 @@ object Similarity {
     graft.functions.SrpCodes.bandCodes(vec, coefs.flatten, planesPerBand,
       bands, if (coefs.isEmpty) 1 else coefs(0).length)
 
+  /** LSH-bucketed approximate top-k: queries and base are bucketed by
+    * sign-random-projection codes over `bands` independent codes of
+    * `planesPerBand` bits ([[srpCoefs]]); candidates share any
+    * (band, code) ([[srpCandidates]]); exact fold-cosine re-ranks. Recall
+    * rises with bands, candidate volume with 2^-planesPerBand; the
+    * defaults suit weakly-clustered data (recall ≈ 0.5 at cos 0.4) —
+    * corpora with real duplicate clusters (cos ≥ 0.8) get recall ≈ 1 from
+    * the same settings. */
   def annLshTopK(queries: DataFrame, base: DataFrame, k: Int,
       planesPerBand: Int = 6, bands: Int = 12, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val coefs = srpCoefs(bands * planesPerBand, dims)
-
-    def banded(df: DataFrame, id: String, as: String): DataFrame = {
-      val codes = srpCodes(col(vecCol), coefs, planesPerBand, bands)
-      df.select(col(id), posexplode(codes).as(Seq("band", "code")))
-        .select(col("band"), col("code"), col(id).as(as))
-    }
-    // The band join carries IDS ONLY: a base vector surfaces in `bands`
-    // code rows, so letting the vector ride the band shuffle multiplies
-    // corpus bytes by `bands` (~20× at 64 dims vs a 16-byte id row). The
-    // slim (qid, vid) stream dedups first — then ONE corpus-sized join
-    // attaches each vector exactly once, per side.
-    // shuffle_hash with the QUERY side as build: queries are the smaller
-    // side but a forced broadcast would hard-fail past the broadcast limit
-    // for large query sets — a per-partition hash build has neither
-    // problem, and the pin keeps the estimator from ever broadcasting the
-    // corpus-sized base Generate.
     // spread: a small parquet source arrives in one partition, and the
     // 72-dot banding pass must use every core
     val b = graft.core.Tables.spread(base)
-    val cand = banded(queries, idCol, "qid").hint("shuffle_hash")
-      .join(banded(b, idCol, "vid"), Seq("band", "code"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"))
-      .distinct()
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    cand
+    // the slim (qid, vid) candidate stream dedups first — then ONE
+    // corpus-sized join attaches each vector exactly once, per side
+    // (shuffle_hash: a forced broadcast would hard-fail past the
+    // broadcast limit for large query sets)
+    rankTopK(srpCandidates(queries, b, planesPerBand, bands, dims, idCol, vecCol)
       .join(b.select(col(idCol).as("vid"), col(vecCol).as("bv"))
         .hint("shuffle_hash"), Seq("vid"))
       .join(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
         .hint("shuffle_hash"), Seq("qid"))
-      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine")), k)
   }
 
-  /** The candidate stage of [[annLshTopK]] — band, join, dedup — emitting
-    * the (qid, vid) pairs that co-bucket in any (band, code), WITHOUT any
-    * scoring: shared machinery for [[srpRecallBand]], which scores the
-    * candidates from the exact dual's own hub instead of re-folding
-    * cosines (the [[ivfCandidates]] twin for the SRP family). Same
-    * shuffle_hash pin rationale as [[annLshTopK]]: the banded sides sit
-    * behind Generates the estimator cannot size. */
+  /** The candidate stage of SRP-LSH — band, join, dedup — emitting the
+    * (qid, vid) pairs that co-bucket in any (band, code), WITHOUT any
+    * scoring; `base` comes spread ([[graft.core.Tables.spread]]). Shared
+    * by [[annLshTopK]] and [[srpRecallBand]].
+    *
+    * The band join carries IDS ONLY: a base vector surfaces in `bands`
+    * code rows, so letting the vector ride the band shuffle multiplies
+    * corpus bytes by `bands` (~20× at 64 dims vs a 16-byte id row).
+    * shuffle_hash with the QUERY side as build: queries are the smaller
+    * side, a per-partition hash build cannot fail past the broadcast
+    * limit, and the pin keeps the estimator from ever broadcasting the
+    * corpus-sized base Generate it cannot size. */
   private def srpCandidates(queries: DataFrame, base: DataFrame,
       planesPerBand: Int, bands: Int, dims: Int,
       idCol: String, vecCol: String): DataFrame = {
@@ -285,39 +271,50 @@ object Similarity {
         .select(col("band"), col("code"), col(idCol).as(as))
     }
     banded(queries, "qid").hint("shuffle_hash")
-      .join(banded(graft.core.Tables.spread(base), "vid"), Seq("band", "code"))
+      .join(banded(base, "vid"), Seq("band", "code"))
       .filter(col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"))
       .distinct()
   }
 
   /** [[topKRecallBand]] over [[annLshTopK]] with the exact dual SHARED —
-    * the driver-visible gate for SRP-LSH (q42), priced like
-    * [[ivfRecallBand]]/[[pqRecallBand]]: the [[exactCosinePairs]] hub
-    * persists once (pre-partitioned on qid — both window consumers read
-    * the cached partitioning with no further exchange) and serves BOTH
-    * the exact top-k side of the band and the ANN side's ranking — the
-    * band-join candidates fetch their scores from the hub instead of
-    * re-folding |cand| cosines through two vector joins (deterministic
-    * either way; the hub's scoring IS the dual's). Gate machinery only:
-    * the candidate broadcast is bounded by the gate's validation-scale
-    * contract like the hub itself; the standalone [[annLshTopK]] serving
-    * path never builds either. Hub released via
-    * [[graft.core.Caches.unpersistAll]]. */
+    * the driver-visible gate for SRP-LSH (q42), the [[sharedDualBand]]
+    * over [[srpCandidates]]. */
   def srpRecallBand(queries: DataFrame, base: DataFrame, k: Int,
       minRecall: Double, planesPerBand: Int = 6, bands: Int = 12,
       dims: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    sharedDualBand(queries, base, k, minRecall, idCol, vecCol)(
+      srpCandidates(queries, graft.core.Tables.spread(base), planesPerBand, bands,
+        dims, idCol, vecCol))
+
+  /** A recall band whose exact dual is SHARED: the [[exactCosinePairs]]
+    * hub persists once, pre-partitioned on qid (InMemoryRelation keeps the
+    * cached plan's outputPartitioning, so both window consumers read it
+    * with no further exchange), and serves BOTH sides of
+    * [[topKRecallBand]] — the exact top-k, and the ANN side, whose
+    * (qid, vid) `candidates` take their scores from the hub instead of
+    * re-scoring vectors (deterministic either way; the hub's fixed-point
+    * cosine IS the dual's scoring). The hub materializes CONCURRENTLY with
+    * the candidate build (an index trainer's collect): two independent
+    * jobs, so the gate pays max(hub, trainer) wall-clock, not the sum;
+    * a failure surfaces on the join. Gate machinery only: the candidate
+    * broadcast is bounded by the gate's validation-scale contract like the
+    * hub itself (|Q|·|B|); the standalone top-k operators never build
+    * either. Hub released via [[graft.core.Caches.unpersistAll]]. */
+  private def sharedDualBand(queries: DataFrame, base: DataFrame, k: Int,
+      minRecall: Double, idCol: String, vecCol: String)(
+      candidates: => DataFrame): DataFrame = {
     val pairs = graft.core.Caches.persist(
       exactCosinePairs(queries, base, idCol, vecCol)
         .filter(col("qid") =!= col("vid"))
         .repartition(col("qid")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    val exact = pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    val cand = srpCandidates(queries, base, planesPerBand, bands, dims, idCol, vecCol)
-    val ann = pairs.join(broadcast(cand), Seq("qid", "vid"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    topKRecallBand(ann, exact, minRecall)
+    val hubWarm = java.util.concurrent.CompletableFuture.runAsync(() => { pairs.count(); () })
+    val cand =
+      try candidates.select(col("qid"), col("vid"))
+      finally hubWarm.join()
+    topKRecallBand(rankTopK(pairs.join(broadcast(cand), Seq("qid", "vid")), k),
+      rankTopK(pairs, k), minRecall)
   }
 
   /** LSH-bucketed embedding near-dup PAIRS — the thresholded-pairs scale
@@ -416,29 +413,15 @@ object Similarity {
       .map(_.toLong).getOrElse(1L << 17)
     val dense = auto && n <= denseMax
 
-    // 1. exact-copy collapse on the raw vector (null vectors excluded: the
-    // all-pairs dual never scores them either).
-    val g0 = graft.core.Tables.spread(base)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("vid0"), col(vecCol).as("v"))
-      .groupBy(col("v"))
-      .agg(sort_array(collect_list(col("vid0"))).as("members"),
-        min(col("vid0")).as("rep"), count(lit(1)).as("gsize"))
-      .withColumn("x", fixedPointVec(col("v")))
-      .withColumn("n2", intDot(col("x"), col("x")))
+    // 1. exact-copy collapse on the raw vector
+    val g0 = copyGroups(base, idCol, vecCol)
     // self-cosine exactly as the all-pairs dual computes it for an
-    // identical pair: dot/(√n2·√n2) — NOT lit(1.0); sqrt(x)*sqrt(x) can
-    // differ from x in the last ulp, and the dual's score is the contract.
-    val wcos = when(col("n2") === 0, lit(0.0)).otherwise(
-      col("n2").cast(DoubleType) /
-        (sqrt(col("n2").cast(DoubleType)) * sqrt(col("n2").cast(DoubleType))))
+    // identical pair: dot/(√n2·√n2) — NOT lit(1.0); √x·√x can differ
+    // from x in the last ulp, and the dual's score is the contract.
+    val wcos = fpCosine(col("n2"), col("n2"), col("n2"))
     // expansion side: corpus-vector-free (see Dedup.slimGroups rationale)
     val groups = graft.core.Caches.persist(
       g0.select(col("rep"), col("members"), wcos.as("wcos")))
-
-    val pairCos = when(col("n2i") === 0 || col("n2j") === 0, lit(0.0)).otherwise(
-      intDot(col("xi"), col("xj")).cast(DoubleType) /
-        (sqrt(col("n2i").cast(DoubleType)) * sqrt(col("n2j").cast(DoubleType))))
 
     val verified = if (dense) {
       notePairsPath("dense")
@@ -448,14 +431,9 @@ object Similarity {
       // threshold filter runs inside the scan so only true pairs surface.
       val slim = graft.core.Caches.persist(
         g0.select(col("rep"), col("x"), col("n2")))
-      broadcast(slim.select(col("rep").as("i"), col("x").as("xi"),
-          col("n2").as("n2i")))
-        .crossJoin(slim.select(col("rep").as("j"), col("x").as("xj"),
-          col("n2").as("n2j")))
-        .filter(col("i") < col("j"))
-        .withColumn("cosine", pairCos)
-        .filter(col("cosine") >= minCosine)
-        .select(col("i"), col("j"), col("cosine"))
+      verifyPairs(broadcast(pairSide(slim, "rep", "i"))
+        .crossJoin(pairSide(slim, "rep", "j"))
+        .filter(col("i") < col("j")), minCosine)
     } else {
       notePairsPath("banded")
       val (p, b) =
@@ -530,23 +508,59 @@ object Similarity {
       val repsEst = if (auto) n else graft.core.Caches.memo(hub, "count")(
         java.lang.Long.valueOf(hub.count())).longValue
       val hubVecBytes = repsEst * (24L + 8L * dims)
-      def vecs(side: String) = hub.select(col("id").as(side),
-        col("x").as(s"x$side"), col("n2").as(s"n2$side"))
-      val (vi, vj) =
-        if (hubVecBytes <= (256L << 20))
-          (broadcast(vecs("i")), broadcast(vecs("j")))
-        else (vecs("i").hint("shuffle_hash"), vecs("j").hint("shuffle_hash"))
-      cand
-        .join(vi, Seq("i"))
-        .join(vj, Seq("j"))
-        .withColumn("cosine", pairCos)
-        .filter(col("cosine") >= minCosine)
-        .select(col("i"), col("j"), col("cosine"))
+      def vecs(side: String) =
+        if (fitsBroadcast(hubVecBytes)) broadcast(pairSide(hub, "id", side))
+        else pairSide(hub, "id", side).hint("shuffle_hash")
+      verifyPairs(cand.join(vecs("i"), Seq("i")).join(vecs("j"), Seq("j")), minCosine)
     }
 
     Dedup.expandRepPairs(verified, groups, "cosine", col("wcos"),
       keptReps = Some(groups.filter(col("wcos") >= minCosine).select(col("rep"))))
   }
+
+  /** Exact-copy collapse: identical non-null vectors (groupBy on the raw
+    * array — bit-exact equality, no hashing) become one row — `rep` the
+    * min id, `members` the sorted ids — with the fixed-point view `x` and
+    * its squared norm `n2`, so copy-heavy corpora pay candidate cost per
+    * DISTINCT vector. Null vectors drop out: the all-pairs dual never
+    * scores them either. Shared by [[annLshPairs]] and [[semanticDedup]]. */
+  private def copyGroups(base: DataFrame, idCol: String, vecCol: String): DataFrame =
+    graft.core.Tables.spread(base)
+      .filter(col(vecCol).isNotNull)
+      .select(col(idCol).as("vid0"), col(vecCol).as("v"))
+      .groupBy(col("v"))
+      .agg(sort_array(collect_list(col("vid0"))).as("members"),
+        min(col("vid0")).as("rep"))
+      .withColumn("x", fixedPointVec(col("v")))
+      .withColumn("n2", intDot(col("x"), col("x")))
+
+  /** One side of a pair verify: `hub`'s `id` as `side` (i or j) with its
+    * fixed-point view and squared norm as x`side`, n2`side`. */
+  private def pairSide(hub: DataFrame, id: String, side: String): DataFrame =
+    hub.select(col(id).as(side), col("x").as(s"x$side"), col("n2").as(s"n2$side"))
+
+  /** Exact verify of candidate pairs carrying both [[pairSide]]s: the
+    * pairs whose [[fpCosine]] clears `minCosine`, as (i, j, cosine) — the
+    * exact dual's own score, so every emitted pair is a true pair
+    * (precision 1). Shared by [[annLshPairs]] and [[semanticDedup]]. */
+  private def verifyPairs(joined: DataFrame, minCosine: Double): DataFrame =
+    joined.withColumn("cosine", fpCosine(intDot(col("xi"), col("xj")), col("n2i"), col("n2j")))
+      .filter(col("cosine") >= minCosine)
+      .select(col("i"), col("j"), col("cosine"))
+
+  /** The family's broadcast envelope: a side estimated at ≤ 256 MB may
+    * broadcast; past it the plan must shuffle — collecting a larger side
+    * to the driver would OOM where a planned join survives. */
+  private def fitsBroadcast(bytes: BigInt): Boolean = bytes <= BigInt(256L << 20)
+
+  /** `df` hinted to broadcast while `bytes` fits [[fitsBroadcast]]; past
+    * it the hint is dropped and the planner picks the join. */
+  private def broadcastIfFits(df: DataFrame, bytes: BigInt): DataFrame =
+    if (fitsBroadcast(bytes)) broadcast(df) else df
+
+  /** The optimizer's size estimate of `df` — free, no job. */
+  private def statBytes(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Last [[annLshPairs]] path choice ("dense" | "banded") — the
     * [[Dedup.lastVerifyPath]] observability pattern, for tests and scale
@@ -579,37 +593,55 @@ object Similarity {
   def ivfTopK(queries: DataFrame, base: DataFrame, k: Int,
       nCells: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val centroids = lloydCentroids(base, nCells, idCol, vecCol)
-    def topCells(vec: Column, m: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, m)
-
-    val b = graft.core.Tables.spread(base).select(col(idCol).as("vid"), col(vecCol).as("bv"),
-      element_at(topCells(col(vecCol), 1), 1).getField("cell").as("cell"))
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        explode(topCells(col(vecCol), nProbe)).as("probe"))
-      .select(col("qid"), col("qv"), col("probe").getField("cell").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    // BROADCAST the query side (|Q|·nProbe rows carrying the query vector —
-    // the query set is small by this operator's contract): the corpus then
-    // STREAMS through the probe join with no shuffle at all — the same
-    // canonical ANN serving shape as [[pqShortlist]]. The filter/score/
-    // project happens IN the streamed join output, so the window's exchange
-    // carries (qid, vid, cosine) only, never the vectors.
-    // The hint is GATED on the optimizer's size estimate of the query set
-    // (free — no job): an oversized query set would otherwise collect to
-    // the driver and OOM where the planner would have picked a shuffle
-    // join. Past the bound the hint is dropped — the serving shape
-    // degrades to a planned join instead of a driver OOM.
-    val probeBytes = queries.queryExecution.optimizedPlan.stats.sizeInBytes *
-      BigInt(math.max(1, nProbe))
-    val qSide = if (probeBytes <= BigInt(256L << 20)) broadcast(q) else q
-    qSide.join(b, Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosine", foldCosine(col("qv"), col("bv")))
-      .select(col("qid"), col("vid"), col("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    val (centroids, postings) = ivfIndex(base, nCells, idCol, vecCol)
+    ivfSearch(queries, centroids, postings, k, nProbe, idCol, vecCol)
   }
+
+  /** An IVF index built in session: the [[lloydCentroids]] and the
+    * postings (vid, bv, cell, metaCols…) — every base vector under its
+    * argmax-cosine cell. [[ivfIndexSave]] writes exactly this and
+    * [[ivfIndexLoad]] reads it back, so in-session and served top-k probe
+    * the same pieces. */
+  private def ivfIndex(base: DataFrame, nCells: Int, idCol: String,
+      vecCol: String, metaCols: Seq[String] = Nil): (Array[Array[Double]], DataFrame) = {
+    val centroids = lloydCentroids(base, nCells, idCol, vecCol)
+    (centroids, graft.core.Tables.spread(base).select(Seq(col(idCol).as("vid"),
+      col(vecCol).as("bv"), homeCell(col(vecCol), centroids).as("cell"))
+      ++ metaCols.map(col): _*))
+  }
+
+  /** Top-k of an IVF index, wherever its pieces come from: [[ivfProbe]],
+    * then fold-cosine re-rank within the probed cells. */
+  private def ivfSearch(queries: DataFrame, centroids: Array[Array[Double]],
+      postings: DataFrame, k: Int, nProbe: Int,
+      idCol: String, vecCol: String): DataFrame =
+    rankTopK(ivfProbe(queries, centroids, postings, nProbe, idCol, vecCol)
+      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine")), k)
+
+  /** The probe of an IVF index: each query (qid, qv) explodes to its
+    * `nProbe` best cells and joins the postings there, self-matches
+    * dropped — unscored candidate rows carrying both vectors (a consumer
+    * that selects ids only prunes them). */
+  private def ivfProbe(queries: DataFrame, centroids: Array[Array[Double]],
+      postings: DataFrame, nProbe: Int, idCol: String, vecCol: String): DataFrame =
+    probeJoin(queries, nProbe, postings,
+      queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
+        explode(probeCells(col(vecCol), centroids, nProbe)).as("cell")))
+
+  /** The probe join shared by the IVF and IVF-PQ indexes: the query side
+    * `q` (one row per (query, probed cell)) joins the postings on `cell`,
+    * self-matches dropped. `q` BROADCASTS (|Q|·nProbe rows — the query set
+    * is small by the family's contract): the corpus then STREAMS through
+    * the join with no shuffle, and a saved index's partitioned postings
+    * scan is dynamically pruned to the probed cells. The hint is gated on
+    * the optimizer's size estimate of the query set scaled by `nProbe`
+    * ([[broadcastIfFits]]): an oversized query set degrades to a planned
+    * join — pruning may then not fire — instead of a driver-OOM collect. */
+  private def probeJoin(queries: DataFrame, nProbe: Int, postings: DataFrame,
+      q: DataFrame): DataFrame =
+    broadcastIfFits(q, statBytes(queries) * math.max(1, nProbe))
+      .join(postings, Seq("cell"))
+      .filter(col("qid") =!= col("vid"))
 
   /** Contrastive training-pair mining — the (anchor, positive, negatives)
     * builder for embedding-model training: each anchor's POSITIVE is its
@@ -650,21 +682,16 @@ object Similarity {
       negPerAnchor: Int, posMinCosine: Double, salt: String = "cp",
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(negPerAnchor >= 1, s"negPerAnchor must be >= 1: $negPerAnchor")
-    val q = anchors.select(col(idCol).as("qid"), fixedPointVec(col(vecCol)).as("qx"))
-      .withColumn("qn2", intDot(col("qx"), col("qx")))
+    val q = fixedPoint(anchors, col(idCol).as("qid"), vecCol, "qx", "qn2")
     // no Tables.spread here: the map-side combine makes the scan's own
     // split count the only parallelism that matters (a corpus-scale
     // source has natural splits; a one-file bench corpus does
     // |anchors|·|corpus| dot loops serially faster than one exchange)
-    val b = base
-      .select(col(idCol).as("vid"), fixedPointVec(col(vecCol)).as("bx"))
-      .withColumn("bn2", intDot(col("bx"), col("bx")))
-    val cosine = when(col("qn2") === 0 || col("bn2") === 0, lit(0.0)).otherwise(
-      intDot(col("qx"), col("bx")).cast(DoubleType) /
-        (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("bn2").cast(DoubleType))))
+    val b = fixedPoint(base, col(idCol).as("vid"), vecCol, "bx", "bn2")
     val pos = broadcast(q).crossJoin(b)
       .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), cosine.as("cosine"))
+      .select(col("qid"), col("vid"),
+        fpCosine(intDot(col("qx"), col("bx")), col("qn2"), col("bn2")).as("cosine"))
       .groupBy(col("qid"))
       .agg(graft.functions.ArgExtremum.maxScoreMinId(
         col("cosine"), col("vid")).as("top"))
@@ -689,16 +716,15 @@ object Similarity {
   /** Persist a trained IVF index — the ANN trainer→server handoff
     * ([[kmeansModelSave]] precedent, extended from the model to the
     * whole index): `path/centroids` holds the nCells × dims Lloyd
-    * centroids (tiny, one file), `path/postings` holds every corpus
-    * vector under its argmax-cosine cell, WRITTEN PARTITIONED BY CELL —
-    * the layout IS the index: a serve-time probe of `nProbe` cells
-    * touches only those directories (dynamic partition pruning against
-    * the broadcast query side), so the corpus fraction read per query
-    * batch is ≈ nProbe/nCells at any corpus size, without re-training
-    * or re-assigning anything. Assignment uses exactly [[ivfTopK]]'s
-    * argmax expression, so a serve against the saved index returns
-    * bit-identical top-k to an [[ivfTopK]] run with the same geometry
-    * (equivalence-tested).
+    * centroids (tiny, one file), `path/postings` holds [[ivfIndex]]'s
+    * postings WRITTEN PARTITIONED BY CELL — the layout IS the index: a
+    * serve-time probe of `nProbe` cells touches only those directories
+    * (dynamic partition pruning against the broadcast query side), so the
+    * corpus fraction read per query batch is ≈ nProbe/nCells at any
+    * corpus size, without re-training or re-assigning anything. A serve
+    * against the saved index runs [[ivfTopK]]'s own probe and re-rank over
+    * the same pieces, so it returns bit-identical top-k (equivalence-
+    * tested).
     *
     * `metaCols` names extra base columns to persist alongside each
     * posting (language, source, license, timestamp …) — the substrate
@@ -712,34 +738,56 @@ object Similarity {
     import base.sparkSession.implicits._
     require(!metaCols.exists(Set("vid", "bv", "cell")),
       s"metaCols collide with index columns: $metaCols")
-    val centroids = lloydCentroids(base, nCells, idCol, vecCol)
+    val (centroids, postings) = ivfIndex(base, nCells, idCol, vecCol, metaCols)
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cell", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    def topCells(vec: Column, m: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, m)
-    graft.core.Tables.spread(base)
-      .select(Seq(col(idCol).as("vid"), col(vecCol).as("bv"),
-        element_at(topCells(col(vecCol), 1), 1).getField("cell").as("cell"))
-        ++ metaCols.map(col): _*)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/postings")
+    postings.write.partitionBy("cell").mode("overwrite").parquet(s"$path/postings")
   }
 
+  /** The schema [[ivfIndexSave]] writes its centroids with. */
+  private val IvfCentroidsSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
+
   /** Load an [[ivfIndexSave]] index → (centroids cell-ordered — empty
-    * cells keep their zero row, preserving the cell-id space — and the
+    * cells keep their empty row, preserving the cell-id space — and the
     * postings frame (vid, bv, cell) with `cell` a PARTITION column, so
-    * any filter or join on it prunes at the file listing). */
+    * any filter or join on it prunes at the file listing). The centroid
+    * dump reads with the writer's schema (no schema-inference job) and is
+    * refused unless its cell ids are exactly 0..n−1. */
   def ivfIndexLoad(spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Double]], DataFrame) = {
-    val rows = spark.read.parquet(s"$path/centroids")
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1)
-    require(rows.nonEmpty, s"no centroids at $path/centroids")
-    (rows.map(_._2), spark.read.parquet(s"$path/postings"))
+    val rows = readModel(spark, s"$path/centroids", IvfCentroidsSchema)
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+    (cellOrdered(rows, s"IVF centroids at $path/centroids"),
+      spark.read.parquet(s"$path/postings"))
+  }
+
+  /** Collect a small model dump with the writer's `schema` — no
+    * schema-inference job — refusing rows with a missing field (a dump
+    * without one of the schema's columns reads it as null). */
+  private def readModel(spark: org.apache.spark.sql.SparkSession, path: String,
+      schema: StructType): Seq[org.apache.spark.sql.Row] = {
+    val rows = spark.read.schema(schema).parquet(path).collect().toSeq
+    require(rows.forall(r => !r.anyNull),
+      s"model dump at $path has rows without ${schema.fieldNames.mkString(", ")}")
+    rows
+  }
+
+  /** `rows` (cell id, entry) as an array indexed by cell id, refusing ids
+    * that are not exactly 0..n−1: positions ARE the cell ids downstream,
+    * so a missing, repeated or extra row would silently shift them. */
+  private def cellOrdered[T: scala.reflect.ClassTag](rows: Seq[(Int, T)],
+      what: String): Array[T] = {
+    val ids = rows.map(_._1).sorted
+    require(ids.nonEmpty && ids == ids.indices,
+      s"$what: cell ids must be exactly 0..n−1, got ${ids.mkString(",")}")
+    rows.sortBy(_._1).map(_._2).toArray
   }
 
   /** Approximate top-k served from a SAVED index — [[ivfTopK]]'s probe
-    * and re-rank stages with the train/assign stages replaced by the
-    * [[ivfIndexSave]] dump: queries probe their `nProbe` best cells
+    * and re-rank ([[ivfSearch]]) over the [[ivfIndexSave]] dump instead
+    * of a session-built index: queries probe their `nProbe` best cells
     * against the loaded centroid literals (map-only), and the postings
     * join is a broadcast-probe whose cell keys dynamically prune the
     * partitioned postings scan — the unprobed corpus is never READ, not
@@ -759,82 +807,23 @@ object Similarity {
       path: String, k: Int, nProbe: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicate: Option[Column] = None): DataFrame = {
-    val (centroids, postings0) = ivfIndexLoad(spark, path)
-    val postings = predicate.fold(postings0)(postings0.filter)
-    def topCells(vec: Column, m: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, m)
-    val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"),
-        explode(topCells(col(vecCol), nProbe)).as("probe"))
-      .select(col("qid"), col("qv"), col("probe").getField("cell").as("cell"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    // Same size-gated broadcast as [[ivfTopK]]: an oversized query set
-    // must degrade to a planned join, never a driver-OOM collect. Past
-    // the bound the dynamic partition pruning of the postings scan may
-    // not fire (DPP needs the broadcast side) — the serve correctly
-    // falls back to reading all cells, trading pruning for survival.
-    val probeBytes = queries.queryExecution.optimizedPlan.stats.sizeInBytes *
-      BigInt(math.max(1, nProbe))
-    val qSide = if (probeBytes <= BigInt(256L << 20)) broadcast(q) else q
-    qSide.join(postings, Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-      .withColumn("cosine", foldCosine(col("qv"), col("bv")))
-      .select(col("qid"), col("vid"), col("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-  }
-
-  /** The candidate stage of [[ivfTopK]] — train, assign, probe — emitting
-    * the (qid, vid) pairs that co-locate in a probed cell, WITHOUT any
-    * scoring. Shared machinery for [[ivfRecallBand]], which scores the
-    * candidates from the exact dual's own hub instead of re-folding
-    * cosines. */
-  private def ivfCandidates(queries: DataFrame, base: DataFrame,
-      nCells: Int, nProbe: Int, idCol: String, vecCol: String): DataFrame = {
-    val centroids = lloydCentroids(base, nCells, idCol, vecCol)
-    def topCells(vec: Column, m: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, m)
-    val b = graft.core.Tables.spread(base).select(col(idCol).as("vid"),
-      element_at(topCells(col(vecCol), 1), 1).getField("cell").as("cell"))
-    val q = queries.select(col(idCol).as("qid"),
-      explode(transform(topCells(col(vecCol), nProbe), _.getField("cell"))).as("cell"))
-    broadcast(q).join(b, Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"))
+    val (centroids, postings) = ivfIndexLoad(spark, path)
+    ivfSearch(queries, centroids, predicate.fold(postings)(postings.filter),
+      k, nProbe, idCol, vecCol)
   }
 
   /** [[topKRecallBand]] over [[ivfTopK]] with the exact dual SHARED — the
-    * driver-visible gate for IVF (q45), priced like [[pqRecallBand]]: the
-    * [[exactCosinePairs]] hub persists once and serves BOTH the exact
-    * top-k side of the band and the IVF side's ranking (the candidate
-    * pairs join the hub for their scores instead of re-folding cosines —
-    * deterministic either way; the hub's fixed-point cosine IS the dual's
-    * scoring). The hub materializes CONCURRENTLY with the Lloyd trainer's
-    * collect — two independent jobs, so the gate pays max(hub, trainer)
-    * wall-clock, not the sum. Gate machinery only: the candidate set
-    * broadcast is the probed fraction of the corpus per query
-    * (|Q|·|B|·nProbe/nCells id pairs) — bounded at the gate's
-    * validation-scale contract, like the hub itself (|Q|·|B|); the
-    * standalone [[ivfTopK]] serving path never builds either. Hub
-    * released via [[graft.core.Caches.unpersistAll]]. */
+    * driver-visible gate for IVF (q45), the [[sharedDualBand]] over
+    * [[ivfProbe]]'s candidates: the hub warms while the Lloyd trainer
+    * collects. The candidate broadcast is the probed fraction of the
+    * corpus per query (|Q|·|B|·nProbe/nCells id pairs). */
   def ivfRecallBand(queries: DataFrame, base: DataFrame, k: Int,
       minRecall: Double, nCells: Int = 16, nProbe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // pre-partitioned on qid: both window consumers read the cached plan's
-    // outputPartitioning with no further exchange (see [[pqRecallBand]])
-    val pairs = graft.core.Caches.persist(
-      exactCosinePairs(queries, base, idCol, vecCol)
-        .filter(col("qid") =!= col("vid"))
-        .repartition(col("qid")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    val exact = pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    val hubWarm = java.util.concurrent.CompletableFuture.runAsync(() => { pairs.count(); () })
-    val cand =
-      try ivfCandidates(queries, base, nCells, nProbe, idCol, vecCol)
-      finally hubWarm.join()
-    val ann = pairs.join(broadcast(cand), Seq("qid", "vid"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    topKRecallBand(ann, exact, minRecall)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    sharedDualBand(queries, base, k, minRecall, idCol, vecCol) {
+      val (centroids, postings) = ivfIndex(base, nCells, idCol, vecCol)
+      ivfProbe(queries, centroids, postings, nProbe, idCol, vecCol)
+    }
 
   /** Deterministic one-step Lloyd training shared by [[ivfTopK]] and
     * [[semanticDedup]]: initial cells from a hash of the vector id,
@@ -862,34 +851,39 @@ object Similarity {
 
   private def lloydCentroidsJob(base: DataFrame, nCells: Int,
       idCol: String, vecCol: String): Array[Array[Double]] = {
-    import graft.functions.ArrayAgg.sumLongArray
-    // vectors aggregate WHOLE ([[graft.functions.SumLongArray]] — one
-    // long[] buffer per cell, element-wise add per row): the exploded
-    // per-component dual multiplies the aggregation input by `dims`, and
-    // its map-side combine state is the same nCells·dims longs this
-    // reaches without the explode. Sums are exact integers either way —
-    // bit-identical centroids, `dims`× less aggregation traffic.
-    val rows = graft.core.Tables.spread(base)
-      .select(
-        pmod(xxhash64(col(idCol), lit("ivf")), lit(nCells)).cast(IntegerType).as("cell"),
-        fixedPointVec(col(vecCol)).as("x"))
-      .groupBy(col("cell"))
-      .agg(sumLongArray(col("x")).as("s"),
-        // per-position row count (the exploded dual's count(lit(1)) per
-        // (cell, idx) — counts null components too, sums skip them)
-        sumLongArray(transform(col("x"), _ => lit(1L))).as("c"))
-      .collect()
-    // keyed fill (never positional): a hash-empty cell keeps a zero
+    // keyed fill (never positional): a hash-empty cell keeps an empty
     // centroid instead of shifting every later cell's index
     val out = Array.fill(nCells)(Array.empty[Double])
-    rows.foreach { r =>
-      if (!r.isNullAt(1)) {
-        val s = r.getSeq[Long](1)
-        val c = r.getSeq[Long](2)
-        out(r.getInt(0)) = Array.tabulate(s.length)(i => s(i).toDouble / c(i).toDouble)
-      }
-    }
+    for ((_, cell, sm, c) <- cellSums(
+        lloydRows(graft.core.Tables.spread(base), nCells, idCol, vecCol)))
+      out(cell) = Array.tabulate(sm.length)(i => sm(i).toDouble / c(i).toDouble)
     out
+  }
+
+  /** The Lloyd trainer's input: each row's hash-seeded cell and its
+    * fixed-point vector `fx`, tagged subspace `s` = −1 (the IVF-PQ
+    * trainer's tag for its coarse cells). */
+  private def lloydRows(df: DataFrame, nCells: Int, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(lit(-1).as("s"),
+      pmod(xxhash64(col(idCol), lit("ivf")), lit(nCells)).cast(IntegerType).as("cell"),
+      fixedPointVec(col(vecCol)).as("fx"))
+
+  /** Exact per-(s, cell) integer sums of the `fx` vectors and their
+    * per-position row counts (counting null components too, which the
+    * sums skip), collected as (s, cell, sums, counts); groups with no
+    * non-null vector drop out. Vectors aggregate WHOLE
+    * ([[graft.functions.SumLongArray]] — one long[] buffer per group,
+    * element-wise add per row): the exploded per-component dual
+    * multiplies the aggregation input by `dims` for the same combine
+    * state, and the sums are exact integers either way. */
+  private def cellSums(rows: DataFrame): Seq[(Int, Int, Seq[Long], Seq[Long])] = {
+    import graft.functions.ArrayAgg.sumLongArray
+    rows.groupBy(col("s"), col("cell"))
+      .agg(sumLongArray(col("fx")).as("sm"),
+        sumLongArray(transform(col("fx"), _ => lit(1L))).as("c"))
+      .collect().toSeq.filter(!_.isNullAt(2))
+      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2), r.getSeq[Long](3)))
   }
 
   /** Multi-iteration Lloyd k-means CLUSTER ASSIGNMENT over an embedding
@@ -1020,11 +1014,15 @@ object Similarity {
       .repartition(1).write.mode("overwrite").parquet(path)
   }
 
-  /** Load a [[kmeansModelSave]] dump, cell-ordered. */
+  /** The schema [[kmeansModelSave]] writes with. */
+  private val KmeansModelSchema = StructType(Seq(
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(LongType))))
+
+  /** Load a [[kmeansModelSave]] dump, cell-ordered, read with the
+    * writer's schema (no schema-inference job). */
   def kmeansModelLoad(spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[(Int, Array[Long])] =
-    spark.read.parquet(path).select(col("cell"), col("centroid"))
-      .collect()
+    readModel(spark, path, KmeansModelSchema)
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
 
@@ -1082,6 +1080,20 @@ object Similarity {
     array(centroids.indices.map(c =>
       struct(ArrayMath.cosine(vec, ArrayMath.doubleArrayLit(centroids(c))).as("s"), lit(c).as("cell"))): _*)
 
+  /** The `m` best cells of `vec`, best first, as (s, cell) structs — the
+    * family's one cell probe. */
+  private def topCells(vec: Column, centroids: Array[Array[Double]], m: Int): Column =
+    slice(reverse(array_sort(cellScores(vec, centroids))), 1, m)
+
+  /** The argmax-cosine cell of `vec` — where an index files a vector. */
+  private def homeCell(vec: Column, centroids: Array[Array[Double]]): Column =
+    element_at(topCells(vec, centroids, 1), 1).getField("cell")
+
+  /** The ids of the `nProbe` best cells of `vec` — what a query probes. */
+  private def probeCells(vec: Column, centroids: Array[Array[Double]],
+      nProbe: Int): Column =
+    transform(topCells(vec, centroids, nProbe), _.getField("cell"))
+
   /** Semantic deduplication (the SemDeDup recipe): cluster the embedding
     * space coarsely, then compare ONLY co-clustered vectors — near-dup
     * pairs above `minCosine` merge into transitive groups and each group
@@ -1091,8 +1103,8 @@ object Similarity {
     *
     * Determinism: centroids are exact-integer Lloyd means
     * ([[lloydCentroids]]), assignment is fixed-point cosine argmax, and
-    * the verify score is the same sqrt(n2)·sqrt(n2) expression family as
-    * [[exactCosinePairs]] — bit-identical pairs run to run.
+    * the verify score is [[exactCosinePairs]]' own [[fpCosine]] —
+    * bit-identical pairs run to run.
     *
     * Output: one row per non-null input vector — (id, cell,
     * `sem_canonical_id`, `keep`). Exact vector copies collapse before
@@ -1112,23 +1124,11 @@ object Similarity {
       nProbe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val centroids = lloydCentroids(base, nCells, idCol, vecCol)
-    val probeCells = transform(
-      slice(reverse(array_sort(cellScores(col("v"), centroids))), 1, nProbe),
-      _.getField("cell"))
-
     // exact-copy collapse; rep carries probe cells + fixed-point view.
     // cells[0] is the primary (argmax) cell reported in the output.
-    val g0 = graft.core.Tables.spread(base)
-      .filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("vid0"), col(vecCol).as("v"))
-      .groupBy(col("v"))
-      .agg(sort_array(collect_list(col("vid0"))).as("members"),
-        min(col("vid0")).as("rep"))
-      .withColumn("x", fixedPointVec(col("v")))
-      .withColumn("n2", intDot(col("x"), col("x")))
-      .withColumn("cells", probeCells)
-    val hub = graft.core.Caches.persist(
-      g0.select(col("rep"), col("members"), col("cells"), col("x"), col("n2")))
+    val hub = graft.core.Caches.persist(copyGroups(base, idCol, vecCol)
+      .withColumn("cells", probeCells(col("v"), centroids, nProbe))
+      .select(col("rep"), col("members"), col("cells"), col("x"), col("n2")))
 
     // candidates: reps sharing ANY probed cell (distinct'd — a pair can
     // meet in up to nProbe cells); exhaustive within each cell. The
@@ -1143,16 +1143,9 @@ object Similarity {
       .distinct()
 
     // exact fixed-point verify — the same expression family as the dual
-    val pairs = cand
-      .join(hub.select(col("rep").as("i"), col("x").as("xi"), col("n2").as("n2i"))
-        .hint("shuffle_hash"), Seq("i"))
-      .join(hub.select(col("rep").as("j"), col("x").as("xj"), col("n2").as("n2j"))
-        .hint("shuffle_hash"), Seq("j"))
-      .withColumn("cosine",
-        when(col("n2i") === 0 || col("n2j") === 0, lit(0.0)).otherwise(
-          intDot(col("xi"), col("xj")).cast(DoubleType) /
-            (sqrt(col("n2i").cast(DoubleType)) * sqrt(col("n2j").cast(DoubleType)))))
-      .filter(col("cosine") >= minCosine)
+    val pairs = verifyPairs(cand
+      .join(pairSide(hub, "rep", "i").hint("shuffle_hash"), Seq("i"))
+      .join(pairSide(hub, "rep", "j").hint("shuffle_hash"), Seq("j")), minCosine)
       .select(col("i"), col("j"))
 
     // copy-groups whose self-cosine clears the threshold merge internally
@@ -1172,57 +1165,19 @@ object Similarity {
       .withColumn("keep", col("sem_canonical_id") === col(idCol))
   }
 
-  /** Product-quantization codebooks — `m` subspaces × `ksub` centroids ×
-    * `dims/m` components, trained on UNIT-normalized vectors with the same
-    * deterministic recipe as [[lloydCentroids]] (hash-seeded cells, exact
-    * fixed-point integer means), collected as a driver literal
-    * (m·ksub·subdim doubles — tiny). Residual-free variant (codes quantize
-    * the vector itself, not the IVF residual) — simpler and fully
-    * deterministic. Empty cells become zero centroids (never the argmin
-    * for a unit vector against a populated cell, and deterministic). */
-  private def pqCodebooks(base: DataFrame, m: Int, ksub: Int, dims: Int,
-      idCol: String, vecCol: String): Array[Array[Array[Double]]] = {
-    import graft.functions.ArrayAgg.sumLongArray
-    val subdim = dims / m
-    // subvectors aggregate WHOLE (same [[graft.functions.SumLongArray]]
-    // rationale as [[lloydCentroids]]): the explode is m rows per vector,
-    // never m·subdim — exact integer sums, bit-identical codebooks,
-    // subdim× less aggregation traffic.
-    val rows = withUnit(graft.core.Tables.spread(base)
-        .filter(col(vecCol).isNotNull), vecCol, "__u")
-      .select(col(idCol).as("id"), posexplode(array((0 until m).map(s =>
-        slice(col("__u"), s * subdim + 1, subdim)): _*)).as(Seq("s", "sub")))
-      .select(col("s"),
-        pmod(xxhash64(col("id"), lit("pq"), col("s")), lit(ksub))
-          .cast(IntegerType).as("cell"),
-        fixedPointVec(col("sub")).as("fx"))
-      .groupBy(col("s"), col("cell"))
-      .agg(sumLongArray(col("fx")).as("sm"),
-        sumLongArray(transform(col("fx"), _ => lit(1L))).as("c"))
-      .collect()
-    val cb = Array.fill(m, ksub)(Array.fill(subdim)(0.0))
-    rows.foreach { r =>
-      if (!r.isNullAt(2)) {
-        val sm = r.getSeq[Long](2)
-        val c = r.getSeq[Long](3)
-        // ÷ 32768: the exact integer sums are in fixedPointVec's 2¹⁵
-        // scale, but ADC distances are computed against RAW unit
-        // subvectors — and unlike the IVF path's cosine, L2 is not
-        // scale-invariant
-        cb(r.getInt(0))(r.getInt(1)) =
-          Array.tabulate(sm.length)(i => sm(i).toDouble / (c(i).toDouble * 32768.0))
-      }
-    }
-    cb
-  }
-
-  /** IVF centroids + PQ codebooks from ONE corpus scan and ONE Spark job:
-    * the [[lloydCentroids]] rows tag as subspace −1 alongside the
-    * [[pqCodebooks]] subspace rows, union into one (s, cell) aggregate,
-    * and split on the tag after the single collect. Bit-identical to
-    * calling both trainers — each (s, cell) group receives exactly the
-    * rows it would alone, and the sums are exact integers — but the
-    * corpus is read once, not twice, and the driver waits on one job. */
+  /** IVF centroids + PQ codebooks from ONE corpus scan and ONE Spark job.
+    * The codebooks are `m` subspaces × `ksub` centroids × `dims/m`
+    * components, trained on UNIT-normalized vectors with the
+    * [[lloydCentroids]] recipe (hash-seeded cells, exact fixed-point
+    * integer means) — residual-free (codes quantize the vector itself,
+    * not the IVF residual), simpler and fully deterministic; empty cells
+    * become zero centroids (never the argmin for a unit vector against a
+    * populated cell). The [[lloydCentroids]] rows tag as subspace −1
+    * alongside the subspace rows, union into one (s, cell) aggregate, and
+    * split on the tag after the single collect: each (s, cell) group
+    * receives exactly the rows a trainer of its own would, and the sums
+    * are exact integers, but the corpus is read once and the driver waits
+    * on one job. */
   private def trainIvfPq(base: DataFrame, nCells: Int, m: Int, ksub: Int,
       dims: Int, idCol: String, vecCol: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) =
@@ -1233,7 +1188,6 @@ object Similarity {
   private def trainIvfPqJob(base: DataFrame, nCells: Int, m: Int, ksub: Int,
       dims: Int, idCol: String, vecCol: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    import graft.functions.ArrayAgg.sumLongArray
     val subdim = dims / m
     // deliberately NOT spread(): the per-row trainer work (one fixed-point
     // projection + m subvector slices) is far cheaper than the repartition
@@ -1241,35 +1195,25 @@ object Similarity {
     // 0.54 s → 0.21 s on the sf0.1 collect), and at production scale the
     // source has real partitions and spread() is a no-op anyway — the
     // partial aggregation parallelizes with the scan either way
-    val spreadB = base
-    val lloydRows = spreadB
-      .select(lit(-1).as("s"),
-        pmod(xxhash64(col(idCol), lit("ivf")), lit(nCells)).cast(IntegerType).as("cell"),
-        fixedPointVec(col(vecCol)).as("fx"))
-    val pqRows = withUnit(spreadB.filter(col(vecCol).isNotNull), vecCol, "__u")
+    val pqRows = withUnit(base.filter(col(vecCol).isNotNull), vecCol, "__u")
       .select(col(idCol).as("id"), posexplode(array((0 until m).map(s =>
         slice(col("__u"), s * subdim + 1, subdim)): _*)).as(Seq("s", "sub")))
       .select(col("s"),
         pmod(xxhash64(col("id"), lit("pq"), col("s")), lit(ksub))
           .cast(IntegerType).as("cell"),
         fixedPointVec(col("sub")).as("fx"))
-    val rows = lloydRows.unionByName(pqRows)
-      .groupBy(col("s"), col("cell"))
-      .agg(sumLongArray(col("fx")).as("sm"),
-        sumLongArray(transform(col("fx"), _ => lit(1L))).as("c"))
-      .collect()
     val cents = Array.fill(nCells)(Array.empty[Double])
     val cb = Array.fill(m, ksub)(Array.fill(subdim)(0.0))
-    rows.foreach { r =>
-      if (!r.isNullAt(2)) {
-        val sm = r.getSeq[Long](2)
-        val c = r.getSeq[Long](3)
-        if (r.getInt(0) == -1)
-          cents(r.getInt(1)) = Array.tabulate(sm.length)(i => sm(i).toDouble / c(i).toDouble)
-        else
-          cb(r.getInt(0))(r.getInt(1)) =
-            Array.tabulate(sm.length)(i => sm(i).toDouble / (c(i).toDouble * 32768.0))
-      }
+    for ((s, cell, sm, c) <- cellSums(
+        lloydRows(base, nCells, idCol, vecCol).unionByName(pqRows))) {
+      if (s == -1)
+        cents(cell) = Array.tabulate(sm.length)(i => sm(i).toDouble / c(i).toDouble)
+      else
+        // ÷ 32768: the exact integer sums are in fixedPointVec's 2¹⁵
+        // scale, but ADC distances are computed against RAW unit
+        // subvectors — and unlike the IVF path's cosine, L2 is not
+        // scale-invariant
+        cb(s)(cell) = Array.tabulate(sm.length)(i => sm(i).toDouble / (c(i).toDouble * 32768.0))
     }
     (cents, cb)
   }
@@ -1300,38 +1244,33 @@ object Similarity {
       .drop(tmp)
   }
 
-  /** PQ code per subspace: argmin_c (c·c − 2·x_s·c) — the ‖x_s−c‖² argmin
-    * with the row-constant x_s·x_s dropped; deterministic tie-break on the
-    * code index via the sorted (d, c) struct. One codegen'd dot per
-    * (subspace, centroid), map-only. */
-  private def pqCodeCols(unit: Column, cb: Array[Array[Array[Double]]]): Column = {
-    val m = cb.length; val subdim = cb(0)(0).length
-    array((0 until m).map { s =>
+  /** Per subspace s, per codeword c of `cb`: c·c − 2·u_s·c over the unit
+    * vector `unit` — ‖u_s−c‖² with the row-constant u_s·u_s dropped, one
+    * codegen'd dot per (subspace, codeword). The one ADC distance: base
+    * vectors encode with it ([[pqCodeCols]]) and queries tabulate it
+    * ([[adcDtab]]), so the two sides can never diverge. */
+  private def pqDists(unit: Column, cb: Array[Array[Array[Double]]]): Seq[Seq[Column]] = {
+    val subdim = cb(0)(0).length
+    cb.indices.map { s =>
       val sub = slice(unit, s * subdim + 1, subdim)
-      val scored = array(cb(s).indices.map { c =>
-        val cc = cb(s)(c).map(x => x * x).sum
-        struct((lit(cc) - lit(2.0) * ArrayMath.dotDouble(sub, ArrayMath.doubleArrayLit(cb(s)(c))))
-          .as("d"), lit(c).as("c"))
-      }: _*)
-      element_at(array_sort(scored), 1).getField("c").cast(LongType)
-    }: _*)
+      cb(s).toSeq.map(c => lit(c.map(x => x * x).sum) -
+        lit(2.0) * ArrayMath.dotDouble(sub, ArrayMath.doubleArrayLit(c)))
+    }
   }
 
-  /** Flattened per-query ADC distance table over `__u` (the unit-vector
-    * column): entry s·ksub+c = c·c − 2·q_s·c — the query-constant
-    * q_s·q_s dropped, rank-preserving. Shared by [[pqShortlist]] and
-    * [[pqServeTopK]] so the in-session and served ADC stages can never
-    * diverge. */
-  private def adcDtab(cb: Array[Array[Array[Double]]]): Column = {
-    val m = cb.length; val subdim = cb(0)(0).length
-    array((0 until m).flatMap { s =>
-      val sub = slice(col("__u"), s * subdim + 1, subdim)
-      cb(s).indices.map { c =>
-        val cc = cb(s)(c).map(x => x * x).sum
-        lit(cc) - lit(2.0) * ArrayMath.dotDouble(sub, ArrayMath.doubleArrayLit(cb(s)(c)))
-      }
+  /** PQ code per subspace: the [[pqDists]] argmin, deterministic tie-break
+    * on the code index via the sorted (d, c) struct. Map-only. */
+  private def pqCodeCols(unit: Column, cb: Array[Array[Array[Double]]]): Column =
+    array(pqDists(unit, cb).map { ds =>
+      val scored = array(ds.zipWithIndex.map { case (d, c) =>
+        struct(d.as("d"), lit(c).as("c")) }: _*)
+      element_at(array_sort(scored), 1).getField("c").cast(LongType)
     }: _*)
-  }
+
+  /** Flattened per-query ADC distance table over `__u` (the unit-vector
+    * column): entry s·ksub+c is [[pqDists]]' (s, c) — rank-preserving. */
+  private def adcDtab(cb: Array[Array[Array[Double]]]): Column =
+    array(pqDists(col("__u"), cb).flatten: _*)
 
   /** ADC score of a `code` array against a `dtab` column: m array
     * lookups per candidate pair — no per-pair vector math. */
@@ -1354,70 +1293,15 @@ object Similarity {
     *     scores candidates with `m` array lookups per pair — no per-pair
     *     vector math, which is the whole point at 10⁹+ candidates.
     *  4. '''Refine''': the ADC-best `refine` per query join back to raw
-    *     vectors (a refine·|Q|-row shuffle, never corpus-sized) for exact
+    *     vectors (a refine·|Q|-row shortlist, never corpus-sized) for exact
     *     fold-cosine re-rank → top `k`.
     *
     * Approximate by construction (cell recall × PQ distortion) → rows-only
     * correctness with a ScalaTest recall gate against [[bruteForceTopK]],
     * like q42/q45. Deterministic end to end: hash-seeded integer-mean
-    * codebooks, tie-broken argmins, exact re-rank order (cosine, vid). */
-  /** The ADC stage of [[pqTopK]] — train, encode, probe, shortlist — up
-    * to and including the `refine` cut, WITHOUT the exact re-rank.
-    * Shared by [[pqTopK]] (which re-ranks against raw vectors) and
-    * [[pqRecallBand]] (which re-ranks from the gate's exact-pair hub). */
-  private def pqShortlist(queries: DataFrame, base: DataFrame,
-      m: Int, ksub: Int, nCells: Int, nProbe: Int,
-      refine: Int, dims: Int, idCol: String, vecCol: String): DataFrame = {
-    require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
-    val (centroids, cb) = trainIvfPq(base, nCells, m, ksub, dims, idCol, vecCol)
-    def topCells(vec: Column, n: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, n)
-
-    // base side: cell + PQ codes ONLY (the slim candidate representation);
-    // the unit vector is a materialized column (see [[unitVec]]) so the
-    // 128 codebook dots read a plain array, not a re-normalizing lambda
-    // spread() is KEPT on the encode side (unlike the trainer): pqCodeCols
-    // is m·ksub codebook dots plus m struct sorts per row — heavy enough
-    // that parallelizing a single-file local source beats the repartition
-    // it costs (measured 0.78 → 0.97 s without it)
-    val b = withUnit(graft.core.Tables.spread(base)
-        .filter(col(vecCol).isNotNull), vecCol, "__u")
-      .select(col(idCol).as("vid"),
-        element_at(topCells(col(vecCol), 1), 1).getField("cell").as("cell"),
-        pqCodeCols(col("__u"), cb).as("code"))
-    // query side: probed cells + the per-query ADC distance table
-    // ([[adcDtab]] — flattened m·ksub doubles)
-    val q = withUnit(queries.filter(col(vecCol).isNotNull), vecCol, "__u")
-      .select(col(idCol).as("qid"), col("__u"),
-        explode(transform(topCells(col(vecCol), nProbe), _.getField("cell")))
-          .as("cell"))
-      .withColumn("dtab", adcDtab(cb))
-      .select(col("qid"), col("cell"), col("dtab")) // unit vec dropped pre-join
-    // ADC score: m array lookups per candidate pair. The shortlist stream
-    // carries (qid, vid, adc) ONLY — the query vector would otherwise ride
-    // the dedup and window shuffles once per CANDIDATE (dims floats × the
-    // probed fraction of the corpus); both vectors join back onto the
-    // |Q|·refine-row shortlist instead, after the ADC cut.
-    val adc = adcScore(m, ksub)
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vid"))
-    // BROADCAST the query side (|Q|·nProbe rows of m·ksub doubles — the
-    // query set is small by this operator's contract, see class doc): the
-    // corpus side then STREAMS through the probe join with no shuffle at
-    // all — the canonical ANN serving plan. (The shuffle_hash pin of the
-    // LSH SELF-joins does not apply here: this is small-queries × corpus,
-    // not corpus × corpus, so the broadcast side is bounded by |Q|.)
-    // no pair dedup needed: a base vector lands in exactly ONE cell and a
-    // query's probed cells are distinct, so a (qid, vid) pair can meet in
-    // at most one joined row — the window's exchange is the only shuffle
-    broadcast(q).join(b, Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), adc.as("adc"))
-      .withColumn("ra", row_number().over(wAdc))
-      .filter(col("ra") <= refine)
-      .select(col("qid"), col("vid"))
-  }
-
-  /** Tuning rule (measured on the 10× scale smoke): `refine` must scale
+    * codebooks, tie-broken argmins, exact re-rank order (cosine, vid).
+    *
+    * Tuning rule (measured on the 10× scale smoke): `refine` must scale
     * with the probed candidate volume `nProbe·|B|/nCells` (≈2.5% of it,
     * floored at 32) — a FIXED shortlist depth starves recall as the
     * corpus grows, because the true neighbors are in the probed cells
@@ -1427,59 +1311,113 @@ object Similarity {
       refine: Int = 32, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(refine >= k, s"refine=$refine must be at least k=$k")
-    val shortlist =
-      pqShortlist(queries, base, m, ksub, nCells, nProbe, refine, dims, idCol, vecCol)
-    // exact re-rank of the shortlist against raw vectors: the SHORTLIST
-    // (≤ |Q|·refine rows) broadcasts and the corpus streams past it — the
-    // corpus-sized side never shuffles (the previous shuffle_hash form
-    // shuffled the full base table to deliver 10³ lookups)
-    val wCos = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    base.select(col(idCol).as("vid"), col(vecCol).as("bv"))
-      .join(broadcast(shortlist), Seq("vid"))
-      .join(broadcast(queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))),
-        Seq("qid"))
-      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine"))
-      .withColumn("rk", row_number().over(wCos))
-      .filter(col("rk") <= k)
+    val (centroids, cb, postings) = pqIndex(base, nCells, m, ksub, dims, idCol, vecCol)
+    // in session the raw vectors are the base itself: the refine joins on
+    // vid alone and never re-derives a cell for the corpus
+    pqRefine(queries,
+      pqShortlist(queries, centroids, cb, postings, nProbe, refine, idCol, vecCol),
+      base.select(col(idCol).as("vid"), col(vecCol).as("bv")), Seq("vid"),
+      k, refine, idCol, vecCol)
+  }
+
+  /** An IVF-PQ index built in session: [[trainIvfPq]]'s centroids and
+    * codebooks, and the postings (vid, bv, cell, code, metaCols…) — every
+    * non-null base vector under its argmax-cosine cell with its PQ codes
+    * ([[pqCodeCols]] over the unit vector). [[pqIndexSave]] writes exactly
+    * this and [[pqIndexLoad]] reads it back.
+    *
+    * spread() is KEPT on the encode side (unlike the trainer): pqCodeCols
+    * is m·ksub codebook dots plus m struct sorts per row — heavy enough
+    * that parallelizing a single-file local source beats the repartition
+    * it costs (measured 0.78 → 0.97 s without it). The unit vector is a
+    * materialized column (see [[unitVec]]) so the codebook dots read a
+    * plain array, not a re-normalizing lambda. */
+  private def pqIndex(base: DataFrame, nCells: Int, m: Int, ksub: Int, dims: Int,
+      idCol: String, vecCol: String, metaCols: Seq[String] = Nil)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
+    require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
+    val (centroids, cb) = trainIvfPq(base, nCells, m, ksub, dims, idCol, vecCol)
+    val postings = withUnit(graft.core.Tables.spread(base)
+        .filter(col(vecCol).isNotNull), vecCol, "__u")
+      .select(Seq(col(idCol).as("vid"), col(vecCol).as("bv"),
+        homeCell(col(vecCol), centroids).as("cell"),
+        pqCodeCols(col("__u"), cb).as("code")) ++ metaCols.map(col): _*)
+    (centroids, cb, postings)
+  }
+
+  /** The ADC stage of an IVF-PQ index, wherever its pieces come from:
+    * probe, ADC-score, and cut to the `refine` best (qid, vid, cell) per
+    * query — WITHOUT the exact re-rank. Shared by [[pqTopK]] and
+    * [[pqServeTopK]] (which re-rank against raw vectors, [[pqRefine]])
+    * and [[pqRecallBand]] (which re-ranks from the gate's exact-pair hub).
+    *
+    * The query side carries its probed cells and ADC distance table
+    * ([[adcDtab]] — flattened m·ksub doubles), the unit vector dropped
+    * before the join; the postings side is read for (vid, cell, code)
+    * only. The shortlist stream carries (qid, vid, cell, adc) — never a
+    * vector, which would otherwise ride the window shuffle once per
+    * CANDIDATE. No pair dedup is needed: a base vector lands in exactly
+    * ONE cell and a query's probed cells are distinct, so a (qid, vid)
+    * pair meets in at most one joined row. The cell key is kept for a
+    * served refine, whose (cell, vid) join prunes its postings read the
+    * way the probe pruned this one. */
+  private def pqShortlist(queries: DataFrame, centroids: Array[Array[Double]],
+      cb: Array[Array[Array[Double]]], postings: DataFrame, nProbe: Int,
+      refine: Int, idCol: String, vecCol: String): DataFrame = {
+    val q = withUnit(queries.filter(col(vecCol).isNotNull), vecCol, "__u")
+      .select(col(idCol).as("qid"), col("__u"),
+        explode(probeCells(col(vecCol), centroids, nProbe)).as("cell"))
+      .withColumn("dtab", adcDtab(cb))
+      .select(col("qid"), col("cell"), col("dtab"))
+    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vid"))
+    probeJoin(queries, nProbe, postings, q)
+      .select(col("qid"), col("vid"), col("cell"), adcScore(cb.length, cb(0).length).as("adc"))
+      .withColumn("ra", row_number().over(wAdc))
+      .filter(col("ra") <= refine)
+      .select(col("qid"), col("vid"), col("cell"))
+  }
+
+  /** The exact re-rank of an IVF-PQ shortlist: each shortlisted
+    * (qid, vid) fetches its raw vector `bv` from `vectors`, joined on
+    * `keys` — (vid) against the base in session, (cell, vid) against
+    * saved postings so the shortlist's cells prune that scan — then
+    * fold-cosine → top `k`. The shortlist (≤ |Q|·refine slim rows) and
+    * the query vectors broadcast and the corpus-sized side streams past
+    * them, never shuffled. Both hints get the probe's size gate: the
+    * shortlist by the query stat scaled to `refine` (each shortlist row is
+    * far narrower than the query row the stat measures, so this
+    * over-counts, i.e. degrades early), the query vectors by the raw query
+    * stat; past the bound the refine degrades to planned joins — never a
+    * driver-OOM collect. */
+  private def pqRefine(queries: DataFrame, shortlist: DataFrame,
+      vectors: DataFrame, keys: Seq[String], k: Int, refine: Int,
+      idCol: String, vecCol: String): DataFrame = {
+    val qBytes = statBytes(queries)
+    val sl = broadcastIfFits(shortlist.select(("qid" +: keys).map(col): _*),
+      qBytes * math.max(1, refine))
+    val qVecs = broadcastIfFits(
+      queries.select(col(idCol).as("qid"), col(vecCol).as("qv")), qBytes)
+    rankTopK(vectors.select((keys :+ "bv").map(col): _*)
+      .join(sl, keys)
+      .join(qVecs, Seq("qid"))
+      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine")), k)
   }
 
   /** [[topKRecallBand]] over [[pqTopK]] with the exact dual SHARED — the
-    * driver-visible gate for IVF-PQ (q122) priced as one |Q|·|B| exact
-    * pass instead of two: the [[exactCosinePairs]] hub persists once and
-    * serves BOTH the exact-top-k side of the band and the ANN side's
-    * final re-rank (the shortlist joins the hub for its scores instead
-    * of re-scoring raw vectors — identical deterministic ordering, since
-    * the hub's fixed-point cosine IS the dual's scoring). Gate machinery
-    * only: the standalone operator ([[pqTopK]]) never computes an exact
-    * pass; the dual is inherently |Q|·|B| and exists because the gate
-    * demands an oracle-checkable row (released via
-    * [[graft.core.Caches.unpersistAll]]). */
+    * driver-visible gate for IVF-PQ (q122), the [[sharedDualBand]] over
+    * [[pqShortlist]]: one |Q|·|B| exact pass instead of two, the hub
+    * warming while the IVF-PQ trainer collects, and the shortlist ranked
+    * by the hub's scores instead of re-scoring raw vectors. */
   def pqRecallBand(queries: DataFrame, base: DataFrame, k: Int,
       minRecall: Double,
       m: Int = 8, ksub: Int = 16, nCells: Int = 16, nProbe: Int = 4,
       refine: Int = 32, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(refine >= k, s"refine=$refine must be at least k=$k")
-    // the hub persists PRE-PARTITIONED on qid: InMemoryRelation keeps the
-    // cached plan's outputPartitioning, so BOTH window consumers (exact
-    // top-k, ANN re-rank) read it with no further exchange
-    val pairs = graft.core.Caches.persist(
-      exactCosinePairs(queries, base, idCol, vecCol)
-        .filter(col("qid") =!= col("vid"))
-        .repartition(col("qid")))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    val exact = pairs.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    // materialize the hub CONCURRENTLY with the trainer collect inside
-    // pqShortlist: two independent jobs (Spark's scheduler is built for
-    // multi-threaded submission), so the gate pays max(hub, trainer)
-    // wall-clock instead of the sum. Failure surfaces on join() below.
-    val hubWarm = java.util.concurrent.CompletableFuture.runAsync(() => { pairs.count(); () })
-    val shortlist =
-      try pqShortlist(queries, base, m, ksub, nCells, nProbe, refine, dims, idCol, vecCol)
-      finally hubWarm.join()
-    val ann = pairs.join(broadcast(shortlist), Seq("qid", "vid"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    topKRecallBand(ann, exact, minRecall)
+    sharedDualBand(queries, base, k, minRecall, idCol, vecCol) {
+      val (centroids, cb, postings) = pqIndex(base, nCells, m, ksub, dims, idCol, vecCol)
+      pqShortlist(queries, centroids, cb, postings, nProbe, refine, idCol, vecCol)
+    }
   }
 
   /** Persist a trained IVF-PQ index — the last trained artifact to gain
@@ -1489,124 +1427,87 @@ object Similarity {
     * by subspace) as one tiny (s, cell, centroid) parquet — geometry
     * m/ksub/nCells/subdim is IMPLIED by the shapes, so a serve site can
     * never decode with different geometry than the build; `path/postings`
-    * holds every corpus vector's (vid, code, bv) under its argmax-cosine
-    * cell, WRITTEN PARTITIONED BY CELL — serve-time probes touch only
-    * the probed cell directories (dynamic partition pruning), and the
-    * raw vector rides the SAME layout so the exact refine stage prunes
-    * identically. Encoding uses exactly [[pqShortlist]]'s expressions
-    * (shared [[pqCodeCols]]/[[adcDtab]]), so [[pqServeTopK]] against the
-    * saved index is bit-identical to an in-session [[pqTopK]] at the
-    * same geometry (equivalence-tested; DOUBLE round-trips parquet
-    * exactly). */
+    * holds [[pqIndex]]'s postings (vid, bv, code) WRITTEN PARTITIONED BY
+    * CELL — serve-time probes touch only the probed cell directories
+    * (dynamic partition pruning), and the raw vector rides the SAME layout
+    * so the exact refine stage prunes identically. [[pqServeTopK]] runs
+    * [[pqTopK]]'s own shortlist and refine over these pieces, so it is
+    * bit-identical to an in-session [[pqTopK]] at the same geometry
+    * (equivalence-tested; DOUBLE round-trips parquet exactly). */
   def pqIndexSave(base: DataFrame, path: String, m: Int = 8, ksub: Int = 16,
       nCells: Int = 16, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding",
       metaCols: Seq[String] = Nil): Unit = {
     import base.sparkSession.implicits._
-    require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
     require(!metaCols.exists(Set("vid", "bv", "code", "cell")),
       s"metaCols collide with index columns: $metaCols")
-    val (centroids, cb) = trainIvfPq(base, nCells, m, ksub, dims, idCol, vecCol)
+    val (centroids, cb, postings) =
+      pqIndex(base, nCells, m, ksub, dims, idCol, vecCol, metaCols)
     val modelRows =
       centroids.toSeq.zipWithIndex.map { case (c, i) => (-1, i, c.toSeq) } ++
         (for (s <- 0 until m; c <- 0 until ksub) yield (s, c, cb(s)(c).toSeq))
     modelRows.toDF("s", "cell", "centroid")
       .repartition(1).write.mode("overwrite").parquet(s"$path/model")
-    def topCells(vec: Column, n: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, n)
-    withUnit(graft.core.Tables.spread(base).filter(col(vecCol).isNotNull),
-        vecCol, "__u")
-      .select(Seq(col(idCol).as("vid"), col(vecCol).as("bv"),
-        pqCodeCols(col("__u"), cb).as("code"),
-        element_at(topCells(col(vecCol), 1), 1).getField("cell").as("cell"))
-        ++ metaCols.map(col): _*)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/postings")
+    postings.write.partitionBy("cell").mode("overwrite").parquet(s"$path/postings")
   }
+
+  /** The schema [[pqIndexSave]] writes its model with. */
+  private val PqModelSchema = StructType(Seq(StructField("s", IntegerType),
+    StructField("cell", IntegerType), StructField("centroid", ArrayType(DoubleType))))
 
   /** Load a [[pqIndexSave]] index → (IVF centroids cell-ordered — empty
     * hash cells keep their empty row, preserving the cell-id space
     * exactly as [[ivfIndexLoad]] does — PQ codebooks, and the postings
-    * frame (vid, bv, code, cell) with `cell` a PARTITION column). */
+    * frame (vid, bv, code, cell) with `cell` a PARTITION column). The
+    * model reads with the writer's schema (no schema-inference job) and is
+    * refused unless its IVF cell ids are exactly 0..n−1 and its subspaces
+    * exactly 0..m−1, each with codewords 0..ksub−1 of one length that
+    * together span the centroids' dims. */
   def pqIndexLoad(spark: org.apache.spark.sql.SparkSession,
       path: String): (Array[Array[Double]], Array[Array[Array[Double]]], DataFrame) = {
-    val rows = spark.read.parquet(s"$path/model").collect()
+    val rows = readModel(spark, s"$path/model", PqModelSchema)
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val cents = rows.filter(_._1 == -1).sortBy(_._2).map(_._3)
-    require(cents.nonEmpty, s"no IVF centroids at $path/model")
-    val subspaces = rows.map(_._1).filter(_ >= 0)
-    require(subspaces.nonEmpty, s"no PQ codebooks at $path/model")
-    val m = subspaces.max + 1
-    val ksub = rows.filter(_._1 == 0).map(_._2).max + 1
-    val cb = Array.fill(m, ksub)(Array.empty[Double])
-    rows.filter(_._1 >= 0).foreach { case (s, c, v) => cb(s)(c) = v }
+    val cents = cellOrdered(rows.collect { case (-1, c, v) => c -> v },
+      s"IVF centroids at $path/model")
+    val books = rows.filter(_._1 != -1).groupBy(_._1)
+    val m = books.size
+    require(m > 0 && books.keySet == (0 until m).toSet,
+      s"PQ subspaces at $path/model must be exactly 0..m−1, got " +
+        books.keys.toSeq.sorted.mkString(","))
+    val cb = Array.tabulate(m)(s => cellOrdered(books(s).map(r => r._2 -> r._3),
+      s"PQ codebook $s at $path/model"))
+    require(cb.map(_.length).distinct.length == 1,
+      s"PQ codebooks at $path/model differ in size: ${cb.map(_.length).mkString(",")}")
+    val lengths = cb.flatten.map(_.length).distinct
+    require(lengths.length == 1 && lengths(0) > 0,
+      s"PQ codewords at $path/model differ in length: ${lengths.mkString(",")}")
+    // an empty cell's centroid is empty; every other one spans the m subspaces
+    require(cents.forall(c => c.isEmpty || c.length == m * lengths(0)),
+      s"IVF centroids at $path/model do not span $m subspaces of ${lengths(0)}")
     (cents, cb, spark.read.parquet(s"$path/postings"))
   }
 
   /** IVF-PQ approximate top-k served from a SAVED index — [[pqTopK]]'s
-    * probe/ADC/refine stages with the train/encode stages replaced by
-    * the [[pqIndexSave]] dump: queries probe their `nProbe` best cells
-    * against the loaded centroid literals and ADC-score the saved codes
-    * (m array lookups per candidate — [[adcDtab]]/[[adcScore]], the
-    * exact expressions [[pqShortlist]] runs), with both postings reads —
-    * the code scan AND the raw-vector refine scan — dynamically pruned
-    * to the probed/shortlisted cells. Bit-identical to [[pqTopK]] at the
-    * same geometry. Size-gated broadcasts as [[ivfServeTopK]]: an
-    * oversized query set degrades to a planned join (pruning may then
-    * not fire) instead of a driver-OOM collect. */
+    * shortlist and refine ([[pqShortlist]], [[pqRefine]]) over the
+    * [[pqIndexSave]] dump instead of a session-built index: queries probe
+    * their `nProbe` best cells against the loaded centroid literals and
+    * ADC-score the saved codes, with both postings reads — the code scan
+    * AND the raw-vector refine scan — dynamically pruned to the
+    * probed/shortlisted cells. Bit-identical to [[pqTopK]] at the same
+    * geometry. Filtered retrieval follows the [[ivfServeTopK]] contract:
+    * the predicate — over [[pqIndexSave]] metaCols — restricts BOTH
+    * postings reads at the parquet scan itself, composing with the cell
+    * DPP. */
   def pqServeTopK(queries: DataFrame, spark: org.apache.spark.sql.SparkSession,
       path: String, k: Int, nProbe: Int = 4, refine: Int = 32,
       idCol: String = "vec_id", vecCol: String = "embedding",
       predicate: Option[Column] = None): DataFrame = {
     require(refine >= k, s"refine=$refine must be at least k=$k")
     val (centroids, cb, postings0) = pqIndexLoad(spark, path)
-    // filtered retrieval ([[ivfServeTopK]] contract): the predicate —
-    // over [[pqIndexSave]] metaCols — restricts BOTH postings reads (the
-    // ADC code scan and the exact refine scan) at the parquet scan
-    // itself, composing with the cell DPP
     val postings = predicate.fold(postings0)(postings0.filter)
-    val m = cb.length; val ksub = cb(0).length
-    def topCells(vec: Column, n: Int): Column =
-      slice(reverse(array_sort(cellScores(vec, centroids))), 1, n)
-    val q = withUnit(queries.filter(col(vecCol).isNotNull), vecCol, "__u")
-      .select(col(idCol).as("qid"), col("__u"),
-        explode(transform(topCells(col(vecCol), nProbe), _.getField("cell")))
-          .as("cell"))
-      .withColumn("dtab", adcDtab(cb))
-      .select(col("qid"), col("cell"), col("dtab"))
-    val qStatBytes = queries.queryExecution.optimizedPlan.stats.sizeInBytes
-    val bcMax = BigInt(256L << 20)
-    val probeBytes = qStatBytes * BigInt(math.max(1, nProbe))
-    val qSide = if (probeBytes <= bcMax) broadcast(q) else q
-    val wAdc = Window.partitionBy(col("qid")).orderBy(col("adc"), col("vid"))
-    // the shortlist KEEPS the cell key: the refine join below equi-joins
-    // on (cell, vid), so the broadcast shortlist's cells prune the second
-    // postings read the same way the probe pruned the first
-    val shortlist0 = qSide
-      .join(postings.select(col("cell"), col("vid"), col("code")), Seq("cell"))
-      .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), col("cell"), adcScore(m, ksub).as("adc"))
-      .withColumn("ra", row_number().over(wAdc))
-      .filter(col("ra") <= refine)
-      .select(col("qid"), col("vid"), col("cell"))
-    // the refine-side broadcasts get the SAME size gate as the probe: the
-    // shortlist is |Q|·refine slim rows (gated by the query stat scaled
-    // to refine — each shortlist row is far narrower than the query row
-    // the stat measures, so this over-counts, i.e. degrades early), and
-    // the query-vector frame is the raw query stat. Past the bound the
-    // refine degrades to planned joins (pruning may then not fire) —
-    // never a driver-OOM collect.
-    val shortlist =
-      if (qStatBytes * BigInt(math.max(1, refine)) <= bcMax)
-        broadcast(shortlist0) else shortlist0
-    val qVecs0 = queries.select(col(idCol).as("qid"), col(vecCol).as("qv"))
-    val qVecs = if (qStatBytes <= bcMax) broadcast(qVecs0) else qVecs0
-    val wCos = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid"))
-    postings.select(col("cell"), col("vid"), col("bv"))
-      .join(shortlist, Seq("cell", "vid"))
-      .join(qVecs, Seq("qid"))
-      .select(col("qid"), col("vid"), foldCosine(col("qv"), col("bv")).as("cosine"))
-      .withColumn("rk", row_number().over(wCos))
-      .filter(col("rk") <= k)
+    pqRefine(queries,
+      pqShortlist(queries, centroids, cb, postings, nProbe, refine, idCol, vecCol),
+      postings, Seq("cell", "vid"), k, refine, idCol, vecCol)
   }
 
   /** L2 normalization to fixed point — the preprocessing step that turns

@@ -1115,6 +1115,54 @@ class ExtOpsSpec extends SparkSpec {
       s"expected dynamic partition pruning on the postings scans:\n${plan.take(2000)}")
   }
 
+  test("saved ANN index dumps are refused unless cell ids and codebooks are complete") {
+    import org.apache.spark.graftbridge.Jobs
+    import org.apache.spark.sql.Row
+    import scala.jdk.CollectionConverters._
+    val e = Tables.load(spark, sf001, "embeddings")
+    val ivfDir = java.nio.file.Files.createTempDirectory("graft-ivfbad").toString
+    val pqDir = java.nio.file.Files.createTempDirectory("graft-pqbad").toString
+    Similarity.ivfIndexSave(e, ivfDir, nCells = 8)
+    Similarity.pqIndexSave(e, pqDir, m = 8, ksub = 16, nCells = 8)
+    // a copy of index `src` whose small `dump` keeps only edit(rows)
+    def variant(src: String, dump: String)(edit: Seq[Row] => Seq[Row]): String = {
+      val dst = java.nio.file.Files.createTempDirectory("graft-idxvar")
+      val from = java.nio.file.Paths.get(src, "postings")
+      scala.util.Using.resource(java.nio.file.Files.walk(from))(_.iterator().asScala.toList)
+        .foreach(f => java.nio.file.Files.copy(f, dst.resolve("postings").resolve(from.relativize(f))))
+      val df = spark.read.parquet(s"$src/$dump")
+      spark.createDataFrame(edit(df.collect().toSeq).asJava, df.schema)
+        .repartition(1).write.parquet(s"$dst/$dump")
+      dst.toString
+    }
+    // the complete dumps load, and their small dump reads in its one
+    // collect (no schema-inference job; the postings read keeps its own)
+    val (cents, _) = Similarity.ivfIndexLoad(spark, ivfDir)
+    val (pqCents, cb, _) = Similarity.pqIndexLoad(spark, pqDir)
+    assert(cents.length == 8 && pqCents.length == 8 && cb.length == 8 && cb.forall(_.length == 16))
+    val postingsJobs = Jobs.count(spark)(spark.read.parquet(s"$ivfDir/postings"))
+    assert(Jobs.count(spark)(Similarity.ivfIndexLoad(spark, ivfDir)) == postingsJobs + 1)
+    assert(Jobs.count(spark)(Similarity.pqIndexLoad(spark, pqDir)) == postingsJobs + 1)
+    def refused(dir: String, load: String => Any): Unit = {
+      val err = intercept[IllegalArgumentException](load(dir))
+      info(err.getMessage)
+    }
+    // a missing centroid row would shift every later cell id
+    refused(variant(ivfDir, "centroids")(_.filter(_.getInt(0) != 3)),
+      Similarity.ivfIndexLoad(spark, _))
+    refused(variant(ivfDir, "centroids")(rs => rs ++ rs.filter(_.getInt(0) == 3)),
+      Similarity.ivfIndexLoad(spark, _))
+    def pqVariant(edit: Seq[Row] => Seq[Row]) =
+      refused(variant(pqDir, "model")(edit), Similarity.pqIndexLoad(spark, _))
+    pqVariant(_.filter(_.getInt(0) != 0)) // no subspace 0
+    pqVariant(_.filter(_.getInt(0) != 7)) // 7 subspaces cannot cover a 64-dim centroid
+    pqVariant(_.filter(r => !(r.getInt(0) == 2 && r.getInt(1) == 5))) // one codeword gone
+    pqVariant(_.filter(r => !(r.getInt(0) == -1 && r.getInt(1) == 2))) // one IVF cell gone
+    pqVariant(_.map(r => if (r.getInt(0) == 1 && r.getInt(1) == 0)
+      Row(1, 0, r.getSeq[Double](2).take(3)) else r)) // one short codeword
+    pqVariant(_.filter(r => r.getInt(0) != 4 || r.getInt(1) < 8)) // one short codebook
+  }
+
   test("all six graft SQL functions resolve and compute via spark.sql") {
     graft.functions.GraftExtensions.functions
       .foreach(org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, _))

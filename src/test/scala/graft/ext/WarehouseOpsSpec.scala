@@ -290,6 +290,22 @@ class WarehouseOpsSpec extends SparkSpec {
     assert(shared(0).getAs[Int]("recall_ok") == 1)
   }
 
+  test("srpRecallBand: shared-dual band row equals the composed gate") {
+    import graft.core.Tables
+    val e = Tables.load(spark, sf001, "embeddings")
+    val q = e.filter(col("vec_id") < 32)
+    // q42's geometry: the shared-hub form ranks the SRP candidates by the
+    // dual's OWN fixed-point scores; the composed form ranks with
+    // foldCosine — both deterministic, and the band row must agree
+    val shared = Similarity.srpRecallBand(q, e, k = 5, minRecall = 0.25).collect()
+    val composed = Similarity.topKRecallBand(
+      Similarity.annLshTopK(q, e, 5),
+      Similarity.bruteForceTopK(q, e, 5), minRecall = 0.25).collect()
+    assert(shared.map(_.toSeq).toSeq == composed.map(_.toSeq).toSeq,
+      s"band rows diverged: ${shared.mkString} vs ${composed.mkString}")
+    assert(shared(0).getAs[Int]("recall_ok") == 1)
+  }
+
   // ---------------------------------------------------------- compaction
 
   test("compactParquet merges small files without changing content") {
