@@ -79,6 +79,11 @@ object Caches {
     }
   }
 
+  /** `df.count()`, memoized under the tag "count": every operator and
+    * query that counts the same plan shares one job per release point. */
+  def count(df: DataFrame): Long =
+    memo(df, "count")(java.lang.Long.valueOf(df.count())).longValue
+
   /** Persist a hub (MEMORY_AND_DISK — spills instead of recomputing) and
     * register it for [[unpersistAll]]. */
   def persist(df: DataFrame): DataFrame = {

@@ -121,8 +121,7 @@ object Dedup {
       permille: Int = 100): Int = {
     require(floorDf > 0 && permille > 0 && permille <= 1000,
       s"invalid df cap rule: floorDf=$floorDf permille=$permille")
-    val n = graft.core.Caches.memo(docs, "count")(
-      java.lang.Long.valueOf(docs.count())).longValue
+    val n = graft.core.Caches.count(docs)
     math.max(floorDf.toLong, n * permille / 1000L)
       .min(Int.MaxValue.toLong).toInt
   }
@@ -149,10 +148,7 @@ object Dedup {
     * exchange is planned once and reused, not paid twice. */
   private def sharedGramHub(docs: DataFrame, n: Int,
       idCol: String, textCol: String): DataFrame = {
-    val pos = graft.core.Tables.spread(docs).select(
-        col(idCol).as("id"),
-        posexplode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)))
-      .select(col("id"), (col("pos") + 1).cast(LongType).as("p"), col("col").as("sh"))
+    val pos = gramPositions(docs, n, idCol, textCol)
     val stats = pos.groupBy(col("sh"))
       .agg(min(col("id")).as("mn"), max(col("id")).as("mx"))
       .filter(col("mn") =!= col("mx"))
@@ -161,6 +157,34 @@ object Dedup {
       pos.hint("shuffle_hash").join(stats, Seq("sh"))
         .select(col("id"), col("p"), (col("id") === col("mn")).as("keep")))
   }
+
+  /** Positional word `n`-grams, one row per occurrence: `(id, riders…,
+    * p (1-based token position), sh)`; each rider is a named per-document
+    * column carried onto every occurrence. */
+  private[ext] def gramPositions(docs: DataFrame, n: Int, idCol: String,
+      textCol: String, riders: (String, org.apache.spark.sql.Column)*): DataFrame =
+    graft.core.Tables.spread(docs).select(
+        (col(idCol).as("id") +: riders.map { case (k, c) => c.as(k) } :+
+          posexplode(graft.functions.TextShingles.wordGramSeq(col(textCol), n))): _*)
+      .select((col("id") +: riders.map { case (k, _) => col(k) } :+
+        (col("pos") + 1).cast(LongType).as("p") :+ col("col").as("sh")): _*)
+
+  /** Every word `n`-gram occurrence of `docs` as one `sh` row. */
+  private[ext] def gramStream(docs: DataFrame, n: Int, textCol: String): DataFrame =
+    graft.core.Tables.spread(docs)
+      .select(explode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)).as("sh"))
+
+  /** Distinct `(id, pos)` token positions covered by gram hits `(id, p)`
+    * (map-side, at most `n` rows per hit). */
+  private[ext] def coveredPositions(hits: DataFrame, n: Int): DataFrame =
+    hits.select(col("id"), explode(sequence(col("p"), col("p") + (n - 1))).as("pos"))
+      .distinct()
+
+  /** Whether the word-`n`-gram set of `small` may broadcast: `n` times the
+    * optimizer's estimate of the input (read before the gram Generate, so
+    * no job) fits [[Similarity.fitsBroadcast]]'s envelope. */
+  private[ext] def gramsFitBroadcast(small: DataFrame, n: Int): Boolean =
+    Similarity.fitsBroadcast(Similarity.statBytes(small) * n)
 
   /** Cross-document REPEATED-SPAN extraction — the reporting core of
     * exact substring deduplication (Lee et al., "Deduplicating Training
@@ -229,40 +253,32 @@ object Dedup {
     * [[nearDupJaccardAcross]] set for the pairwise family); output rows
     * carry delta ids only.
     *
-    * Plan (the |delta| ≪ |corpus| ingest premise): the delta's DISTINCT
-    * gram set broadcasts; the corpus positional grams probe it IN PLACE
-    * (map-side semi-join — the corpus is scanned and shingled but NEVER
-    * shuffled); the surviving matched-gram set (≤ the delta set) then
-    * broadcasts back onto the delta's positional grams, also map-side.
-    * Two delta-sized broadcasts, zero corpus-sized shuffles; the only
-    * shuffles are the matched-set distinct (matched occurrences,
-    * map-side-combined) and the per-document islands window over delta
-    * hits. `broadcastDelta = false` degrades to pinned shuffle-hash
-    * joins for a delta too big to broadcast (shuffles the corpus gram
-    * set once — the heavy path, documented; identical output, tested).
+    * Plan: a delta whose size estimate fits ([[gramsFitBroadcast]] — the
+    * |delta| ≪ |corpus| ingest premise) broadcasts its DISTINCT gram set;
+    * the corpus positional grams probe it IN PLACE (map-side semi-join —
+    * the corpus is scanned and shingled but NEVER shuffled); the
+    * surviving matched-gram set (≤ the delta set) then broadcasts back
+    * onto the delta's positional grams, also map-side. Zero corpus-sized
+    * shuffles; the only shuffles are the matched-set distinct and the
+    * per-document islands window over delta hits. A delta past the
+    * envelope runs pinned shuffle-hash joins (shuffles the corpus gram
+    * set once — the heavy path; identical output, tested).
     * Spans report against the corpus only, so a span at the delta-batch
     * boundary is exactly what a daily ingest wants to see. */
   def repeatedSpansAgainst(delta: DataFrame, corpus: DataFrame, n: Int = 8,
-      minGrams: Int = 2, broadcastDelta: Boolean = true,
+      minGrams: Int = 2,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n > 0 && minGrams > 0,
       s"gram width and span floor must be positive: n=$n minGrams=$minGrams")
-    val dpos = graft.core.Caches.persist(
-      graft.core.Tables.spread(delta).select(
-          col(idCol).as("id"),
-          posexplode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)))
-        .select(col("id"), (col("pos") + 1).cast(LongType).as("p"),
-          col("col").as("sh")))
+    val dpos = graft.core.Caches.persist(gramPositions(delta, n, idCol, textCol))
     val dset = dpos.select(col("sh")).distinct()
-    val cgrams = graft.core.Tables.spread(corpus)
-      .select(explode(graft.functions.TextShingles.wordGramSeq(col(textCol), n))
-        .as("sh"))
+    val cgrams = gramStream(corpus, n, textCol)
     // the matched set is the pass's HUB: delta-bounded, and the one
     // subtree whose rebuild would re-scan and re-shingle the corpus —
     // persisting it means a report-then-act session (or a warm re-run)
     // pays the corpus pass once
     val hits =
-      if (broadcastDelta) {
+      if (gramsFitBroadcast(delta, n)) {
         val matched = graft.core.Caches.persist(
           cgrams.join(broadcast(dset), Seq("sh"), "left_semi").distinct())
         dpos.join(broadcast(matched), Seq("sh"), "left_semi")
@@ -307,11 +323,8 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n > 0, s"gram width must be positive: $n")
     val hub = sharedGramHub(docs, n, idCol, textCol)
-    def cover(hits: DataFrame): DataFrame = hits
-      .select(col("id"), explode(sequence(col("p"), col("p") + (n - 1))).as("pos"))
-      .distinct()
-    val rm = cover(hub.filter(!col("keep")))
-      .except(cover(hub.filter(col("keep"))))
+    val rm = coveredPositions(hub.filter(!col("keep")), n)
+      .except(coveredPositions(hub.filter(col("keep")), n))
     cutTokensAt(docs, rm, idCol, textCol)
   }
 
@@ -579,23 +592,34 @@ object Dedup {
   }
 
   /** One row per (doc, prefix token): the first |X| − ⌈t·|X|⌉ + 1 tokens
-    * of each doc's rarest-first array. ⌈t·n⌉ is computed as
+    * of each doc's rarest-first array, as `(shh, idAs)`. ⌈t·n⌉ is computed as
     * ceil(t·n·(1−1e-12) − 1e-9): IEEE t·n can land a hair ABOVE the exact
     * integer product (e.g. 100·0.55 = 55.000000000000007), and a ceil
     * overshoot would SHORTEN the prefix — the unsafe direction. The
     * relative term covers large n (0.5 ulp of the product grows past any
     * absolute ε around n·t ≈ 1e7), the absolute term covers small n;
     * either can only LENGTHEN a prefix by one token (harmless), keeping
-    * losslessness exact at boundaries. Shared by the self-join and
+    * losslessness exact at boundaries. Candidates need only EQUALITY of
+    * the prefix key, so it is hashed to 64 bits before any posting
+    * shuffle: a collision only MERGES two posting lists, adding
+    * candidates the exact verify discards. Shared by the self-join and
     * across (R-S) candidate generators. */
-  private def prefixExplode(hub: DataFrame, minJaccard: Double,
+  private def prefixKeys(hub: DataFrame, minJaccard: Double,
       idAs: String = "id"): DataFrame = {
     val prefixLen =
       (col("n") - ceil(col("n") * lit(minJaccard) * lit(1 - 1e-12) - lit(1e-9)) + lit(1))
         .cast(IntegerType)
     hub.select(col("id").as(idAs),
-      explode(slice(col("shs"), lit(1), prefixLen)).as("sh"))
+        explode(slice(col("shs"), lit(1), prefixLen)).as("sh"))
+      .select(xxhash64(col("sh")).as("shh"), col(idAs))
   }
+
+  /** Partitions for `volume` rows at ~`perPart` each, capped at the
+    * session default. */
+  private def shuffleParts(spark: org.apache.spark.sql.SparkSession,
+      volume: Long, perPart: Long): Int =
+    math.min(spark.sessionState.conf.numShufflePartitions.toLong,
+      math.max(1L, volume / perPart)).toInt
 
   private def prefixCandidates(hub: DataFrame, minJaccard: Double,
       sumN: Long): DataFrame = {
@@ -613,17 +637,8 @@ object Dedup {
     // cost ~ms each, so oversplitting is the safe direction); at corpus
     // scale the formula exceeds any session default and the repartition
     // returns the default unchanged.
-    val parts = math.min(
-      hub.sparkSession.sessionState.conf.numShufflePartitions.toLong,
-      math.max(1L, sumN / 25_000L)).toInt
-    // candidate generation needs only EQUALITY of the prefix key, so the
-    // fat (df||gram) string is hashed to 64 bits before the posting
-    // shuffle: a collision can only MERGE two posting lists, adding
-    // candidates the exact verify then discards — lossless, and the
-    // widest shuffle of the plan carries 8-byte longs instead of
-    // gram-sized strings.
-    prefixExplode(hub, minJaccard)
-      .select(xxhash64(col("sh")).as("shh"), col("id"))
+    val parts = shuffleParts(hub.sparkSession, sumN, 25_000L)
+    prefixKeys(hub, minJaccard)
       .repartition(parts, col("shh"))
       .groupBy(col("shh"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
@@ -691,7 +706,7 @@ object Dedup {
     val cap = if (maxDf > 0) maxDf else fractionalDfCap(docs)
     val full = textGroups(docs, idCol, textCol)
     val groups = slimGroups(full)
-    val hub = prefixHub(groupShingles(full, n, cap, mkShingles), cap)
+    val hub = prefixHub(groupShingles(full, n, mkShingles).filter(col("df") <= cap), cap)
     val st = hubStatsOf(hub)
     val repPairs = verifyJaccard(prefixCandidates(hub, minJaccard, st.grams),
       hub, hub, minJaccard, st, st)
@@ -715,10 +730,12 @@ object Dedup {
     * corpus-members (sides are disjoint id domains — the caller's
     * contract, no i<j reorder).
     *
-    * Plan: corpus postings aggregate once (uncapped df kept so delta can
-    * distinguish "capped" from "absent"), delta probes them with one
-    * shuffle-hash join, candidates come from prefix×prefix only, verify
-    * is the same merge-scan intersect as the self-join family. */
+    * Plan: the corpus df is [[groupShingles]]' window sum, uncapped and
+    * persisted (so delta can tell "capped" from "absent") — no posting
+    * list, so a hot shingle never makes a corpus-wide row. The corpus
+    * hub filters it to `df ≤ cap`; the delta probes its distinct
+    * `(sh, df)` with one shuffle-hash join. Candidates come from
+    * prefix×prefix only; verify is the self-join family's. */
   def nearDupJaccardAcross(delta: DataFrame, corpus: DataFrame, n: Int,
       maxDf: Int = 0, minJaccard: Double = 0.5,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -727,20 +744,11 @@ object Dedup {
     val cap = if (maxDf > 0) maxDf else fractionalDfCap(corpus)
     val dg = textGroups(delta, idCol, textCol)
     val cg = textGroups(corpus, idCol, textCol)
-    val cSh = cg.select(col("rep").as("id"), col("gsize"),
-      explode(shingleArray(col("gtext"), n)).as("sh"))
-    // uncapped postings persist: they feed the capped corpus explode AND
-    // the delta df probe (capped-vs-absent must stay distinguishable)
-    val postAll = graft.core.Caches.persist(
-      cSh.groupBy(col("sh")).agg(
-        collect_list(struct(col("id"), col("gsize"))).as("ids"),
-        sum(col("gsize")).as("df")))
-    val cShDf = postAll.filter(col("df") <= cap)
-      .select(col("sh"), col("df"), explode(col("ids")).as("m"))
-      .select(col("sh"), col("df"), col("m.id").as("id"))
-    val cHub = prefixHub(cShDf, cap)
+    val cDf = graft.core.Caches.persist(groupShingles(cg, n))
+    val cHub = prefixHub(cDf.filter(col("df") <= cap), cap)
     val dSh = dg.select(col("rep").as("id"), explode(shingleArray(col("gtext"), n)).as("sh"))
-      .join(postAll.select(col("sh"), col("df")).hint("shuffle_hash"), Seq("sh"), "left")
+      .join(cDf.select(col("sh"), col("df")).distinct().hint("shuffle_hash"),
+        Seq("sh"), "left")
       .select(col("sh"), coalesce(col("df"), lit(0L)).as("df"), col("id"))
       .filter(col("df") <= cap)
     val dHub = prefixHub(dSh, cap)
@@ -748,14 +756,9 @@ object Dedup {
     val stC = hubStatsOf(cHub)
     val cand = prefixCandidatesAcross(dHub, cHub, minJaccard)
     val repPairs = verifyJaccard(cand, dHub, cHub, minJaccard, stD, stC)
-    // persist the SLIM group projections for the expansion joins: dg/cg
-    // also feed the shingle subtrees above, so without a persist each
-    // expansion join re-runs the full per-side text groupBy (the only
-    // corpus-scale recompute left in the steady-state plan). members-only
-    // rows — tiny next to the posting/hub caches, released with them.
-    val dgS = graft.core.Caches.persist(dg.select(col("rep"), col("members")))
-    val cgS = graft.core.Caches.persist(cg.select(col("rep"), col("members")))
-    expandCross(repPairs, dgS, cgS, "jaccard", reorder = false)
+    // the persisted slim groups keep each expansion join from re-running
+    // its side's full text groupBy
+    expandCross(repPairs, slimGroups(dg), slimGroups(cg), "jaccard", reorder = false)
   }
 
   /** Prefix candidates ACROSS two hubs: delta prefixes probe corpus
@@ -764,12 +767,8 @@ object Dedup {
     * this op's contract); the corpus-sized posting stream probes it. */
   private def prefixCandidatesAcross(dHub: DataFrame, cHub: DataFrame,
       minJaccard: Double): DataFrame =
-    // same 64-bit key hashing as the self-join candidates (merge-only,
-    // exact-verify-safe): the corpus-sized prefix stream shuffles longs
-    prefixExplode(dHub, minJaccard, "i")
-      .select(xxhash64(col("sh")).as("shh"), col("i")).hint("shuffle_hash")
-      .join(prefixExplode(cHub, minJaccard, "j")
-        .select(xxhash64(col("sh")).as("shh"), col("j")), Seq("shh"))
+    prefixKeys(dHub, minJaccard, "i").hint("shuffle_hash")
+      .join(prefixKeys(cHub, minJaccard, "j"), Seq("shh"))
       .select(col("i"), col("j"))
       .distinct()
 
@@ -800,20 +799,19 @@ object Dedup {
     graft.core.Caches.persist(
       full.select(col("rep"), col("members"), col("gsize")))
 
-  /** Capped (id=rep, sh, df) over distinct texts, df weighted by group
+  /** Uncapped (sh, df, id=rep) over distinct texts, df weighted by group
     * size == doc frequency over ALL copies. df is a window sum over the
     * shingle partition — same one shuffle as the former
     * collect_list-and-explode-back posting build, but fully codegen'd and
     * list-free (see [[cappedWithDf]] for the measured numbers and the
     * hot-shingle memory argument). */
-  private def groupShingles(groups: DataFrame, n: Int, maxDf: Int,
+  private def groupShingles(groups: DataFrame, n: Int,
       mkShingles: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
         shingleArray): DataFrame =
     groups.select(col("rep").as("id"), col("gsize"),
         explode(mkShingles(col("gtext"), n)).as("sh"))
       .withColumn("df", sum(col("gsize")).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
-      .filter(col("df") <= maxDf)
       .select(col("sh"), col("df"), col("id"))
 
   /** Expand representative pairs back to member pairs: cross-group rep
@@ -1104,7 +1102,7 @@ object Dedup {
     val cap = if (maxDf > 0) maxDf else fractionalDfCap(docs)
     val full = textGroups(docs, idCol, textCol)
     val groups = slimGroups(full)
-    val sh = groupShingles(full, n, cap)
+    val sh = groupShingles(full, n).filter(col("df") <= cap)
       .select(col("id"), col("sh"), xxhash64(col("sh")).as("h0"))
     val aggs = Seq(sort_array(collect_list(col("sh"))).as("shs"), count(lit(1)).as("n")) ++
       minhashFamily(col("h0"), numHashes).zipWithIndex
@@ -1119,11 +1117,9 @@ object Dedup {
     // prefixCandidates granularity — the minhash band probe is CPU-denser
     // per row than simhash's 4-band join, and a 50k target measured a
     // ~0.1 s warm regression at sf0.1's 160k band rows).
-    val nDocs = graft.core.Caches.memo(docs, "count")(
-      java.lang.Long.valueOf(docs.count())).longValue
-    val bandParts = math.min(
-      docs.sparkSession.sessionState.conf.numShufflePartitions.toLong,
-      math.max(1L, (numHashes / rowsPerBand) * nDocs / 12_000L)).toInt
+    val nDocs = graft.core.Caches.count(docs)
+    val bandParts = shuffleParts(docs.sparkSession,
+      (numHashes / rowsPerBand) * nDocs, 12_000L)
     val cand = lshCandidates(hub, rowsPerBand, numHashes / rowsPerBand, bandParts)
     val arrs = hub.select(col("id"), col("shs"), col("n"))
     // one-job stats over the persisted hub (doubles as its explicit
@@ -1209,11 +1205,8 @@ object Dedup {
     // past ~400k docs the formula returns the session default unchanged,
     // so production plans are untouched. The doc count is metadata-cheap
     // (parquet rowcount) and memoized.
-    val nDocs = graft.core.Caches.memo(docs, "count")(
-      java.lang.Long.valueOf(docs.count())).longValue
-    val parts = math.min(
-      docs.sparkSession.sessionState.conf.numShufflePartitions.toLong,
-      math.max(1L, 4L * nDocs / 50_000L)).toInt
+    val nDocs = graft.core.Caches.count(docs)
+    val parts = shuffleParts(docs.sparkSession, 4L * nDocs, 50_000L)
     val banded = sig.select(col("id"), col("sig"),
       posexplode(array((0 until 4).map(k =>
         shiftright(col("sig"), 15 * k).bitwiseAND(lit(0x7FFFL))): _*)).as(Seq("band", "bh")))
@@ -1402,7 +1395,7 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val decision = dedupDecision(docs, pairs, idCol)
     val canonBucket = docs.select(col(idCol).as("cluster_id"),
-      pmod(TextAnalysis.hash60(col(textCol)), lit(100L)).as("split_bucket"))
+      TextAnalysis.splitBucket(col(textCol)).as("split_bucket"))
     decision.join(canonBucket, Seq("cluster_id"))
       .withColumn("split",
         TextAnalysis.splitLabel(col("split_bucket"), trainPct, valPct))
@@ -1527,26 +1520,26 @@ object Dedup {
     * Scale shape: the corpus contributes ONE distinct-fingerprint
     * projection — 32-byte constant-width keys, never document bodies —
     * into a single anti-join shuffle (or a broadcast when the delta side
-    * is small enough for AQE to flip the build side); the delta pays one
-    * keyed aggregate. Nothing corpus-sized is collected or rewritten. */
+    * is small enough for AQE to flip the build side); the delta pays
+    * [[exactDedup]]'s keyed aggregate. Nothing corpus-sized is collected
+    * or rewritten. */
   def exactDedupAgainst(delta: DataFrame, corpus: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val d = TextAnalysis.fingerprint(delta.filter(col(textCol).isNotNull), textCol)
       .select(col(idCol), col("fp_md5"), col("fp60"))
-    val dGroups = d.groupBy(col("fp_md5"))
-      .agg(min(col(idCol)).as("__keep_id"), count(lit(1)).as("n_delta_copies"))
     val cFp = corpus.filter(col(textCol).isNotNull)
       .select(md5(col(textCol)).as("fp_md5")).distinct()
-    d.join(dGroups, Seq("fp_md5"))
+    keyedDedupAnnotate(d, "fp_md5", idCol, "__keep_id", "n_delta_copies",
+        keepNullKeys = false)
       .filter(col(idCol) === col("__keep_id"))
       .join(cFp, Seq("fp_md5"), "left_anti")
       .select(col(idCol), col("fp60"), col("n_delta_copies"))
   }
 
-  /** The keyed dedup-annotation shape shared by [[exactDedup]] and
-    * [[TextAnalysis.urlDedup]]: group on `keyCol`, elect the min-id
-    * canonical, count copies, annotate every input row via a join back.
-    * `keepNullKeys = true` keeps null-keyed rows (left join — an equi-join
+  /** The keyed dedup-annotation shape of [[exactDedup]],
+    * [[exactDedupAgainst]] and [[TextAnalysis.urlDedup]]: group on
+    * `keyCol`, elect the min-id canonical, count copies, annotate every
+    * input row via a join back. `keepNullKeys = true` keeps null-keyed rows (left join — an equi-join
     * never matches null keys) with null canonical/count, making the pass
     * total; `false` drops them (an inner join). One shuffle on the key. */
   private[ext] def keyedDedupAnnotate(df: DataFrame, keyCol: String,

@@ -404,10 +404,7 @@ object Similarity {
         "compensates recall for the plane count, so fixing one without the " +
         "other silently breaks the recall contract")
     val auto = planesPerBand == 0
-    val n =
-      if (!auto) 0L
-      else graft.core.Caches.memo(base, "count")(
-        java.lang.Long.valueOf(base.count())).longValue
+    val n = if (!auto) 0L else graft.core.Caches.count(base)
     val denseMax = base.sparkSession.conf
       .getOption("spark.graft.similarity.pairsDenseMaxBase")
       .map(_.toLong).getOrElse(1L << 17)
@@ -505,8 +502,7 @@ object Similarity {
       // moves. Past the envelope the shuffle_hash form is the correct
       // fallback (a >256 MB hub cannot broadcast), and candidates·dims
       // exchange bytes are the documented cost of banded verify there.
-      val repsEst = if (auto) n else graft.core.Caches.memo(hub, "count")(
-        java.lang.Long.valueOf(hub.count())).longValue
+      val repsEst = if (auto) n else graft.core.Caches.count(hub)
       val hubVecBytes = repsEst * (24L + 8L * dims)
       def vecs(side: String) =
         if (fitsBroadcast(hubVecBytes)) broadcast(pairSide(hub, "id", side))
@@ -551,7 +547,7 @@ object Similarity {
   /** The family's broadcast envelope: a side estimated at ≤ 256 MB may
     * broadcast; past it the plan must shuffle — collecting a larger side
     * to the driver would OOM where a planned join survives. */
-  private def fitsBroadcast(bytes: BigInt): Boolean = bytes <= BigInt(256L << 20)
+  private[ext] def fitsBroadcast(bytes: BigInt): Boolean = bytes <= BigInt(256L << 20)
 
   /** `df` hinted to broadcast while `bytes` fits [[fitsBroadcast]]; past
     * it the hint is dropped and the planner picks the join. */
@@ -559,7 +555,7 @@ object Similarity {
     if (fitsBroadcast(bytes)) broadcast(df) else df
 
   /** The optimizer's size estimate of `df` — free, no job. */
-  private def statBytes(df: DataFrame): BigInt =
+  private[ext] def statBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Last [[annLshPairs]] path choice ("dense" | "banded") — the
@@ -699,8 +695,7 @@ object Similarity {
       .select(col("qid").as("anchor_id"), lit("pos").as("role"),
         lit(0L).as("draw"), col("top").getField("id").as("other_id"),
         col("top").getField("score").as("cosine"))
-    val n = graft.core.Caches.memo(base, "count")(
-      java.lang.Long.valueOf(base.count())).longValue
+    val n = graft.core.Caches.count(base)
     val draws = anchors.select(col(idCol).as("anchor_id"),
         explode(sequence(lit(1L), lit(negPerAnchor.toLong))).as("draw"))
       .withColumn("seq", pmod(graft.functions.TextMetrics.hash60(

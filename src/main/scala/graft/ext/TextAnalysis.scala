@@ -248,10 +248,15 @@ object TextAnalysis {
     * Map-only: a projection, no shuffle, safe at any corpus size. */
   def deterministicSplit(docs: DataFrame, trainPct: Int = 80, valPct: Int = 10,
       textCol: String = "text"): DataFrame = {
-    val bucket = pmod(hash60(col(textCol)), lit(100L))
+    val bucket = splitBucket(col(textCol))
     docs.withColumn("split_bucket", bucket)
       .withColumn("split", splitLabel(bucket, trainPct, valPct))
   }
+
+  /** The 0-99 content bucket every split-aware operator keys on: the
+    * 60-bit content fingerprint mod 100. */
+  def splitBucket(text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    pmod(hash60(text), lit(100L))
 
   /** The split rule of [[deterministicSplit]] on an ALREADY-COMPUTED
     * 0-99 bucket — for callers that carry the content hash (e.g. a dedup
@@ -319,27 +324,23 @@ object TextAnalysis {
     * benchmark, and the contaminated fraction (one exact-integer division).
     *
     * Scale posture: the benchmark side is the small one by nature (eval
-    * suites are thousands of documents against a 100 TB corpus), so its
-    * distinct gram set is BROADCAST — the corpus side stays a map-only
-    * scan + broadcast semi-probe followed by one per-doc count; the corpus
-    * is never shuffled on the gram key. For an unusually large benchmark
-    * set `broadcastBench = false` degrades to a shuffle join on the gram.
+    * suites are thousands of documents against a 100 TB corpus), so while
+    * its size estimate fits ([[benchGramSide]]) its distinct gram set is
+    * BROADCAST — the corpus side stays a map-only scan + broadcast
+    * semi-probe followed by one per-doc count; the corpus is never
+    * shuffled on the gram key. A benchmark estimated past the envelope
+    * runs a pinned shuffle-hash join on the gram instead (same output).
     * The gram rule is [[Dedup.wordShingles]]'s (docs shorter than n tokens
     * contribute all their tokens as one gram). */
   def ngramContamination(corpus: DataFrame, bench: DataFrame, n: Int,
-      broadcastBench: Boolean = true,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val cg = Dedup.wordShingles(corpus, n, idCol, textCol)
-    val bg0 = Dedup.wordShingles(bench, n, idCol, textCol)
-      .select(col("sh")).distinct().withColumn("hit", lit(1))
+    val bg = benchGramSide(bench, n, Dedup.wordShingles(bench, n, idCol, textCol)
+      .select(col("sh")).distinct().withColumn("hit", lit(1)))
     // ONE pass over the corpus grams: a left join marks benchmark hits
     // (bg is distinct, so ≤1 match per gram) and a single per-doc
     // aggregation counts total and contaminated grams together — the
-    // corpus is never shingled twice. The non-broadcast fallback pins
-    // shuffle_hash: both sides sit behind a Generate whose cardinality
-    // the estimator cannot see, and AQE mis-broadcasting an exploded
-    // corpus-sized side is this repo's recorded OOM pitfall.
-    val bg = if (broadcastBench) broadcast(bg0) else bg0.hint("shuffle_hash")
+    // corpus is never shingled twice
     cg.join(bg, Seq("sh"), "left")
       .groupBy(col("id"))
       .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_contaminated"))
@@ -348,6 +349,13 @@ object TextAnalysis {
         (col("n_contaminated").cast(DoubleType) / col("n_grams").cast(DoubleType))
           .as("contamination_frac"))
   }
+
+  /** `bench`'s distinct width-`n` gram set `grams`, broadcast while
+    * [[Dedup.gramsFitBroadcast]] holds, else pinned to shuffle_hash: both
+    * join sides sit behind a Generate the estimator cannot see, and AQE
+    * mis-broadcasting an exploded corpus-sized side is an OOM. */
+  private def benchGramSide(bench: DataFrame, n: Int, grams: DataFrame): DataFrame =
+    if (Dedup.gramsFitBroadcast(bench, n)) broadcast(grams) else grams.hint("shuffle_hash")
 
   /** [[ngramContamination]] for the train-vs-test shape over ONE corpus
     * split by [[deterministicSplit]] — the decontamination check as run
@@ -439,12 +447,8 @@ object TextAnalysis {
     require(trainPct > 0 && valPct >= 0 && trainPct + valPct <= 100,
       s"invalid split percentages: train=$trainPct val=$valPct")
     val testLo = trainPct + valPct
-    val pos = graft.core.Tables.spread(docs).select(
-        col(idCol).as("id"),
-        pmod(hash60(col(textCol)), lit(100L)).as("bucket"),
-        posexplode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)))
-      .select(col("id"), col("bucket"),
-        (col("pos") + 1).cast(LongType).as("p"), col("col").as("sh"))
+    val pos = Dedup.gramPositions(docs, n, idCol, textCol,
+      "bucket" -> splitBucket(col(textCol)))
     val testGrams = pos.groupBy(col("sh"))
       .agg(max(col("bucket")).as("mxb"))
       .filter(col("mxb") >= testLo)
@@ -452,11 +456,8 @@ object TextAnalysis {
     val hits = pos.hint("shuffle_hash").join(testGrams, Seq("sh"))
       .filter(col("bucket") < trainPct)
       .select(col("id"), col("p"))
-    val rm = hits
-      .select(col("id"), explode(sequence(col("p"), col("p") + (n - 1))).as("pos"))
-      .distinct()
-    val train = docs.filter(pmod(hash60(col(textCol)), lit(100L)) < trainPct)
-    Dedup.cutTokensAt(train, rm, idCol, textCol)
+    val train = docs.filter(splitBucket(col(textCol)) < trainPct)
+    Dedup.cutTokensAt(train, Dedup.coveredPositions(hits, n), idCol, textCol)
   }
 
   /** Two-corpus decontamination rewrite — [[decontaminateSpans]] against
@@ -464,16 +465,14 @@ object TextAnalysis {
     * token covered by a word `n`-gram occurring anywhere in `bench`.
     * This is the shape production decontamination actually runs in —
     * eval suites are megabytes next to a multi-terabyte train corpus —
-    * and the plan exploits it: the bench gram set builds map-side,
+    * and the plan exploits it: while the bench side's size estimate
+    * fits ([[benchGramSide]]), the bench gram set builds map-side,
     * dedups, and BROADCASTS, so the corpus-side positional grams are
     * probed in place and NEVER shuffle (a map-only pass over the corpus;
     * the same tradeoff [[ngramContamination]] documents against
-    * [[splitContamination]], now for the rewrite half). With
-    * `broadcastBench = false` the probe runs as a pinned shuffle-hash
-    * join instead — for oversized bench sides; both sides sit behind a
-    * Generate whose cardinality the estimator cannot see, and AQE
-    * mis-broadcasting an exploded corpus-sized side is this repo's
-    * recorded OOM pitfall. Identical output either way (tested).
+    * [[splitContamination]], now for the rewrite half). A bench side
+    * estimated past the envelope runs the probe as a pinned shuffle-hash
+    * join instead. Identical output either way (tested).
     *
     * Output is total on `corpus` (the [[Dedup.cutTokensAt]] contract):
     * `(idCol, clean_text, n_tokens, n_removed, n_spans)`; null text →
@@ -482,22 +481,12 @@ object TextAnalysis {
     * test, n)` over a [[deterministicSplit]] pair equals
     * `decontaminateSpans(all, n)` row-for-row (spec-pinned). */
   def decontaminateAgainst(corpus: DataFrame, bench: DataFrame, n: Int = 8,
-      broadcastBench: Boolean = true,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n > 0, s"gram width must be positive: $n")
-    val pos = graft.core.Tables.spread(corpus).select(
-        col(idCol).as("id"),
-        posexplode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)))
-      .select(col("id"), (col("pos") + 1).cast(LongType).as("p"), col("col").as("sh"))
-    val bg0 = graft.core.Tables.spread(bench)
-      .select(explode(graft.functions.TextShingles.wordGramSeq(col(textCol), n)).as("sh"))
-      .distinct()
-    val bg = if (broadcastBench) broadcast(bg0) else bg0.hint("shuffle_hash")
-    val hits = pos.join(bg, Seq("sh")).select(col("id"), col("p"))
-    val rm = hits
-      .select(col("id"), explode(sequence(col("p"), col("p") + (n - 1))).as("pos"))
-      .distinct()
-    Dedup.cutTokensAt(corpus, rm, idCol, textCol)
+    val bg = benchGramSide(bench, n, Dedup.gramStream(bench, n, textCol).distinct())
+    val hits = Dedup.gramPositions(corpus, n, idCol, textCol)
+      .join(bg, Seq("sh")).select(col("id"), col("p"))
+    Dedup.cutTokensAt(corpus, Dedup.coveredPositions(hits, n), idCol, textCol)
   }
 
   /** Batch-side producer of the contamination gate's blocklist: the
@@ -617,7 +606,7 @@ object TextAnalysis {
     graft.core.Caches.persist(
       graft.core.Tables.spread(docs).select(
           col(idCol).as("id"),
-          pmod(hash60(col(textCol)), lit(100L))
+          splitBucket(col(textCol))
             .cast(org.apache.spark.sql.types.IntegerType).as("bucket"),
           Dedup.wordShingleArray(col(textCol), n).as("grams"))
         .select(col("id"), col("bucket"),

@@ -329,8 +329,7 @@ object Corpus {
   // scanned but never shuffled — the daily-ingest shape.
   def q131_spans_against(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val total = graft.core.Caches.memo(d, "count")(
-      java.lang.Long.valueOf(d.count())).longValue
+    val total = graft.core.Caches.count(d)
     val lo = total * 9 / 10
     graft.ext.Dedup.repeatedSpansAgainst(
         d.filter(col("doc_id") >= lo), d.filter(col("doc_id") < lo),
@@ -493,7 +492,7 @@ object Corpus {
   // where q126 exercises the one-corpus split form.
   def q128_decontaminate_against(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val bucket = pmod(TextAnalysis.hash60(col("text")), lit(100L))
+    val bucket = TextAnalysis.splitBucket(col("text"))
     TextAnalysis.decontaminateAgainst(
         d.filter(bucket < 80), d.filter(bucket >= 80), n = 13)
       .orderBy(col("doc_id"))
@@ -546,7 +545,7 @@ object Corpus {
   // agree).
   def q129_contamination_gate(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val bucket = pmod(TextAnalysis.hash60(col("text")), lit(100L))
+    val bucket = TextAnalysis.splitBucket(col("text"))
     // the blocklist collect is the gate's contract (bench sets are small
     // by premise — flagNearDups' task-binary envelope, documented there);
     // memoized per bench plan so warm re-runs skip the collect job
@@ -1065,8 +1064,7 @@ object Corpus {
   // text at every scale). Full-md5 fingerprints decide membership.
   def q137_exact_dedup_against(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val total = graft.core.Caches.memo(d, "count")(
-      java.lang.Long.valueOf(d.count())).longValue
+    val total = graft.core.Caches.count(d)
     val lo = total * 9 / 10
     Dedup.exactDedupAgainst(
         d.filter(col("doc_id") >= lo), d.filter(col("doc_id") < lo))

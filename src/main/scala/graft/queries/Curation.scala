@@ -116,8 +116,7 @@ object Curation {
     // 5.4 s at |B|/250 on 10× data. Floors at 8, so the plan (and the
     // oracle hash) is unchanged at sf0.01/sf0.1; the count is one
     // metadata-cheap job.
-    val cells = math.max(8L,
-      graft.core.Caches.memo(e, "count")(java.lang.Long.valueOf(e.count())).longValue / 250L).toInt
+    val cells = math.max(8L, graft.core.Caches.count(e) / 250L).toInt
     val sd = Similarity.semanticDedup(e, minCosine = 0.4, nCells = cells)
       .select(col("vec_id"), col("sem_canonical_id"))
     // persist the pair/label fan-out points (both id-only — KB-scale rows):

@@ -369,7 +369,7 @@ object Warehouse {
     // 0.2 gate at refine=32, 0.27 at the scaled 128). ~2.5% of the ranked
     // candidates reach the exact re-rank, floored at the bench-scale 32;
     // the shortlist stays |Q|·refine — bounded, broadcastable.
-    val n = graft.core.Caches.memo(e, "count")(java.lang.Long.valueOf(e.count())).longValue
+    val n = graft.core.Caches.count(e)
     // nCells/nProbe feed BOTH the refine formula and the operator call:
     // one binding, so the probed-volume scaling can never drift from the
     // actual probe geometry if either value changes

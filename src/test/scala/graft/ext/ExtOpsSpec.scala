@@ -12,6 +12,21 @@ class ExtOpsSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** The join strategies hinted anywhere in `df`'s optimized plan. */
+  private def joinHints(df: org.apache.spark.sql.DataFrame): Set[String] =
+    "strategy=(\\w+)".r.findAllMatchIn(df.queryExecution.optimizedPlan.toString)
+      .map(_.group(1)).toSet
+
+  /** `body` run while file sources estimate their size at 10⁶× the bytes
+    * on disk: past the gram-broadcast envelope for any fixture file, so
+    * the delta-vs-corpus ops plan their shuffle join. Frames must be read
+    * inside `body` — a plan caches its size estimate. */
+  private def withHugeFileEstimates[T](body: => T): T = {
+    val key = "spark.sql.sources.fileCompressionFactor"
+    spark.conf.set(key, "1000000")
+    try body finally spark.conf.unset(key)
+  }
+
   test("exactDedup collapses identical texts to one canonical id") {
     val df = Seq(
       (1L, "same text"), (2L, "same text"), (3L, "unique text")
@@ -95,13 +110,21 @@ class ExtOpsSpec extends SparkSpec {
       (102L, s"z1 $D"), (103L, s"w1 w2 $D"),
       // shares the corpus doc-2 text → span, proving any corpus doc counts
       (104L, "q1 c4 c5 c6 c7 c8 c9 c10 c11 q2")).toDF("doc_id", "text")
-    def run(bcast: Boolean) = Dedup.repeatedSpansAgainst(
-        delta, corpus, n = 8, minGrams = 1, broadcastDelta = bcast)
-      .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("span_start"),
-        r.getAs[Long]("span_len"), r.getAs[Long]("n_grams"))).toSet
-    val got = run(bcast = true)
+    def run(d: org.apache.spark.sql.DataFrame) = {
+      val out = Dedup.repeatedSpansAgainst(d, corpus, n = 8, minGrams = 1)
+      (joinHints(out), out.collect().map(r => (r.getAs[Long]("doc_id"),
+        r.getAs[Long]("span_start"), r.getAs[Long]("span_len"),
+        r.getAs[Long]("n_grams"))).toSet)
+    }
+    val (hints, got) = run(delta)
+    assert(hints.contains("broadcast"), s"a small delta broadcasts, hints $hints")
     assert(got == Set((101L, 3L, 16L, 9L), (104L, 2L, 8L, 1L)), s"got $got")
-    assert(run(bcast = false) == got)
+    // a delta estimated past the envelope takes the pinned shuffle-hash path
+    val path = java.nio.file.Files.createTempDirectory("spans-delta").toString + "/d"
+    delta.write.parquet(path)
+    val (hintsS, gotS) = withHugeFileEstimates(run(spark.read.parquet(path)))
+    assert(hintsS == Set("shuffle_hash"), s"hints $hintsS")
+    assert(gotS == got)
     graft.core.Caches.unpersistAll()
   }
 
@@ -225,11 +248,18 @@ class ExtOpsSpec extends SparkSpec {
         r.getAs[Any]("n_tokens"), r.getAs[Any]("n_removed"),
         r.getAs[Any]("n_spans"))).toSet
     val viaSplit = key(TextAnalysis.decontaminateSpans(docs, n = 8))
-    val viaPair = key(TextAnalysis.decontaminateAgainst(train, test90, n = 8))
-    assert(viaPair == viaSplit)
-    // pinned shuffle-hash fallback returns the identical rewrite
-    val viaShuffle = key(TextAnalysis.decontaminateAgainst(
-      train, test90, n = 8, broadcastBench = false))
+    val pair = TextAnalysis.decontaminateAgainst(train, test90, n = 8)
+    assert(joinHints(pair) == Set("broadcast"))
+    assert(key(pair) == viaSplit)
+    // a bench side estimated past the envelope takes the pinned
+    // shuffle-hash fallback and returns the identical rewrite
+    val viaShuffle = withHugeFileEstimates {
+      val d = Tables.load(spark, sf001, "documents")
+      val out = TextAnalysis.decontaminateAgainst(
+        d.filter(bucket < 80), d.filter(bucket >= 90), n = 8)
+      assert(joinHints(out) == Set("shuffle_hash"))
+      key(out)
+    }
     assert(viaShuffle == viaSplit)
     graft.core.Caches.unpersistAll()
   }
@@ -652,6 +682,14 @@ class ExtOpsSpec extends SparkSpec {
     assert(TextAnalysis.decontaminateSpans(empty, n = 8).count() == 0L)
     assert(TextAnalysis.decontaminateAgainst(one, empty, n = 8)
       .collect().map(_.getAs[Long]("n_removed")).toSeq == Seq(0L))
+    // near-dup and exact dedup against an empty side: no pairs; an empty
+    // corpus rejects nothing, an empty delta admits nothing
+    assert(Dedup.nearDupJaccardAcross(empty, one, n = 4).count() == 0L)
+    assert(Dedup.nearDupJaccardAcross(one, empty, n = 4).count() == 0L)
+    assert(Dedup.exactDedupAgainst(empty, one).count() == 0L)
+    assert(Dedup.exactDedupAgainst(one, empty).collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_delta_copies")).toSeq
+      == Seq(1L -> 1L))
     // gate with an empty blocklist: nothing flags, null text stays null
     val g = TextAnalysis.flagContaminated(
       Seq((1L, "x y z"), (2L, null.asInstanceOf[String])).toDF("doc_id", "text"),
@@ -2042,14 +2080,21 @@ class ExtOpsSpec extends SparkSpec {
       (2L, "zeta eta theta iota kappa")          // disjoint
     ).toDF("doc_id", "text")
     val bench = Seq((100L, "beta gamma delta unrelated tail")).toDF("doc_id", "text")
-    def run(bcast: Boolean) = TextAnalysis
-      .ngramContamination(corpus, bench, n = 3, broadcastBench = bcast).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[Long]("n_grams"), r.getAs[Long]("n_contaminated"))).toMap
-    val out = run(bcast = true)
+    def run(b: org.apache.spark.sql.DataFrame) = {
+      val res = TextAnalysis.ngramContamination(corpus, b, n = 3)
+      (joinHints(res), res.collect().map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("n_grams"), r.getAs[Long]("n_contaminated"))).toMap)
+    }
+    val (hints, out) = run(bench)
+    assert(hints == Set("broadcast"))
     assert(out.keySet == Set(1L), "only the overlapping doc is flagged")
     assert(out(1L) == (3L, 1L)) // 3 trigrams, 1 shared ("beta gamma delta")
-    assert(run(bcast = false) == out, "shuffle path computes the same result")
+    // a bench estimated past the envelope takes the shuffle path
+    val path = java.nio.file.Files.createTempDirectory("contam-bench").toString + "/b"
+    bench.write.parquet(path)
+    val (hintsS, outS) = withHugeFileEstimates(run(spark.read.parquet(path)))
+    assert(hintsS == Set("shuffle_hash"))
+    assert(outS == out, "shuffle path computes the same result")
   }
 
   test("noveltyScore: shared grams score 0, unique grams score 1") {
@@ -2176,6 +2221,39 @@ class ExtOpsSpec extends SparkSpec {
     val crossSelf = self.filter { case (i, j, _) => i < 40 && j >= 40 }
       .map { case (i, j, v) => (j, i, v) }.toSet  // across emits (delta, corpus)
     assert(across == crossSelf && across.nonEmpty)
+  }
+
+  test("nearDupJaccardAcross: over-cap corpus shingles drop on both sides, delta-only shingles stay") {
+    val (n, maxDf, minJ) = (4, 2, 0.5)
+    val corpus = Seq(
+      (1L, "abcdefghZZZZZZ"), (2L, "ijklmnopZZZZZZ"), (3L, "qrstuvwxZZZZZZ"),
+      (4L, "ABCDEFGHIJ"), (5L, "KLMNOPQR"))
+    val delta = Seq(
+      (10L, "abcdefghZZZZZZ9"),   // c1 plus the over-cap "ZZZZ" and delta-only "ZZZ9"
+      (11L, "ABCDEFGHIJ*+"),      // c4 plus two delta-only shingles
+      (12L, "ZZZZZZ"),            // nothing but the over-cap shingle
+      (13L, "KLMNOPZZZZZZQR"))
+    def grams(t: String) = if (t.length < n) Set(t) else t.sliding(n).toSet
+    val cdf = corpus.flatMap(c => grams(c._2).toSeq).groupBy(identity)
+      .map { case (g, v) => g -> v.size }
+    def pairs(deltaSet: String => Set[String]) = for {
+      (i, ti) <- delta; (j, tj) <- corpus
+      a = deltaSet(ti); b = grams(tj).filter(cdf(_) <= maxDf)
+      c = (a & b).size; u = a.size + b.size - c
+      if u > 0 && c.toDouble / u >= minJ
+    } yield (i, j, c.toDouble / u)
+    // the capped universe: corpus df ≤ maxDf, a delta-only shingle has df 0
+    val expected = pairs(grams(_).filter(g => cdf.getOrElse(g, 0) <= maxDf)).toSet
+    // the fixture tells the contract from its two plausible misreadings
+    assert(pairs(grams).toSet != expected, "over-cap shingle kept on the delta side")
+    assert(pairs(grams(_).filter(g => cdf.get(g).exists(_ <= maxDf))).toSet != expected,
+      "delta-only shingles dropped")
+    val got = Dedup.nearDupJaccardAcross(delta.toDF("doc_id", "text"),
+        corpus.toDF("doc_id", "text"), n = n, maxDf = maxDf, minJaccard = minJ)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == expected && got.map(p => (p._1, p._2)) == Set((10L, 1L), (11L, 4L)),
+      s"got $got, expected $expected")
+    graft.core.Caches.unpersistAll()
   }
 
   test("gapFillLocf: grid spans per key, LOCF fills, observed rows untouched") {
