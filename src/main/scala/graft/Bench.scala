@@ -61,6 +61,10 @@ object Bench {
         }
         ()
       }
+    // each query's path choices, for bench_detail.json (not the warmup's)
+    graft.core.Decisions.drain()
+    val decided = scala.collection.mutable.Map
+      .empty[String, Seq[graft.core.Decisions.Decision]].withDefaultValue(Nil)
     // Three timed runs per query with EXPLICIT cache semantics (min-of-N
     // absorbs the occasional multi-second GC/JIT pause a 50-query sweep
     // sees): run 1 starts from a cleared cache and pays everything,
@@ -145,6 +149,7 @@ object Bench {
       // min-of-2 vs min-of-4 (guard-bought) without reconstructing the guard
       if (warm.size > 2)
         System.err.println(s"[bench] $name: ${warm.size} warm runs (guard bought ${warm.size - 2})")
+      decided(name) = (decided(name) ++ graft.core.Decisions.drain()).distinct
       // a failed query reports -1 (visible), never a bogus time-to-exception
       name -> (cold.getOrElse(-1.0),
         if (warm.nonEmpty) warm.min else cold.getOrElse(-1.0),
@@ -197,12 +202,13 @@ object Bench {
     System.err.println(s"""[bench] warm_full: ${objFull(_._2._2)}""")
     // per-query protocol detail → a sidecar file (the stdout contract line
     // must stay short for the driver's bounded tail window — r1-r3's
-    // parsed:null): full names, cold, warm, and the total warm-run count
-    // each published min survived across all passes.
+    // parsed:null): full names, cold, warm, the total warm-run count
+    // each published min survived across all passes, and the decisions.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "bench_detail.json")
     val detail = results.map { case (n, (c, w, r)) =>
-      s"""\"$n\":{"cold":${fmt(c)},"warm":${fmt(w)},"warm_runs":$r}"""
+      val ds = decided(n).map(_.json).mkString("[", ",", "]")
+      s"""\"$n\":{"cold":${fmt(c)},"warm":${fmt(w)},"warm_runs":$r,"decisions":$ds}"""
     }.mkString(s"""{"passes":$passes,"sf":"$sfDir","queries":{""", ",", "}}")
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),

@@ -88,14 +88,17 @@ object Bpe {
   /** Train `nMerges` BPE merges over the corpus. Returns the merge table
     * (rank, left, right, pair_count) in rank order — fewer rows than
     * `nMerges` if the corpus runs out of mergeable pairs. */
-  def train(docs: DataFrame, nMerges: Int, textCol: String = "text",
-      smallVocabWords: Long = SmallVocabWords): Seq[(Int, String, String, Long)] = {
+  def train(docs: DataFrame, nMerges: Int,
+      textCol: String = "text"): Seq[(Int, String, String, Long)] = {
     require(nMerges >= 1, s"nMerges must be positive: $nMerges")
     // checkpoint BEFORE counting: the count otherwise pays the full
     // corpus tokenization once, and the collect/loop would recompute the
     // identical uncached plan a second time
     val wt = wordTable(docs, textCol).localCheckpoint()
-    if (wt.count() <= smallVocabWords) return trainLocal(wt, nMerges)
+    val nWords = wt.count()
+    if (graft.core.Decisions.choose("Bpe.train", "local", "distributed",
+        "words" -> nWords)(nWords <= SmallVocabWords))
+      return trainLocal(wt, nMerges)
     var words = wt
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var r = 1

@@ -2,7 +2,7 @@ package graft.ext
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -183,8 +183,11 @@ object Dedup {
   /** Whether the word-`n`-gram set of `small` may broadcast: `n` times the
     * optimizer's estimate of the input (read before the gram Generate, so
     * no job) fits [[Similarity.fitsBroadcast]]'s envelope. */
-  private[ext] def gramsFitBroadcast(small: DataFrame, n: Int): Boolean =
-    Similarity.fitsBroadcast(Similarity.statBytes(small) * n)
+  private[ext] def gramsFitBroadcast(small: DataFrame, n: Int): Boolean = {
+    val bytes = Similarity.statBytes(small) * n
+    graft.core.Decisions.choose("Dedup.gramsFitBroadcast", "broadcast",
+      "shuffle_hash", "gramBytes" -> bytes)(Similarity.fitsBroadcast(bytes))
+  }
 
   /** Cross-document REPEATED-SPAN extraction — the reporting core of
     * exact substring deduplication (Lee et al., "Deduplicating Training
@@ -330,17 +333,18 @@ object Dedup {
 
   /** The token-cut REBUILD tail shared by the span-rewrite family
     * ([[stripRepeatedSpans]],
-    * [[graft.ext.TextAnalysis.decontaminateSpans]]): given the documents
+    * [[graft.ext.TextAnalysis.decontaminateSpans]],
+    * [[graft.ext.TextAnalysis.maskRepeatedNgrams]]): given the documents
     * to rebuild and a removal set `rm` of `(id, pos)` 1-based token
-    * positions, re-emit each document with those tokens cut. Output is
-    * total on `docs` — `(idCol, clean_text, n_tokens, n_removed,
-    * n_spans)`; null text → null outputs; a fully-cut doc yields the
-    * empty string. Plan: the token explode is map-only; the run-count
-    * lag window and the reassembly groupBy share one hash partitioning
-    * on the doc id (the maskRepeatedNgrams plan shape) — per-document
-    * partitions, bounded by document length, never corpus size. */
+    * positions, re-emit each document with those tokens cut, each cut
+    * run as one `marker` (`lit(null)`: none). Output is total on `docs` —
+    * `(idCol, clean_text, n_tokens, n_removed, n_spans)`; null text →
+    * null outputs; a fully-cut unmarked doc yields the empty string.
+    * Plan: the token explode is map-only; the run-count lag window and
+    * the reassembly groupBy share one hash partitioning on the doc id —
+    * per-document partitions, bounded by document length. */
   private[ext] def cutTokensAt(docs: DataFrame, rm: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
+      idCol: String, textCol: String, marker: Column = lit(null)): DataFrame = {
     val base = docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), split(col(textCol), " ", -1).as("ws"))
     val tokens = base
@@ -351,15 +355,16 @@ object Dedup {
       .join(rm.withColumn("rm", lit(true)), Seq("id", "pos"), "left")
       .withColumn("rm", coalesce(col("rm"), lit(false)))
       .withColumn("prm", coalesce(lag(col("rm"), 1).over(byPos), lit(false)))
+      .withColumn("piece", when(!col("rm"), col("tok")).when(!col("prm"), marker))
     val rebuilt = emit.groupBy(col("id")).agg(
       count(lit(1)).as("n_tokens"),
       sum(when(col("rm"), lit(1L)).otherwise(lit(0L))).as("n_removed"),
       sum(when(col("rm") && !col("prm"), lit(1L)).otherwise(lit(0L))).as("n_spans"),
-      array_sort(collect_list(when(!col("rm"),
-        struct(col("pos"), col("tok"))))).as("ks"))
+      array_sort(collect_list(when(col("piece").isNotNull,
+        struct(col("pos"), col("piece"))))).as("ps"))
     docs.select(col(idCol))
       .join(rebuilt.select(col("id").as(idCol),
-        concat_ws(" ", transform(col("ks"), x => x.getField("tok"))).as("clean_text"),
+        concat_ws(" ", transform(col("ps"), x => x.getField("piece"))).as("clean_text"),
         col("n_tokens"), col("n_removed"), col("n_spans")), Seq(idCol), "left")
   }
 
@@ -379,13 +384,13 @@ object Dedup {
     * relation ceiling on dup-DENSE corpora (web crawls run 20-50%
     * near-dup-involved). This form picks the plan from the data:
     *
-    *   FAST PATH (|cand| ≤ verifyIdBroadcastRows): each side's distinct
+    *   FAST PATH (|cand| ≤ VerifyIdBroadcastRows): each side's distinct
     *   candidate ids broadcast (8 B/row, ≤ 2·|cand|); the hub STREAMS
     *   once past that id hash — no shuffle, no fat broadcast — fetching
     *   arrays for candidate-involved docs only (ONE fused pass over the
     *   i∪j id set for self-joins). The fetched set is persisted and its
     *   EXACT gram bytes measured (a dup-density-sized cached scan); only
-    *   if it fits verifyBroadcastBytes does it broadcast into the
+    *   if it fits VerifyBroadcastBytes does it broadcast into the
     *   per-pair merge-scan intersect — otherwise that join runs as a
     *   partitioned sort-merge join on i/j (`merge` hint: never a
     *   broadcast, never a per-partition hash build of fat arrays, and
@@ -407,20 +412,20 @@ object Dedup {
     * touched set (its materializing action — no extra pass), then
     * decide. `cand` is persisted either way: the id projections and the
     * final join would otherwise recompute the candidate subtree.
-    * Tunables (both deliberately under the 8 GB relation ceiling):
-    * `spark.graft.dedup.verifyBroadcastBytes` (default
-    * min(1 GB, maxHeap/8) raw gram octets ≈ 3-4 GB as a hashed relation
-    * at the 1 GB ceiling — the round-10 sf1 smoke showed a 256 MB
-    * ceiling pushing a 300 MB-octet hub onto the merge path at 7× the
-    * wall time (q37: 128 s vs ~17 s) for zero memory benefit on any
-    * realistic executor. The heap-derived term keeps small-heap JVMs
-    * safe WITHOUT tuning: an 8 GB heap clears the full 1 GB, a 2 GB
-    * heap caps at 256 MB — two near-ceiling sides plus the candidate
-    * hub then stay well inside the heap instead of OOMing it) and
-    * `spark.graft.dedup.verifyIdBroadcastRows` (default 16M distinct
-    * ids per side). Any path yields the identical pair set — plan
-    * choice only (tested by forcing both fallbacks to 0). */
+    * The choice goes to [[graft.core.Decisions]], so the dup-dense scale
+    * probe can PROVE the dense path engaged on real volume. Any path
+    * yields the identical pair set (tested by forcing each). */
   private[ext] case class HubStats(rows: Long, grams: Long, octets: Long)
+
+  /** The verify ceilings, both under the 8 GB relation ceiling: distinct
+    * ids per side, and raw gram octets per side — min(1 GB, maxHeap/8) ≈
+    * 3-4 GB as a hashed relation at 1 GB. The round-10 sf1 smoke showed a
+    * 256 MB ceiling pushing a 300 MB-octet hub onto the merge path at 7×
+    * the wall time (q37: 128 s vs ~17 s) for no memory benefit; the heap
+    * term keeps small heaps safe (8 GB clears 1 GB, 2 GB caps at 256 MB,
+    * so two near-ceiling sides plus the candidate hub fit). */
+  private val VerifyIdBroadcastRows = 16000000L
+  private val VerifyBroadcastBytes = math.min(1L << 30, Runtime.getRuntime.maxMemory / 8)
 
   /** One-job exact stats of a shingle-array hub: row count, Σ gram
     * counts (the parallelism-sizing axis), Σ raw gram octets (the
@@ -430,39 +435,21 @@ object Dedup {
     * warm re-runs and sibling queries over the same hub pay zero jobs. */
   private[ext] def hubStatsOf(hub: DataFrame): HubStats =
     graft.core.Caches.memo(hub, "hubStats") {
-      val r = hub.agg(count(lit(1)), sum(col("n")),
-        sum(aggregate(col("shs"), lit(0L), (a, x) => a + octet_length(x)))).head
+      val r = hub.agg(count(lit(1)), sum(col("n")), gramOctets).head
       HubStats(r.getLong(0),
         if (r.isNullAt(1)) 0L else r.getLong(1),
         if (r.isNullAt(2)) 0L else r.getLong(2))
     }
 
-  /** Which physical shape [[verifyJaccard]] chose on its LAST invocation
-    * in this JVM — "precleared" (whole-hub broadcast clearance), "dense"
-    * (no broadcasts, partitioned merge joins), or
-    * "measured:bcastI=?,bcastJ=?" (id-broadcast fetch + measured per-side
-    * decision). Written together with one stderr line per decision:
-    * observability for the dup-dense scale probe and the forced-fallback
-    * specs — the probe must be able to PROVE the dense path engaged on
-    * real volume rather than infer it from wall-time. */
-  private[graft] val lastVerifyPath =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-  private def notePath(p: String): Unit = {
-    lastVerifyPath.set(p)
-    System.err.println(s"[graft] Dedup.verifyJaccard path=$p")
-  }
+  /** Σ raw gram octets of a shingle-array frame. */
+  private def gramOctets =
+    sum(aggregate(col("shs"), lit(0L), (a, x) => a + octet_length(x)))
+
+  private val Measured = "measured:bcastI=(true|false),bcastJ=(true|false)".r
 
   private def verifyJaccard(cand0: DataFrame, arrsI: DataFrame, arrsJ: DataFrame,
       minJaccard: Double, statsI: HubStats, statsJ: HubStats): DataFrame = {
     val cand = graft.core.Caches.persist(cand0)
-    val conf = cand.sparkSession.conf
-    // default min(1 GB, maxHeap/8): the octets-to-hashed-relation blowup
-    // is ~3-4×, so this keeps two near-ceiling broadcast sides (plus the
-    // candidate hub) under the heap on ANY JVM size — see the class doc
-    val maxBcastBytes = conf.get("spark.graft.dedup.verifyBroadcastBytes",
-      math.min(1L << 30, Runtime.getRuntime.maxMemory / 8).toString).toLong
-    val maxIdRows = conf.get("spark.graft.dedup.verifyIdBroadcastRows",
-      "16000000").toLong
     val selfJoin = arrsI eq arrsJ
     def renamed(arrs: DataFrame, side: String) =
       arrs.select(col("id").as(side), col("shs").as(s"shs_$side"),
@@ -471,54 +458,38 @@ object Dedup {
       sides.map(s => cand.select(col(s).as("id"))).reduce(_ union _).distinct()
     def touchedOf(arrs: DataFrame, ids: DataFrame) =
       graft.core.Caches.persist(arrs.join(broadcast(ids), Seq("id")))
-    def joinBoth(tI: DataFrame, okI: Boolean, tJ: DataFrame, okJ: Boolean) = {
-      def side(t: DataFrame, ok: Boolean, s: String) = {
-        val r = renamed(t, s)
-        if (ok) broadcast(r) else r.hint("merge")
-      }
-      cand.join(side(tI, okI, "i"), Seq("i")).join(side(tJ, okJ, "j"), Seq("j"))
-    }
-    def fits(st: HubStats) = st.rows <= maxIdRows && st.octets <= maxBcastBytes
-    val joined = if (fits(statsI) && fits(statsJ)) {
+    // lazy: the dense path never fetches
+    lazy val (tI, tJ) =
+      if (selfJoin) { val t = touchedOf(arrsI, idsOf("i", "j")); (t, t) }
+      else (touchedOf(arrsI, idsOf("i")), touchedOf(arrsJ, idsOf("j")))
+    // the touched persist's materializing action: no extra pass
+    def bytesOf(t: DataFrame): Long =
+      t.agg(gramOctets).head.get(0) match { case null => 0L; case v: Long => v }
+    def fits(st: HubStats) =
+      st.rows <= VerifyIdBroadcastRows && st.octets <= VerifyBroadcastBytes
+    val choice = graft.core.Decisions.decide("Dedup.verifyJaccard",
+        "rowsI" -> statsI.rows, "octetsI" -> statsI.octets,
+        "rowsJ" -> statsJ.rows, "octetsJ" -> statsJ.octets) {
       // whole-hub pre-clearance: touched ⊆ hub on each side, so both the
       // id set and the fetched arrays fit — no sizing jobs, fully lazy
-      notePath("precleared")
-      val (tI, tJ) =
-        if (selfJoin) { val t = touchedOf(arrsI, idsOf("i", "j")); (t, t) }
-        else (touchedOf(arrsI, idsOf("i")), touchedOf(arrsJ, idsOf("j")))
-      joinBoth(tI, true, tJ, true)
-    } else {
-      val nCand = cand.count()
-      if (2 * nCand > maxIdRows) {
-        // DENSE path: even the candidate id set is past the broadcast
-        // envelope — no broadcasts at all, partitioned merge joins only
-        notePath("dense")
-        cand
-          .join(renamed(arrsI, "i").hint("merge"), Seq("i"))
-          .join(renamed(arrsJ, "j").hint("merge"), Seq("j"))
-      } else {
-        // MEASURED path: ids broadcast (≤ 2·|cand| longs — cleared
-        // above); the fetched set's exact raw gram octets decide its
-        // broadcast — the number compressed stats must not guess (the
-        // r8 OOM). bytesOf is the touched persist's materializing
-        // action, so the measurement adds no extra pass.
-        def bytesOf(t: DataFrame): Long =
-          t.agg(sum(aggregate(col("shs"), lit(0L), (a, x) => a + octet_length(x))))
-            .head.get(0) match { case null => 0L; case v: Long => v }
-        val (tI, bI, tJ, bJ) =
-          if (selfJoin) {
-            val t = touchedOf(arrsI, idsOf("i", "j")); val b = bytesOf(t)
-            (t, b, t, b)
-          } else {
-            val ti = touchedOf(arrsI, idsOf("i")); val tj = touchedOf(arrsJ, idsOf("j"))
-            (ti, bytesOf(ti), tj, bytesOf(tj))
-          }
-        val (okI, okJ) = (bI <= maxBcastBytes, bJ <= maxBcastBytes)
-        notePath(s"measured:bcastI=$okI,bcastJ=$okJ")
-        joinBoth(tI, okI, tJ, okJ)
+      if (fits(statsI) && fits(statsJ)) "precleared"
+      // DENSE: even the candidate id set is past the broadcast envelope
+      else if (2 * cand.count() > VerifyIdBroadcastRows) "dense"
+      // MEASURED: ids broadcast (≤ 2·|cand| longs — cleared above)
+      else {
+        val bI = bytesOf(tI)
+        val bJ = if (selfJoin) bI else bytesOf(tJ)
+        s"measured:bcastI=${bI <= VerifyBroadcastBytes},bcastJ=${bJ <= VerifyBroadcastBytes}"
       }
     }
-    joined
+    val (sI, okI, sJ, okJ) = choice match {
+      case "precleared" => (tI, true, tJ, true)
+      case "dense" => (arrsI, false, arrsJ, false)
+      case Measured(i, j) => (tI, i.toBoolean, tJ, j.toBoolean)
+    }
+    def side(t: DataFrame, ok: Boolean, s: String) =
+      if (ok) broadcast(renamed(t, s)) else renamed(t, s).hint("merge")
+    cand.join(side(sI, okI, "i"), Seq("i")).join(side(sJ, okJ, "j"), Seq("j"))
       .withColumn("c", graft.functions.ArrayMath.sortedIntersectCount(col("shs_i"), col("shs_j")))
       .withColumn("jaccard",
         col("c").cast(DoubleType) / (col("ni") + col("nj") - col("c")).cast(DoubleType))
@@ -1267,7 +1238,9 @@ object Dedup {
     // the registry.
     val e0 = graft.core.Caches.persist(pairs.select(col("i"), col("j")))
     val longIds = e0.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && e0.count() <= SmallGraphEdges)
+    val nEdges = if (longIds) e0.count() else -1L
+    if (graft.core.Decisions.choose("Dedup.clusterPairs", "union_find", "loop",
+        "edges" -> nEdges)(longIds && nEdges <= SmallGraphEdges))
       return unionFindLabels(e0)
     val edges = e0.unionByName(e0.select(col("j").as("i"), col("i").as("j")))
     locally {
@@ -1527,8 +1500,8 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val d = TextAnalysis.fingerprint(delta.filter(col(textCol).isNotNull), textCol)
       .select(col(idCol), col("fp_md5"), col("fp60"))
-    val cFp = corpus.filter(col(textCol).isNotNull)
-      .select(md5(col(textCol)).as("fp_md5")).distinct()
+    val cFp = TextAnalysis.fingerprint(corpus.filter(col(textCol).isNotNull), textCol)
+      .select(col("fp_md5")).distinct()
     keyedDedupAnnotate(d, "fp_md5", idCol, "__keep_id", "n_delta_copies",
         keepNullKeys = false)
       .filter(col(idCol) === col("__keep_id"))

@@ -150,10 +150,9 @@ object Multimodal {
     // never catastrophic; dense past its envelope is quadratic). Past
     // the bound the banded plan runs: never an all-pairs at corpus
     // scale.
-    val denseMax = media.sparkSession.conf
-      .getOption("spark.graft.multimodal.pairsDenseMaxBytes")
-      .map(_.toLong).getOrElse(4L << 20)
-    if (media.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(denseMax)) {
+    val bytes = Similarity.statBytes(media)
+    if (graft.core.Decisions.choose("Multimodal.hashDupPairs", "dense", "banded",
+        "sourceBytes" -> bytes)(bytes <= BigInt(4L << 20))) {
       // stream side spread: the |hashes|² loop must use every core even
       // when the source is one small file — the exchange moves slim
       // (id, hash) rows only

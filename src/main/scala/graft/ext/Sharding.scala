@@ -244,18 +244,17 @@ object Sharding {
 
   /** Path gate for [[shuffleOrder]]'s dense dual, on the optimizer's
     * FREE source-size estimate (the [[Similarity]] probeBytes
-    * precedent — no job): under
-    * `spark.graft.sharding.orderDenseMaxBytes` (default 256 MB of
-    * source stats — the slim (id, skey) sort input is far smaller than
-    * the source rows the stat measures) a single global window wins;
-    * past it the value-range-bucket parallel prefix runs, since a
-    * single-partition sort of a corpus-scale table is the bottleneck
-    * the bucket shape exists to avoid. */
-  private def orderDense(docs: DataFrame): Boolean =
-    docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(docs.sparkSession.conf
-        .getOption("spark.graft.sharding.orderDenseMaxBytes")
-        .map(_.toLong).getOrElse(256L << 20))
+    * precedent — no job): under 256 MB of source stats (the slim (id,
+    * skey) sort input is far smaller than the source rows the stat
+    * measures) a single global window wins; past it the
+    * value-range-bucket parallel prefix runs, since a single-partition
+    * sort of a corpus-scale table is the bottleneck the bucket shape
+    * exists to avoid. */
+  private def orderDense(docs: DataFrame): Boolean = {
+    val bytes = Similarity.statBytes(docs)
+    graft.core.Decisions.choose("Sharding.orderDense", "dense", "bucket",
+      "sourceBytes" -> bytes)(bytes <= BigInt(256L << 20))
+  }
 
   private def orderKey(salt: String, idCol: String): Column =
     graft.functions.TextMetrics.hash60(

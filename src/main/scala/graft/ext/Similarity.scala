@@ -380,21 +380,19 @@ object Similarity {
     * banded plan can never win. Auto-geometry calls therefore run the
     * EXACT broadcast-scan dual (one map-only |reps|² codegen pass, no
     * shuffle, recall 1, precision 1, the dual's own scores — strictly
-    * better output than banding) while the rep count is at or under
-    * `spark.graft.similarity.pairsDenseMaxBase` (default 2¹⁷ ≈ 70 MB of
-    * broadcast fixed-point arrays at 64 dims); past the bound — corpora
-    * where no side can broadcast and brute force is off the table anyway
-    * — the banded path runs unchanged. The default is also ~the
-    * MEASURED compute crossover (the `pairsDenseMaxBytes` discipline,
-    * see [[graft.ext.Multimodal]]): at 160k reps — just past the bound
+    * better output than banding) while the rep count is at or under 2¹⁷
+    * (≈ 70 MB of broadcast fixed-point arrays at 64 dims); past the bound
+    * — corpora where no side can broadcast and brute force is off the
+    * table anyway — the banded path runs unchanged. The bound is also
+    * ~the MEASURED compute crossover (the dense-bound discipline of
+    * [[graft.ext.Multimodal]]'s pairs): at 160k reps — just past the bound
     * — the round-15 probe ran auto-banded in 191.5 s (planted recall
     * 1.0), vs ~243 s extrapolated for the dense |B|² scan (64× the
     * measured 3.8 s at 20k reps) — so the broadcast envelope and the
     * dense/banded cost crossover coincide within ~25%, and the flip is
     * in the safe (banded) direction. EXPLICIT geometry always bands
     * (the caller asked for that plan — tests and recall probes rely on
-    * it). Path choice is observable via [[lastPairsPath]] (the
-    * [[Dedup.lastVerifyPath]] pattern). */
+    * it). */
   def annLshPairs(base: DataFrame, minCosine: Double,
       planesPerBand: Int = 0, bands: Int = 0, dims: Int = 64,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -405,10 +403,8 @@ object Similarity {
         "other silently breaks the recall contract")
     val auto = planesPerBand == 0
     val n = if (!auto) 0L else graft.core.Caches.count(base)
-    val denseMax = base.sparkSession.conf
-      .getOption("spark.graft.similarity.pairsDenseMaxBase")
-      .map(_.toLong).getOrElse(1L << 17)
-    val dense = auto && n <= denseMax
+    val dense = graft.core.Decisions.choose("Similarity.annLshPairs", "dense",
+      "banded", "auto" -> auto, "reps" -> n)(auto && n <= (1L << 17))
 
     // 1. exact-copy collapse on the raw vector
     val g0 = copyGroups(base, idCol, vecCol)
@@ -421,9 +417,8 @@ object Similarity {
       g0.select(col("rep"), col("members"), wcos.as("wcos")))
 
     val verified = if (dense) {
-      notePairsPath("dense")
       // exact broadcast-scan dual over the collapsed reps: the i side
-      // broadcasts (≤ denseMax reps of fixed-point arrays), the j side
+      // broadcasts (≤ 2¹⁷ reps of fixed-point arrays), the j side
       // streams once — |reps|²/2 fused dot loops, zero shuffles, and the
       // threshold filter runs inside the scan so only true pairs surface.
       val slim = graft.core.Caches.persist(
@@ -432,7 +427,6 @@ object Similarity {
         .crossJoin(pairSide(slim, "rep", "j"))
         .filter(col("i") < col("j")), minCosine)
     } else {
-      notePairsPath("banded")
       val (p, b) =
         if (!auto) (planesPerBand, bands)
         else {
@@ -557,16 +551,6 @@ object Similarity {
   /** The optimizer's size estimate of `df` — free, no job. */
   private[ext] def statBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
-
-  /** Last [[annLshPairs]] path choice ("dense" | "banded") — the
-    * [[Dedup.lastVerifyPath]] observability pattern, for tests and scale
-    * probes. */
-  private[graft] val lastPairsPath =
-    new java.util.concurrent.atomic.AtomicReference[String]("")
-  private def notePairsPath(p: String): Unit = {
-    lastPairsPath.set(p)
-    System.err.println(s"[graft] Similarity.annLshPairs path=$p")
-  }
 
   /** IVF (inverted-file) approximate top-k — the classic ANN scale path
     * (coarse quantizer + cell-local search):

@@ -1145,49 +1145,24 @@ object TextAnalysis {
     * Plan: gram occurrences are a map-side explode of per-row slices; the
     * df aggregate runs on [[hash60]] gram keys (constant-width longs, not
     * gram strings — the shuffle payload rule the MinHash family follows);
-    * hot grams prune via a semi-join; covered positions explode map-side
-    * and distinct on (doc, pos); the run-collapse lag window and the
-    * reassembly groupBy share one hash partitioning on the doc id. No
-    * corpus-wide window, no driver-side data. */
+    * hot grams prune via a semi-join; then [[Dedup.coveredPositions]] and
+    * [[Dedup.cutTokensAt]] with one `mask` per cut run. No corpus-wide
+    * window, no driver-side data. */
   def maskRepeatedNgrams(docs: DataFrame, n: Int = 3, minDf: Long = 5,
       mask: String = "<dup>",
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 2, s"n must be at least 2: $n")
     require(minDf >= 2, s"minDf < 2 would mask every token: $minDf")
-    val base = docs.filter(col(textCol).isNotNull)
-      .select(col(idCol), split(col(textCol), " ", -1).as("ws"))
     // 1-based starts (matches SQL list slicing in the oracle); the fused
     // window hash replaces the per-window slice/concat_ws lambda
-    val grams = base.filter(size(col("ws")) >= n)
-      .select(col(idCol), posexplode(
-        graft.functions.TextMetrics.wordGramHash60(col("ws"), n))
-        .as(Seq("p0", "gk")))
-      .select(col(idCol), (col("p0") + 1).cast(LongType).as("start"), col("gk"))
-    val hot = hotGramKeys(docs, n, minDf, idCol, textCol)
-    val covered = grams.join(hot, Seq("gk"), "left_semi")
-      .select(col(idCol), explode(sequence(col("start"), col("start") + (n - 1))).as("pos"))
-      .distinct()
-    val tokens = base
-      .select(col(idCol), posexplode(col("ws")).as(Seq("p0", "tok")))
-      .select(col(idCol), (col("p0") + 1).cast(LongType).as("pos"), col("tok"))
-    val w = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    val emit = tokens
-      .join(covered.withColumn("cv", lit(true)), Seq(idCol, "pos"), "left")
-      .withColumn("cv", coalesce(col("cv"), lit(false)))
-      .withColumn("pcv", coalesce(lag(col("cv"), 1).over(w), lit(false)))
-      .withColumn("piece",
-        when(!col("cv"), col("tok"))
-          .when(col("cv") && !col("pcv"), lit(mask)))
-    val rebuilt = emit.groupBy(col(idCol)).agg(
-      count(lit(1)).as("n_tokens"),
-      sum(when(col("cv"), lit(1L)).otherwise(lit(0L))).as("n_masked"),
-      sum(when(col("cv") && !col("pcv"), lit(1L)).otherwise(lit(0L))).as("n_spans"),
-      array_sort(collect_list(when(col("piece").isNotNull,
-        struct(col("pos"), col("piece"))))).as("ps"))
-    docs.select(col(idCol))
-      .join(rebuilt.select(col(idCol),
-        concat_ws(" ", transform(col("ps"), x => x.getField("piece"))).as("masked_text"),
-        col("n_tokens"), col("n_masked"), col("n_spans")), Seq(idCol), "left")
+    val ws = split(col(textCol), " ", -1)
+    val grams = docs.filter(col(textCol).isNotNull && size(ws) >= n)
+      .select(col(idCol).as("id"), posexplode(
+        graft.functions.TextMetrics.wordGramHash60(ws, n)).as(Seq("p0", "gk")))
+      .select(col("id"), (col("p0") + 1).cast(LongType).as("p"), col("gk"))
+    val hits = grams.join(hotGramKeys(docs, n, minDf, idCol, textCol), Seq("gk"), "left_semi")
+    Dedup.cutTokensAt(docs, Dedup.coveredPositions(hits, n), idCol, textCol, lit(mask))
+      .withColumnsRenamed(Map("clean_text" -> "masked_text", "n_removed" -> "n_masked"))
   }
 
   /** The hot word-n-gram keys of a corpus: [[hash60]] of every n-gram

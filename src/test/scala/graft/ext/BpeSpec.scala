@@ -57,7 +57,9 @@ class BpeSpec extends SparkSpec {
 
   test("distributed loop == small-vocab local fast path") {
     val local = Bpe.train(fixtureDocs, nMerges = 8)
-    val dist = Bpe.train(fixtureDocs, nMerges = 8, smallVocabWords = 0)
+    val dist = graft.core.Decisions.forcing("Bpe.train" -> "distributed") {
+      Bpe.train(fixtureDocs, nMerges = 8)
+    }
     assert(local == dist)
   }
 
@@ -72,7 +74,9 @@ class BpeSpec extends SparkSpec {
         concat(lit("w"), col("id"), lit("q")).as("text"))
     assert(Bpe.SmallVocabWords < 70000L)
     val dist = Bpe.train(big, nMerges = 5)
-    val local = Bpe.train(big, nMerges = 5, smallVocabWords = 1L << 20)
+    val local = graft.core.Decisions.forcing("Bpe.train" -> "local") {
+      Bpe.train(big, nMerges = 5)
+    }
     assert(dist == local && dist.length == 5)
     // (q,</w>) closes every word → count 70,000 → rank-1 merge
     assert(dist.head == ((1, "q", "</w>", 70000L)))

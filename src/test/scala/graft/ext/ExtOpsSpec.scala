@@ -1,7 +1,7 @@
 package graft.ext
 
 import graft.SparkSpec
-import graft.core.{KeySets, Tables}
+import graft.core.{Decisions, KeySets, Tables}
 import graft.operators.AsofJoin
 import org.apache.spark.sql.functions._
 
@@ -457,14 +457,12 @@ class ExtOpsSpec extends SparkSpec {
 
   test("annLshPairs: degenerate auto geometry (bar near -1) fails loudly, never 1-band-wraps") {
     val e = Tables.load(spark, sf001, "embeddings")
-    val key = "spark.graft.similarity.pairsDenseMaxBase"
-    try {
-      spark.conf.set(key, "0") // force the banded path at test scale
+    // force the banded path at test scale
+    try Decisions.forcing("Similarity.annLshPairs" -> "banded") {
       val ex = intercept[IllegalArgumentException](
         Similarity.annLshPairs(e, minCosine = -1.0).count())
       assert(ex.getMessage.contains("degenerates"), ex.getMessage)
     } finally {
-      spark.conf.unset(key)
       graft.core.Caches.unpersistAll()
     }
   }
@@ -506,13 +504,11 @@ class ExtOpsSpec extends SparkSpec {
     val dense = graft.ext.Sharding.shuffleOrder(docs, "dual")
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("seq")).toMap
     graft.core.Caches.unpersistAll()
-    spark.conf.set("spark.graft.sharding.orderDenseMaxBytes", "0")
-    try {
+    try Decisions.forcing("Sharding.orderDense" -> "bucket") {
       val bucketed = graft.ext.Sharding.shuffleOrder(docs, "dual")
         .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("seq")).toMap
       assert(dense == bucketed)
     } finally {
-      spark.conf.unset("spark.graft.sharding.orderDenseMaxBytes")
       graft.core.Caches.unpersistAll()
     }
   }
@@ -535,10 +531,8 @@ class ExtOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(got() == expect)
     graft.core.Caches.unpersistAll()
-    spark.conf.set("spark.graft.sharding.orderDenseMaxBytes", "0")
-    try assert(got() == expect)
+    try Decisions.forcing("Sharding.orderDense" -> "bucket")(assert(got() == expect))
     finally {
-      spark.conf.unset("spark.graft.sharding.orderDenseMaxBytes")
       graft.core.Caches.unpersistAll()
     }
   }
@@ -729,31 +723,29 @@ class ExtOpsSpec extends SparkSpec {
     // the all-pairs exact at the threshold (recall 1, precision 1)
     val auto = Similarity.annLshPairs(e, 0.4)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(Similarity.lastPairsPath.get() == "dense",
-      s"expected dense, saw ${Similarity.lastPairsPath.get()}")
+    assert(Decisions.latest.get("Similarity.annLshPairs").contains("dense"),
+      s"expected dense, saw ${Decisions.latest.get("Similarity.annLshPairs")}")
     val exact = Similarity.exactCosinePairs(e, e)
       .filter(col("qid") < col("vid") && col("cosine") >= 0.4)
       .select(col("qid"), col("vid"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto == exact, "dense path must equal the exact dual's pair set")
     graft.core.Caches.unpersistAll()
-    // past the dense bound (forced via the tunable) the auto rule must
-    // produce the historical banded plans — same pair set as the
-    // explicit (4,16) call at <= 2^11 vectors
-    val key = "spark.graft.similarity.pairsDenseMaxBase"
-    try {
-      spark.conf.set(key, "0")
-      val banded = Similarity.annLshPairs(e, 0.4)
+    // past the dense bound (forced) the auto rule must produce the
+    // historical banded plans — same pair set as the explicit (4,16) call
+    // at <= 2^11 vectors
+    val banded = Decisions.forcing("Similarity.annLshPairs" -> "banded") {
+      Similarity.annLshPairs(e, 0.4)
         .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(Similarity.lastPairsPath.get() == "banded",
-        s"expected banded, saw ${Similarity.lastPairsPath.get()}")
-      graft.core.Caches.unpersistAll()
-      val fixed = Similarity.annLshPairs(e, 0.4, planesPerBand = 4, bands = 16)
-        .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(banded == fixed)
-      assert(Similarity.lastPairsPath.get() == "banded",
-        "explicit geometry must always band")
-    } finally spark.conf.unset(key)
+    }
+    assert(Decisions.latest.get("Similarity.annLshPairs").contains("banded"),
+      s"expected banded, saw ${Decisions.latest.get("Similarity.annLshPairs")}")
+    graft.core.Caches.unpersistAll()
+    val fixed = Similarity.annLshPairs(e, 0.4, planesPerBand = 4, bands = 16)
+      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(banded == fixed)
+    assert(Decisions.latest.get("Similarity.annLshPairs").contains("banded"),
+      "explicit geometry must always band")
     intercept[IllegalArgumentException](
       Similarity.annLshPairs(e, 0.4, planesPerBand = 6))
     intercept[IllegalArgumentException](
@@ -775,7 +767,7 @@ class ExtOpsSpec extends SparkSpec {
     // The size-adaptive verify join picks among three physical shapes
     // (broadcast fetched set / partitioned merge join on the fetched set /
     // dense direct hub join). Plan choice must never change the answer:
-    // force each fallback via its tunable and compare the full pair sets.
+    // force each fallback and compare the full pair sets.
     val docs = Tables.load(spark, sf001, "documents")
     def familyPairs(): Set[(Long, Long, Double)] = {
       def pset(df: org.apache.spark.sql.DataFrame) =
@@ -791,26 +783,24 @@ class ExtOpsSpec extends SparkSpec {
         lsh.map(p => (p._1 + (1L << 40), p._2, p._3)) ++
         across.map(p => (p._1 + (2L << 40), p._2, p._3))
     }
-    val bytesKey = "spark.graft.dedup.verifyBroadcastBytes"
-    val rowsKey = "spark.graft.dedup.verifyIdBroadcastRows"
+    val op = "Dedup.verifyJaccard"
     val baseline = familyPairs()
     assert(baseline.nonEmpty)
     // path-choice observability: the small-corpus default pre-clears
-    assert(Dedup.lastVerifyPath.get() == "precleared",
-      s"expected precleared, saw ${Dedup.lastVerifyPath.get()}")
-    try {
-      spark.conf.set(bytesKey, "0") // fetched set never broadcasts → merge join
+    assert(Decisions.latest.get(op).contains("precleared"),
+      s"expected precleared, saw ${Decisions.latest.get(op)}")
+    // fetched set never broadcasts → merge join
+    Decisions.forcing(op -> "measured:bcastI=false,bcastJ=false") {
       assert(familyPairs() == baseline, "merge-join fallback diverged")
-      assert(Dedup.lastVerifyPath.get() == "measured:bcastI=false,bcastJ=false",
-        s"expected measured/merge, saw ${Dedup.lastVerifyPath.get()}")
-      spark.conf.set(rowsKey, "0") // dense path: direct partitioned hub join
-      assert(familyPairs() == baseline, "dense fallback diverged")
-      assert(Dedup.lastVerifyPath.get() == "dense",
-        s"expected dense, saw ${Dedup.lastVerifyPath.get()}")
-    } finally {
-      spark.conf.unset(bytesKey)
-      spark.conf.unset(rowsKey)
     }
+    assert(Decisions.latest.get(op).contains("measured:bcastI=false,bcastJ=false"),
+      s"expected measured/merge, saw ${Decisions.latest.get(op)}")
+    // dense path: direct partitioned hub join
+    Decisions.forcing(op -> "dense") {
+      assert(familyPairs() == baseline, "dense fallback diverged")
+    }
+    assert(Decisions.latest.get(op).contains("dense"),
+      s"expected dense, saw ${Decisions.latest.get(op)}")
   }
 
   test("wordShingles + jaccardPairs == nearDupJaccardTokens at sf0.001") {
@@ -977,12 +967,10 @@ class ExtOpsSpec extends SparkSpec {
     // force the BANDED path: this test is the banding family's precision/
     // recall gate (the dense path is exact by construction and pinned in
     // the paths test above)
-    val key = "spark.graft.similarity.pairsDenseMaxBase"
-    val lsh = try {
-      spark.conf.set(key, "0")
+    val lsh = Decisions.forcing("Similarity.annLshPairs" -> "banded") {
       Similarity.annLshPairs(e, 0.4)
         .collect().map(r => (r.getAs[Long]("i"), r.getAs[Long]("j")) -> r.getAs[Double]("cosine")).toMap
-    } finally spark.conf.unset(key)
+    }
     // precision 1: every emitted pair is a true pair, with the dual's score
     lsh.foreach { case (k, c) =>
       assert(exact.contains(k), s"false positive pair $k")
@@ -1594,10 +1582,8 @@ class ExtOpsSpec extends SparkSpec {
       "undecodable payload has no content hash, never pairs")
     // the banded scale path (forced past the dense bound) finds the
     // IDENTICAL pair set — pigeonhole recall is exact, not probabilistic
-    spark.conf.set("spark.graft.multimodal.pairsDenseMaxBytes", "0")
-    try assert(run() == pairs)
+    try Decisions.forcing("Multimodal.hashDupPairs" -> "banded")(assert(run() == pairs))
     finally {
-      spark.conf.unset("spark.graft.multimodal.pairsDenseMaxBytes")
       graft.core.Caches.unpersistAll()
     }
   }
