@@ -120,6 +120,7 @@ object Bench {
       // query collapses that band toward the box floor.
       if (warm.nonEmpty && warm.min < 1.0)
         warm = warm ++ run()
+      val unguarded = warm.size
       // Occasionally BOTH warm runs of one query land on multi-second
       // GC/JIT stalls (observed: a 1.5 s-warm query reporting 6 s, both
       // warm runs ≥6 s, unreproducible in isolation). When the best warm
@@ -145,10 +146,10 @@ object Bench {
           run().foreach(r => warm = warm :+ r)
         }
       }
-      // run-count diagnostic: lets cross-round readers see which numbers are
-      // min-of-2 vs min-of-4 (guard-bought) without reconstructing the guard
-      if (warm.size > 2)
-        System.err.println(s"[bench] $name: ${warm.size} warm runs (guard bought ${warm.size - 2})")
+      // run-count diagnostic: lets cross-round readers see which numbers
+      // the stall guards bought extra runs for without reconstructing them
+      if (warm.size > unguarded)
+        System.err.println(s"[bench] $name: ${warm.size} warm runs (guard bought ${warm.size - unguarded})")
       decided(name) = (decided(name) ++ graft.core.Decisions.drain()).distinct
       // a failed query reports -1 (visible), never a bogus time-to-exception
       name -> (cold.getOrElse(-1.0),

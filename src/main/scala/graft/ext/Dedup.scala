@@ -27,10 +27,10 @@ import org.apache.spark.sql.types._
   *     stage — no second inverted-index shuffle, and the per-doc array
   *     subtree is a single exchange that Spark's ReuseExchange shares
   *     between the i-side and j-side joins;
-  *   - SimHash banding is lossless by pigeonhole: hamming ≤ 3 over a 60-bit
-  *     signature split into 4 bands forces ≥1 identical band, so the band
-  *     join finds every qualifying pair — it is an optimization, never an
-  *     approximation;
+  *   - SimHash banding is lossless by pigeonhole: hamming ≤ k over a
+  *     64-bit hash split into k + 1 bands forces ≥1 identical band, so the
+  *     band join ([[hammingPairs]]) finds every qualifying pair — it is an
+  *     optimization, never an approximation;
   *   - MinHash banding IS probabilistic (tunable via hashes/band); the
   *     emitted pairs are exact-Jaccard-verified, so precision is always 1
   *     and band count controls recall only.
@@ -104,7 +104,7 @@ object Dedup {
   /** Drop shingles occurring in more than `maxDf` documents (anti-hot-key
     * cap for the inverted-index candidates; see class doc). */
   def capDocFreq(sh: DataFrame, maxDf: Int): DataFrame =
-    cappedWithDf(sh, maxDf).select(col("id"), col("sh"))
+    withDocFreq(sh, lit(1L)).filter(col("df") <= maxDf).select(col("id"), col("sh"))
 
   /** The near-dup family's DEFAULT df cap, sized from the corpus:
     * `max(floorDf, ⌊|docs|·permille/1000⌋)` — boilerplate is a FRACTION
@@ -620,8 +620,9 @@ object Dedup {
       .distinct()
   }
 
-  /** (id, sh, df) with doc frequency ≤ maxDf, computed with ONE shuffle:
-    * df is a window count over the shingle partition — no self-join of the
+  /** (sh, df, id) with df the `weight`-sum over each shingle's rows —
+    * the doc frequency of the near-dup family, computed with ONE shuffle:
+    * df is a window sum over the shingle partition — no self-join of the
     * exploded shingle table, no join whose build side AQE could mis-pick
     * from the unstatted Generate subtree, and (vs the former
     * collect_list-and-explode-back) no per-shingle array ever materializes:
@@ -631,17 +632,17 @@ object Dedup {
     * posting array even for over-cap hot shingles before filtering them —
     * the window form is whole-stage-codegen'd and never holds a posting
     * list, so a pathological boilerplate shingle costs bytes-proportional
-    * sort spill instead of one giant in-memory array. */
-  private def cappedWithDf(sh: DataFrame, maxDf: Int): DataFrame =
-    sh.withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
-      .filter(col("df") <= maxDf)
+    * sort spill instead of one giant in-memory array. Pre-built
+    * `(id, sh)` sets weigh each row 1; [[groupShingles]] weighs a
+    * distinct text by its copy count. */
+  private def withDocFreq(sh: DataFrame, weight: Column): DataFrame =
+    sh.withColumn("df", sum(weight).over(Window.partitionBy(col("sh"))))
       .select(col("sh"), col("df"), col("id"))
 
   /** Exact pairwise Jaccard over pre-built (id, sh) shingle sets. Emits
     * (i, j, jaccard) with i < j and jaccard ≥ `minJaccard`. */
   def jaccardPairs(sh: DataFrame, minJaccard: Double): DataFrame =
-    prefixJaccardPairs(cappedWithDf(sh, Int.MaxValue), minJaccard)
+    prefixJaccardPairs(withDocFreq(sh, lit(1L)), minJaccard)
 
   /** End-to-end n-gram Jaccard near-dup: shingle, cap doc frequency, and
     * find all pairs with J ≥ `minJaccard`.
@@ -771,19 +772,12 @@ object Dedup {
       full.select(col("rep"), col("members"), col("gsize")))
 
   /** Uncapped (sh, df, id=rep) over distinct texts, df weighted by group
-    * size == doc frequency over ALL copies. df is a window sum over the
-    * shingle partition — same one shuffle as the former
-    * collect_list-and-explode-back posting build, but fully codegen'd and
-    * list-free (see [[cappedWithDf]] for the measured numbers and the
-    * hot-shingle memory argument). */
+    * size == doc frequency over ALL copies ([[withDocFreq]]). */
   private def groupShingles(groups: DataFrame, n: Int,
       mkShingles: (org.apache.spark.sql.Column, Int) => org.apache.spark.sql.Column =
         shingleArray): DataFrame =
-    groups.select(col("rep").as("id"), col("gsize"),
-        explode(mkShingles(col("gtext"), n)).as("sh"))
-      .withColumn("df", sum(col("gsize")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("sh"))))
-      .select(col("sh"), col("df"), col("id"))
+    withDocFreq(groups.select(col("rep").as("id"), col("gsize"),
+        explode(mkShingles(col("gtext"), n)).as("sh")), col("gsize"))
 
   /** Expand representative pairs back to member pairs: cross-group rep
     * pairs fan out member×member (least/greatest id order, payload
@@ -1033,30 +1027,39 @@ object Dedup {
 
   /** LSH banding: signature split into `bands` groups of `rowsPerBand`,
     * each band hashed to one bucket key; docs sharing any (band, bucket)
-    * become a candidate pair. `parts > 0` repartitions the band table by
-    * the join key first (the simhashPairs pattern): the self-join and its
-    * downstream distinct run at a caller-sized partition count derived
-    * from the corpus instead of the session default (at bench scale the
-    * default-width join is per-task floor; at corpus scale the caller's
-    * formula exceeds the default and the partitioning is unchanged).
-    * 0 = plan as before. */
+    * become a candidate pair ([[bucketPairs]]). `parts > 0` sizes the
+    * band self-join from the corpus instead of the session default (at
+    * bench scale the default-width join is per-task floor; at corpus
+    * scale the caller's formula exceeds the default and the partitioning
+    * is unchanged). 0 = plan as before. */
   def lshCandidates(sig: DataFrame, rowsPerBand: Int, bands: Int,
       parts: Int = 0): DataFrame = {
     val bandCols = (0 until bands).map { b =>
       xxhash64((b * rowsPerBand until (b + 1) * rowsPerBand).map(k => col(s"m$k")): _*)
     }
-    val banded0 = sig.select(col("id"), posexplode(array(bandCols: _*)).as(Seq("band", "bh")))
-    val banded = if (parts > 0) banded0.repartition(parts, col("band"), col("bh"))
-      else banded0
-    // shuffle_hash pin: the band table is |docs|·bands rows behind a
-    // Generate, whose size the estimator cannot see — a mis-broadcast of a
-    // corpus-sized side is an executor OOM at scale, and a broadcast is
-    // never right for a self-join of same-sized sides anyway.
-    banded.select(col("band"), col("bh"), col("id").as("i"))
-      .join(banded.select(col("band"), col("bh"), col("id").as("j")).hint("shuffle_hash"),
-        Seq("band", "bh"))
+    bucketPairs(sig.select(col("id"), posexplode(array(bandCols: _*)).as(Seq("band", "bh"))),
+      Seq("band", "bh"), parts = parts)
+  }
+
+  /** The banded near-dup family's candidate stage: every distinct pair
+    * `(i, j)`, `i < j`, of `idCol` values sharing a bucket — equal values
+    * in all of `keys` — with each of `riders` carried as `<rider>_i` and
+    * `<rider>_j`. `parts > 0` first repartitions the rows by the keys to
+    * that many partitions; 0 leaves the join at the session default.
+    *
+    * The join is pinned to `shuffle_hash`: bucket rows are |ids|·bands
+    * rows behind a Generate, whose size the estimator cannot see — a
+    * mis-broadcast of a corpus-sized side is an executor OOM at scale,
+    * and a broadcast is never right for a self-join of same-sized sides
+    * anyway. */
+  private[ext] def bucketPairs(rows: DataFrame, keys: Seq[String],
+      idCol: String = "id", riders: Seq[String] = Nil, parts: Int = 0): DataFrame = {
+    val r = if (parts > 0) rows.repartition(parts, keys.map(col): _*) else rows
+    def side(s: String) = r.select(keys.map(col) ++ (col(idCol).as(s) +:
+      riders.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("i").join(side("j").hint("shuffle_hash"), keys)
       .filter(col("i") < col("j"))
-      .select(col("i"), col("j"))
+      .select((Seq("i", "j") ++ riders.map(_ + "_i") ++ riders.map(_ + "_j")).map(col): _*)
       .distinct()
   }
 
@@ -1153,47 +1156,95 @@ object Dedup {
     agg.select(col("id"), sig.as("sig"))
   }
 
-  /** SimHash near-dup pairs with hamming ≤ maxHamming (< 15-bit band width ×
-    * band count guarantee: maxHamming ≤ 3 with 4 bands is lossless). Band
-    * join on 15-bit slices, then exact popcount filter. */
+  /** SimHash near-dup pairs: every pair of documents whose
+    * [[simhashSignature]]s differ in at most `maxHamming` bits (exact for
+    * every `maxHamming` in [0, 64): [[hammingPairs]]' pigeonhole banding
+    * is lossless, and a 60-bit signature's four top bits are always zero,
+    * so 64-bit bands stay exact for it). Identical texts collapse to one
+    * signature first; their pairs come back at hamming 0. */
   def simhashPairs(docs: DataFrame, n: Int, maxHamming: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val full = textGroups(docs, idCol, textCol)
     val groups = slimGroups(full)
-    // persist the signatures: the banded self-join reads `banded` on BOTH
-    // sides, which would otherwise evaluate the whole textGroups +
-    // shingle/md5 signature chain twice. 16 bytes per distinct text —
-    // negligible footprint, released via Caches.unpersistAll
+    // persist the signatures: both sides of the pair join read them,
+    // which would otherwise evaluate the whole textGroups + shingle/md5
+    // signature chain twice. 16 bytes per distinct text — negligible
+    // footprint, released via Caches.unpersistAll
     val sig = graft.core.Caches.persist(simhashSignature(
-      full.select(col("rep").as("doc_id"), col("gtext").as("text")), n))
-    // Size the band self-join from the corpus (the prefixCandidates/
-    // clusterPairs sizing pattern) by repartitioning `banded` on the join
-    // key: the join, popcount filter, and distinct then run at a
-    // band-volume-proportional partition count (4 band rows/doc, ~50k per
-    // partition) instead of the session default — at bench scale the
-    // default-width join cost ~0.8 s of pure per-task floor on ~20k rows
-    // (isolated A/B: 1.21 s @32 partitions vs 0.40 s @1, identical rows);
-    // past ~400k docs the formula returns the session default unchanged,
-    // so production plans are untouched. The doc count is metadata-cheap
-    // (parquet rowcount) and memoized.
-    val nDocs = graft.core.Caches.count(docs)
-    val parts = shuffleParts(docs.sparkSession, 4L * nDocs, 50_000L)
-    val banded = sig.select(col("id"), col("sig"),
-      posexplode(array((0 until 4).map(k =>
-        shiftright(col("sig"), 15 * k).bitwiseAND(lit(0x7FFFL))): _*)).as(Seq("band", "bh")))
-      .repartition(parts, col("band"), col("bh"))
-    val repPairs = banded
-      .select(col("band"), col("bh"), col("id").as("i"), col("sig").as("sig_i"))
-      .join(banded.select(col("band"), col("bh"), col("id").as("j"), col("sig").as("sig_j"))
-        .hint("shuffle_hash"),  // see lshCandidates: never broadcast a banded side
-        Seq("band", "bh"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"),
-        bit_count(col("sig_i").bitwiseXOR(col("sig_j"))).cast(IntegerType).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+        full.select(col("rep").as("doc_id"), col("gtext").as("text")), n)
+      .select(col("id"), col("sig").as("h")))
+    // Size the banded self-join from the corpus (the prefixCandidates/
+    // clusterPairs sizing pattern): the join, popcount filter, and
+    // distinct run at a band-volume-proportional partition count
+    // (maxHamming + 1 band rows/doc, ~50k per partition) instead of the
+    // session default — at bench scale the default-width join cost
+    // ~0.8 s of pure per-task floor on ~20k rows (isolated A/B: 1.21 s
+    // @32 partitions vs 0.40 s @1, identical rows); past ~400k docs the
+    // formula returns the session default unchanged, so production plans
+    // are untouched. The doc count is metadata-cheap (parquet rowcount),
+    // memoized, and taken on the banded path only.
+    val repPairs = hammingPairs(sig, maxHamming, docs,
+      shuffleParts(docs.sparkSession, (maxHamming + 1L) * graft.core.Caches.count(docs), 50_000L))
     // identical texts have identical signatures: within-group hamming is 0
     expandRepPairs(repPairs, groups, "hamming", lit(0).cast(IntegerType))
+  }
+
+  /** Every pair `(i, j, hamming)`, `i < j`, of 64-bit hashes `(id, h)`
+    * within `maxHamming` bits — the near-dup pairs of SimHash and of the
+    * perceptual media hashes ([[Multimodal.perceptualDupPairs]]).
+    *
+    * Banded path (Manku et al., WWW'07): the hash splits into
+    * `maxHamming + 1` bit-bands, and by pigeonhole two hashes within
+    * `maxHamming` bits share at least one band unchanged — so the
+    * [[bucketPairs]] band join finds EVERY qualifying pair (recall 1, no
+    * LSH luck involved), and a popcount over the hashes the join carried
+    * keeps exactly those within the bound. `parts` (read on this path
+    * only) sizes the band join; 0 leaves it at the session default.
+    *
+    * Dense dual (the [[Similarity.annLshPairs]] envelope pattern): while
+    * `source`'s stats fit 4 MB, one broadcast self-join with the popcount
+    * filter INSIDE the scan beats the banded chain's exchanges. The bound
+    * is the MEASURED crossover, not a survival limit: at ~3k small
+    * payloads dense reads 0.67 s vs banded 1.8 s, at ~29k banded wins
+    * 2.2 s vs 4.2 s (sf0.1/sf1, round-15) — 4 MB of source stats ≈ the
+    * ~10k-row flip for document-sized rows. For real media the stat
+    * over-counts rows and flips to banded early — the safe direction
+    * (banded is never catastrophic; dense past its envelope is
+    * quadratic). */
+  private[ext] def hammingPairs(hashes: DataFrame, maxHamming: Int, source: DataFrame,
+      parts: => Int = 0): DataFrame = {
+    require(maxHamming >= 0 && maxHamming < 64,
+      s"maxHamming must be in [0, 64): $maxHamming")
+    val hamming = bit_count(col("h_i").bitwiseXOR(col("h_j")))
+    def side(s: DataFrame, id: String) = s.select(col("id").as(id), col("h").as(s"h_$id"))
+    val bytes = Similarity.statBytes(source)
+    if (graft.core.Decisions.choose("Dedup.hammingPairs", "dense", "banded",
+        "sourceBytes" -> bytes)(bytes <= BigInt(4L << 20))) {
+      // stream side spread: the |hashes|² loop must use every core even
+      // when the source is one small file — the exchange moves slim
+      // (id, hash) rows only
+      broadcast(side(hashes, "i"))
+        .join(side(graft.core.Tables.spread(hashes), "j"),
+          col("i") < col("j") && hamming <= maxHamming)
+        .select(col("i"), col("j"), hamming.as("hamming"))
+    } else {
+      val nBands = maxHamming + 1
+      val bands = (0 until nBands).map { s =>
+        val lo = s * 64 / nBands
+        val hi = (s + 1) * 64 / nBands
+        val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1L
+        shiftrightunsigned(col("h"), lo).bitwiseAND(lit(mask))
+      }
+      // both band sides read the hashes: computed once, unless the
+      // caller already persisted them
+      val hashed = if (hashes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+        graft.core.Caches.persist(hashes) else hashes
+      bucketPairs(hashed.select(col("id"), col("h"),
+          posexplode(array(bands: _*)).as(Seq("band", "code"))),
+        Seq("band", "code"), riders = Seq("h"), parts = parts)
+        .select(col("i"), col("j"), hamming.as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+    }
   }
 
   /** Connected components over near-dup pairs — the DECISION step of the
@@ -1398,7 +1449,7 @@ object Dedup {
       Seq("blk"), "left_semi")
     kept.select(col("blk"), col("id").as("i"), col("s").as("s_i"))
       .join(kept.select(col("blk"), col("id").as("j"), col("s").as("s_j"))
-        .hint("shuffle_hash"),  // see lshCandidates: never broadcast a blocked side
+        .hint("shuffle_hash"),  // see bucketPairs: never broadcast a blocked side
         Seq("blk"))
       .filter(col("i") < col("j"))
       .withColumn("edit_dist", levenshtein(col("s_i"), col("s_j")))

@@ -99,24 +99,21 @@ object Multimodal {
     * sniff routes; THIS collapses re-encodes/minor edits): every
     * payload [[graft.functions.PerceptualHashFns.imageDHash]]-hashes
     * (codec-free PGM/BMP; un-decodable payloads drop — they have no
-    * content hash), and pairs within `maxHamming` bits surface via
-    * EXACT-MATCH BANDING: the 64-bit hash splits into maxHamming+1
-    * bit-bands, and by pigeonhole two hashes within maxHamming share
-    * at least one band unchanged — so the band equi-join finds EVERY
-    * qualifying pair (recall 1, no LSH luck involved), and the
-    * verify stage's popcount keeps exactly those within the bound.
+    * content hash), and [[Dedup.hammingPairs]] emits every pair within
+    * `maxHamming` bits, exactly: pigeonhole banding into maxHamming+1
+    * bit-bands plus a popcount verify, or its dense broadcast dual while
+    * the media frame's stats fit 4 MB.
     *
     * Scale shape (the [[Dedup]] candidate discipline): hashes are one
-    * map-only projection; the band join shuffles (band, code) keys —
-    * slim rows, shuffle_hash-pinned (the banded side hides behind a
-    * Generate the estimator cannot size); verify joins hashes back by
-    * id and runs `bit_count(xor)` — integer codegen, no vectors, no
-    * payloads past the first projection. */
+    * map-only projection; the band join shuffles slim (band, code, id,
+    * hash) rows and the verify is `bit_count(xor)` over the hashes the
+    * join carried — integer codegen, no vectors, no payloads past the
+    * first projection. */
   def perceptualDupPairs(media: DataFrame, maxHamming: Int = 3,
       idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
-    hashDupPairs(media,
-      graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)),
-      maxHamming, idCol)
+    Dedup.hammingPairs(media.select(col(idCol).as("id"),
+        graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)).as("h"))
+      .filter(col("h").isNotNull), maxHamming, media)
 
   /** [[perceptualDupPairs]] for the AUDIO hash: pairs of WAV-PCM
     * payloads whose [[graft.functions.PerceptualHashFns.wavEnergyFp]]
@@ -126,71 +123,9 @@ object Multimodal {
     * banding and dense dual. */
   def audioDupPairs(media: DataFrame, maxHamming: Int = 3,
       idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
-    hashDupPairs(media,
-      graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)),
-      maxHamming, idCol)
-
-  /** Shared near-dup-pairs machinery over any 64-bit content hash. */
-  private def hashDupPairs(media: DataFrame, hash: Column,
-      maxHamming: Int, idCol: String): DataFrame = {
-    require(maxHamming >= 0 && maxHamming < 64,
-      s"maxHamming must be in [0, 64): $maxHamming")
-    val nBands = maxHamming + 1
-    val hashes0 = media.select(col(idCol).as("id"), hash.as("ph"))
-      .filter(col("ph").isNotNull)
-    // dense dual (the [[Similarity.annLshPairs]] envelope pattern): while
-    // the SOURCE stats fit the dense bound, one broadcast self-join with
-    // the popcount filter INSIDE the scan beats the banded chain's four
-    // exchanges. The bound is the MEASURED crossover, not a survival
-    // limit: at ~3k small payloads dense reads 0.67 s vs banded 1.8 s,
-    // at ~29k banded wins 2.2 s vs 4.2 s (sf0.1/sf1, round-15) — 4 MB
-    // of source stats ≈ the ~10k-row flip for document-sized payloads.
-    // The stat measures PAYLOAD bytes, so it over-counts rows for real
-    // media and flips to banded early — the safe direction (banded is
-    // never catastrophic; dense past its envelope is quadratic). Past
-    // the bound the banded plan runs: never an all-pairs at corpus
-    // scale.
-    val bytes = Similarity.statBytes(media)
-    if (graft.core.Decisions.choose("Multimodal.hashDupPairs", "dense", "banded",
-        "sourceBytes" -> bytes)(bytes <= BigInt(4L << 20))) {
-      // stream side spread: the |hashes|² loop must use every core even
-      // when the source is one small file — the exchange moves slim
-      // (id, hash) rows only
-      val j = graft.core.Tables.spread(hashes0)
-        .select(col("id").as("j"), col("ph").as("pj"))
-      return broadcast(hashes0.select(col("id").as("i"), col("ph").as("pi")))
-        .join(j, col("i") < col("j") &&
-          bit_count(col("pi").bitwiseXOR(col("pj"))) <= maxHamming)
-        .select(col("i"), col("j"),
-          bit_count(col("pi").bitwiseXOR(col("pj"))).as("hamming"))
-    }
-    val hashed = graft.core.Caches.persist(hashes0)
-    val bandCols = (0 until nBands).map { s =>
-      val lo = s * 64 / nBands
-      val hi = (s + 1) * 64 / nBands
-      val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1L
-      struct(lit(s).as("band"),
-        shiftrightunsigned(col("ph"), lo).bitwiseAND(lit(mask)).as("code"))
-    }
-    val banded = hashed.select(col("id"),
-      explode(array(bandCols: _*)).as("bc"))
-      .select(col("id"), col("bc").getField("band").as("band"),
-        col("bc").getField("code").as("code"))
-    val cand = banded.select(col("band"), col("code"), col("id").as("i"))
-      .join(banded.select(col("band"), col("code"), col("id").as("j"))
-        .hint("shuffle_hash"), Seq("band", "code"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"))
-      .distinct()
-    cand
-      .join(hashed.select(col("id").as("i"), col("ph").as("pi"))
-        .hint("shuffle_hash"), Seq("i"))
-      .join(hashed.select(col("id").as("j"), col("ph").as("pj"))
-        .hint("shuffle_hash"), Seq("j"))
-      .withColumn("hamming", bit_count(col("pi").bitwiseXOR(col("pj"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("i"), col("j"), col("hamming"))
-  }
+    Dedup.hammingPairs(media.select(col(idCol).as("id"),
+        graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)).as("h"))
+      .filter(col("h").isNotNull), maxHamming, media)
 
   /** [[graft.core.KeySets]] kind tag of the image-dHash blocklist. */
   val DHashKind = "image_dhash"

@@ -473,16 +473,10 @@ object Similarity {
         g0.select(col("rep").as("id"), codes.as("codes"),
           col("x"), col("n2")))
 
-      // 2. candidates: reps sharing any (band, code). shuffle_hash pin: the
-      // banded side is |reps|·bands rows behind a Generate the estimator
-      // cannot size — never let it broadcast (see Dedup.lshCandidates).
-      val banded = hub.select(col("id"), posexplode(col("codes")).as(Seq("band", "code")))
-      val cand = banded.select(col("band"), col("code"), col("id").as("i"))
-        .join(banded.select(col("band"), col("code"), col("id").as("j")).hint("shuffle_hash"),
-          Seq("band", "code"))
-        .filter(col("i") < col("j"))
-        .select(col("i"), col("j"))
-        .distinct()
+      // 2. candidates: reps sharing any (band, code)
+      val cand = Dedup.bucketPairs(
+        hub.select(col("id"), posexplode(col("codes")).as(Seq("band", "code"))),
+        Seq("band", "code"))
 
       // 3. exact fixed-point verify (same expression family as the dual).
       // Size-adaptive vector attachment (round-15 probe finding): the
@@ -1110,16 +1104,9 @@ object Similarity {
       .select(col("rep"), col("members"), col("cells"), col("x"), col("n2")))
 
     // candidates: reps sharing ANY probed cell (distinct'd — a pair can
-    // meet in up to nProbe cells); exhaustive within each cell. The
-    // banded side sits behind a Generate — shuffle_hash pin as in
-    // annLshPairs.
-    val banded = hub.select(col("rep"), explode(col("cells")).as("cell"))
-    val cand = banded.select(col("cell"), col("rep").as("i"))
-      .join(banded.select(col("cell"), col("rep").as("j")).hint("shuffle_hash"),
-        Seq("cell"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"))
-      .distinct()
+    // meet in up to nProbe cells); exhaustive within each cell
+    val cand = Dedup.bucketPairs(
+      hub.select(col("rep"), explode(col("cells")).as("cell")), Seq("cell"), idCol = "rep")
 
     // exact fixed-point verify — the same expression family as the dual
     val pairs = verifyPairs(cand

@@ -864,7 +864,9 @@ object Corpus {
 
   // --------------------------------------------------------------------------
   // q39 — SimHash near-dup (60-bit weighted signature over char 16-grams,
-  // hamming ≤ 3). The 4×15-bit band join is lossless by pigeonhole, so the
+  // hamming ≤ 3). Dedup.hammingPairs is exact: its 4×16-bit band join is
+  // lossless by pigeonhole, and its dense dual (taken while the documents
+  // file fits 4 MB, as at sf0.01 and sf0.1) compares all pairs, so the
   // all-pairs oracle is exactly equal.
   def q39_simhash_pairs(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(docs(s, dir), n = 16, maxHamming = 3)
@@ -2133,8 +2135,10 @@ object Corpus {
   // planted exact copies (+10⁶ ids) and one-byte-perturbed copies
   // (+2·10⁶ ids) of the first docs; Multimodal.perceptualDupPairs
   // parses the PGM binary, computes the 64-bit dHash (9×8 integer
-  // decimation grid, left<right bits), bands it 4×16 bits (pigeonhole-
-  // exact for hamming ≤ 3), and verifies popcount. The oracle replays
+  // decimation grid, left<right bits), and Dedup.hammingPairs pairs the
+  // hashes within 3 bits: all pairs against a broadcast while the source
+  // fits 4 MB (sf0.01, sf0.1), else a 4×16-bit band join (pigeonhole-
+  // exact for hamming ≤ 3) and a popcount verify. The oracle replays
   // the pixel bytes via hex(), every grid sample, every comparison
   // bit, the signed-64 wrap, and the all-pairs hamming — one sampled
   // byte disagreeing anywhere moves a hash and breaks the hash-match.

@@ -918,17 +918,37 @@ class ExtOpsSpec extends SparkSpec {
     assert(ham(sigs(1L), sigs(2L)) < ham(sigs(1L), sigs(3L)))
   }
 
-  test("simhash banded join finds all pairs with hamming <= 3 (pigeonhole)") {
+  // 7: sf0.001 holds pairs at hamming 6 and 7 that share none of four
+  // 15-bit bands, so a fixed 4-band join misses them
+  for (maxHamming <- Seq(3, 7)) test(s"simhash banded join finds all pairs with hamming <= $maxHamming (pigeonhole)") {
     val docs = Tables.load(spark, sf001, "documents")
-    val viaBands = Dedup.simhashPairs(docs, 16, 3)
-      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sigs = Dedup.simhashSignature(docs, 16).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[Long]("sig"))
     val allPairs = (for {
       (i, si) <- sigs; (j, sj) <- sigs if i < j
-      if java.lang.Long.bitCount(si ^ sj) <= 3
+      if java.lang.Long.bitCount(si ^ sj) <= maxHamming
     } yield (i, j)).toSet
-    assert(viaBands == allPairs)
+    try for (path <- Seq("banded", "dense")) {
+      val got = Decisions.forcing("Dedup.hammingPairs" -> path)(
+        Dedup.simhashPairs(docs, 16, maxHamming)
+          .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(Decisions.latest.get("Dedup.hammingPairs").contains(path))
+      assert(got == allPairs, s"$path path")
+    } finally graft.core.Caches.unpersistAll()
+  }
+
+  test("hammingPairs: exact at 4 bits spread over four 16-bit bands; refuses maxHamming -1 and 64") {
+    val hashes = Seq(0L -> 0L, 1L -> (1L | 1L << 16 | 1L << 32 | 1L << 48), 2L -> 0xFFL)
+      .toDF("id", "h")
+    for (path <- Seq("banded", "dense"))
+      assert(Decisions.forcing("Dedup.hammingPairs" -> path)(
+        Dedup.hammingPairs(hashes, 4, hashes).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet) == Set((0L, 1L, 4)),
+        s"$path path")
+    val docs = Tables.load(spark, sf001, "documents")
+    for (bad <- Seq(-1, 64))
+      intercept[IllegalArgumentException](Dedup.simhashPairs(docs, 16, bad))
+    graft.core.Caches.unpersistAll()
   }
 
   test("simhash overflow guard fires for docs past 2^20-1 grams (not pruned away)") {
@@ -1582,7 +1602,7 @@ class ExtOpsSpec extends SparkSpec {
       "undecodable payload has no content hash, never pairs")
     // the banded scale path (forced past the dense bound) finds the
     // IDENTICAL pair set — pigeonhole recall is exact, not probabilistic
-    try Decisions.forcing("Multimodal.hashDupPairs" -> "banded")(assert(run() == pairs))
+    try Decisions.forcing("Dedup.hammingPairs" -> "banded")(assert(run() == pairs))
     finally {
       graft.core.Caches.unpersistAll()
     }
