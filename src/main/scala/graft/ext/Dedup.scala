@@ -1161,18 +1161,21 @@ object Dedup {
     * every `maxHamming` in [0, 64): [[hammingPairs]]' pigeonhole banding
     * is lossless, and a 60-bit signature's four top bits are always zero,
     * so 64-bit bands stay exact for it). Identical texts collapse to one
-    * signature first; their pairs come back at hamming 0. */
+    * signature first; their pairs come back at hamming 0.
+    *
+    * Always the band join (`denseMaxBytes = 0`; `Decisions.forcing` can
+    * still pin the dense dual): it never pays for signatures. Measured
+    * on 4 cores over sf0.1's documents plus word-shuffled, id-offset
+    * copies, forced paths, warm medians of 5, dense vs banded: 5k docs
+    * 0.69 vs 0.62 s, 10k 0.49 vs 0.52, 15k 0.68 vs 0.59, 20k 0.86 vs
+    * 0.54, 35k 1.57 vs 0.52; q39 at sf0.01 (500 docs) ties too. */
   def simhashPairs(docs: DataFrame, n: Int, maxHamming: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val full = textGroups(docs, idCol, textCol)
     val groups = slimGroups(full)
-    // persist the signatures: both sides of the pair join read them,
-    // which would otherwise evaluate the whole textGroups + shingle/md5
-    // signature chain twice. 16 bytes per distinct text — negligible
-    // footprint, released via Caches.unpersistAll
-    val sig = graft.core.Caches.persist(simhashSignature(
+    val sig = simhashSignature(
         full.select(col("rep").as("doc_id"), col("gtext").as("text")), n)
-      .select(col("id"), col("sig").as("h")))
+      .select(col("id"), col("sig").as("h"))
     // Size the banded self-join from the corpus (the prefixCandidates/
     // clusterPairs sizing pattern): the join, popcount filter, and
     // distinct run at a band-volume-proportional partition count
@@ -1183,7 +1186,7 @@ object Dedup {
     // formula returns the session default unchanged, so production plans
     // are untouched. The doc count is metadata-cheap (parquet rowcount),
     // memoized, and taken on the banded path only.
-    val repPairs = hammingPairs(sig, maxHamming, docs,
+    val repPairs = hammingPairs(sig, maxHamming, docs, denseMaxBytes = 0L,
       shuffleParts(docs.sparkSession, (maxHamming + 1L) * graft.core.Caches.count(docs), 50_000L))
     // identical texts have identical signatures: within-group hamming is 0
     expandRepPairs(repPairs, groups, "hamming", lit(0).cast(IntegerType))
@@ -1191,7 +1194,9 @@ object Dedup {
 
   /** Every pair `(i, j, hamming)`, `i < j`, of 64-bit hashes `(id, h)`
     * within `maxHamming` bits — the near-dup pairs of SimHash and of the
-    * perceptual media hashes ([[Multimodal.perceptualDupPairs]]).
+    * perceptual media hashes ([[Multimodal.perceptualDupPairs]]). The
+    * hashes are persisted first: both sides of either join read them
+    * (16 bytes a row, released via Caches.unpersistAll).
     *
     * Banded path (Manku et al., WWW'07): the hash splits into
     * `maxHamming + 1` bit-bands, and by pigeonhole two hashes within
@@ -1202,29 +1207,26 @@ object Dedup {
     * only) sizes the band join; 0 leaves it at the session default.
     *
     * Dense dual (the [[Similarity.annLshPairs]] envelope pattern): while
-    * `source`'s stats fit 4 MB, one broadcast self-join with the popcount
-    * filter INSIDE the scan beats the banded chain's exchanges. The bound
-    * is the MEASURED crossover, not a survival limit: at ~3k small
-    * payloads dense reads 0.67 s vs banded 1.8 s, at ~29k banded wins
-    * 2.2 s vs 4.2 s (sf0.1/sf1, round-15) — 4 MB of source stats ≈ the
-    * ~10k-row flip for document-sized rows. For real media the stat
-    * over-counts rows and flips to banded early — the safe direction
-    * (banded is never catastrophic; dense past its envelope is
-    * quadratic). */
+    * `source`'s stats fit `denseMaxBytes`, one broadcast self-join with
+    * the popcount filter INSIDE the scan, no exchange but the spread.
+    * Past the envelope dense is quadratic; banded is never catastrophic.
+    * Each caller sets its bound from its own measurement (0 keeps the
+    * band join). */
   private[ext] def hammingPairs(hashes: DataFrame, maxHamming: Int, source: DataFrame,
-      parts: => Int = 0): DataFrame = {
+      denseMaxBytes: Long, parts: => Int = 0): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 64): $maxHamming")
     val hamming = bit_count(col("h_i").bitwiseXOR(col("h_j")))
+    val hashed = graft.core.Caches.persist(hashes)
     def side(s: DataFrame, id: String) = s.select(col("id").as(id), col("h").as(s"h_$id"))
     val bytes = Similarity.statBytes(source)
     if (graft.core.Decisions.choose("Dedup.hammingPairs", "dense", "banded",
-        "sourceBytes" -> bytes)(bytes <= BigInt(4L << 20))) {
+        "sourceBytes" -> bytes)(bytes <= BigInt(denseMaxBytes))) {
       // stream side spread: the |hashes|² loop must use every core even
       // when the source is one small file — the exchange moves slim
       // (id, hash) rows only
-      broadcast(side(hashes, "i"))
-        .join(side(graft.core.Tables.spread(hashes), "j"),
+      broadcast(side(hashed, "i"))
+        .join(side(graft.core.Tables.spread(hashed), "j"),
           col("i") < col("j") && hamming <= maxHamming)
         .select(col("i"), col("j"), hamming.as("hamming"))
     } else {
@@ -1235,10 +1237,6 @@ object Dedup {
         val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1L
         shiftrightunsigned(col("h"), lo).bitwiseAND(lit(mask))
       }
-      // both band sides read the hashes: computed once, unless the
-      // caller already persisted them
-      val hashed = if (hashes.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        graft.core.Caches.persist(hashes) else hashes
       bucketPairs(hashed.select(col("id"), col("h"),
           posexplode(array(bands: _*)).as(Seq("band", "code"))),
         Seq("band", "code"), riders = Seq("h"), parts = parts)

@@ -102,7 +102,7 @@ object Multimodal {
     * content hash), and [[Dedup.hammingPairs]] emits every pair within
     * `maxHamming` bits, exactly: pigeonhole banding into maxHamming+1
     * bit-bands plus a popcount verify, or its dense broadcast dual while
-    * the media frame's stats fit 4 MB.
+    * the media frame's stats fit 4 MB (`PairsDenseMaxBytes`).
     *
     * Scale shape (the [[Dedup]] candidate discipline): hashes are one
     * map-only projection; the band join shuffles slim (band, code, id,
@@ -113,7 +113,19 @@ object Multimodal {
       idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
     Dedup.hammingPairs(media.select(col(idCol).as("id"),
         graft.functions.PerceptualHashFns.imageDHash(col(payloadCol)).as("h"))
-      .filter(col("h").isNotNull), maxHamming, media)
+      .filter(col("h").isNotNull), maxHamming, media, PairsDenseMaxBytes)
+
+  /** [[Dedup.hammingPairs]]' dense-dual bound for media hashes: 4 MB of
+    * the media frame's stats. Measured on 4 cores with q155's PGM frames
+    * over sf0.1's documents plus word-shuffled, id-offset copies, forced
+    * paths, warm medians of two rounds, dense vs banded: ~5k payloads
+    * 0.43/0.31 s vs 0.58/0.46, ~10k a tie (0.43/0.43 vs 0.51/0.36), ~20k
+    * 0.83/0.69 vs 0.49/0.35, ~30k 1.17/1.22 vs 0.43/0.36. q155's frame
+    * stats about 490 B a payload (2.46 MB at sf0.1's ~5k), so the bound
+    * flips near ~8.5k payloads, between the dense win and the tie. Real
+    * media payloads stat larger per row, so they flip earlier — the safe
+    * direction. */
+  private val PairsDenseMaxBytes = 4L << 20
 
   /** [[perceptualDupPairs]] for the AUDIO hash: pairs of WAV-PCM
     * payloads whose [[graft.functions.PerceptualHashFns.wavEnergyFp]]
@@ -125,7 +137,7 @@ object Multimodal {
       idCol: String = "media_id", payloadCol: String = "payload"): DataFrame =
     Dedup.hammingPairs(media.select(col(idCol).as("id"),
         graft.functions.PerceptualHashFns.wavEnergyFp(col(payloadCol)).as("h"))
-      .filter(col("h").isNotNull), maxHamming, media)
+      .filter(col("h").isNotNull), maxHamming, media, PairsDenseMaxBytes)
 
   /** [[graft.core.KeySets]] kind tag of the image-dHash blocklist. */
   val DHashKind = "image_dhash"

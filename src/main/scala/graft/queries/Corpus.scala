@@ -865,9 +865,8 @@ object Corpus {
   // --------------------------------------------------------------------------
   // q39 — SimHash near-dup (60-bit weighted signature over char 16-grams,
   // hamming ≤ 3). Dedup.hammingPairs is exact: its 4×16-bit band join is
-  // lossless by pigeonhole, and its dense dual (taken while the documents
-  // file fits 4 MB, as at sf0.01 and sf0.1) compares all pairs, so the
-  // all-pairs oracle is exactly equal.
+  // lossless by pigeonhole (SimHash always takes it), so the all-pairs
+  // oracle is exactly equal.
   def q39_simhash_pairs(s: SparkSession, dir: String): DataFrame =
     Dedup.simhashPairs(docs(s, dir), n = 16, maxHamming = 3)
       .orderBy(col("i"), col("j"))

@@ -928,12 +928,18 @@ class ExtOpsSpec extends SparkSpec {
       (i, si) <- sigs; (j, sj) <- sigs if i < j
       if java.lang.Long.bitCount(si ^ sj) <= maxHamming
     } yield (i, j)).toSet
-    try for (path <- Seq("banded", "dense")) {
-      val got = Decisions.forcing("Dedup.hammingPairs" -> path)(
-        Dedup.simhashPairs(docs, 16, maxHamming)
-          .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
-      assert(Decisions.latest.get("Dedup.hammingPairs").contains(path))
-      assert(got == allPairs, s"$path path")
+    try {
+      for (path <- Seq("banded", "dense")) {
+        val got = Decisions.forcing("Dedup.hammingPairs" -> path)(
+          Dedup.simhashPairs(docs, 16, maxHamming)
+            .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+        assert(Decisions.latest.get("Dedup.hammingPairs").contains(path))
+        assert(got == allPairs, s"$path path")
+      }
+      // unpinned, SimHash keeps the band join (the dense dual never pays
+      // for signatures, however small the corpus)
+      Dedup.simhashPairs(docs, 16, maxHamming).count()
+      assert(Decisions.latest.get("Dedup.hammingPairs").contains("banded"))
     } finally graft.core.Caches.unpersistAll()
   }
 
@@ -942,7 +948,7 @@ class ExtOpsSpec extends SparkSpec {
       .toDF("id", "h")
     for (path <- Seq("banded", "dense"))
       assert(Decisions.forcing("Dedup.hammingPairs" -> path)(
-        Dedup.hammingPairs(hashes, 4, hashes).collect()
+        Dedup.hammingPairs(hashes, 4, hashes, 0L).collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet) == Set((0L, 1L, 4)),
         s"$path path")
     val docs = Tables.load(spark, sf001, "documents")
